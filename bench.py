@@ -144,6 +144,9 @@ def main() -> None:
                 "unit": "sec",
                 "queries": timings,
                 "sf": float(sf) if sf else None,
+                "sf_dir": sf_dir,
+                "master": spark.sparkContext.master,
+                "cpus": spark.sparkContext.defaultParallelism,
             }
         )
     )

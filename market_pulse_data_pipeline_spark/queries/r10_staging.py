@@ -1,9 +1,6 @@
-"""Round-11 registrations — staged and triple-gated in round 9
-(implementations, DuckDB value-hash oracles, and pytest semantic pins
-in tests/test_r10_staging.py; check_oracle --staging matched at
-sf0.001/0.01/0.1 and hostile_check --chaos --staging passed),
-registered here in round 11 per VERDICT round-10 item 1. The names
-head the round-11 correctness window (never-witnessed beats stale).
+"""The r10 query batch. Each query is registered with a DuckDB
+value-hash oracle, checked by tests/test_queries_oracle.py;
+tests/test_r10_staging.py keeps the semantic pins.
 
 All three are compositions of driver-green machinery into the
 pipeline ACTIONS the registry still lacked (VERDICT r8 item 6's

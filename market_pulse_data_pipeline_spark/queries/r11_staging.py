@@ -1,11 +1,6 @@
-"""Round-11 registrations, second batch — staged and triple-gated in
-round 9 (implementations, DuckDB value-hash oracles, pytest pins in
-tests/test_r11_staging.py; check_oracle --staging matched at
-sf0.001/0.01/0.1 and hostile_check --chaos --staging passed),
-registered in round 11 per VERDICT round-10 item 2's double flip
-(draining the staged backlog at 6/round instead of 3 — new
-registrations ride the deferral list and can never displace a
-verified window slot, so the only cost is six first-witness slots).
+"""The r11 query batch. Each query is registered with a DuckDB
+value-hash oracle, checked by tests/test_queries_oracle.py;
+tests/test_r11_staging.py keeps the semantic pins.
 
 The three close the next tier of LLM-pipeline gaps:
 

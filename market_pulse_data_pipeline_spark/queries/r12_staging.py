@@ -1,11 +1,6 @@
-"""Round-12 registrations, first batch — staged and triple-gated in
-rounds 9-10 (implementations, DuckDB value-hash oracles, pytest pins
-in tests/test_r12_staging.py; check_oracle --staging matched at
-sf0.001/0.01/0.1 and hostile_check --chaos --staging passed),
-registered in round 12 per VERDICT round-11 item 1's accelerated
-drain (items 1+7: four batches flip this round so the staged backlog
-lands at 21 — new registrations ride the deferral list and can never
-displace a verified window slot).
+"""The r12 query batch. Each query is registered with a DuckDB
+value-hash oracle, checked by tests/test_queries_oracle.py;
+tests/test_r12_staging.py keeps the semantic pins.
 
 - ``corpus_yield_funnel`` — the end-to-end YIELD REPORT a training-
   data pipeline team actually ships: per source domain, how many

@@ -1,10 +1,6 @@
-"""Round-12 registrations, second batch — staged and triple-gated in
-round 10 (implementations, DuckDB value-hash oracles, pytest pins in
-tests/test_r13_staging.py; check_oracle --staging matched at
-sf0.001/0.01/0.1 and hostile_check --chaos --staging passed),
-registered in round 12 per VERDICT round-11 item 1 (the r13 half of
-the ordered double flip, including ``lsh_recall_curve`` — the
-ANN-quality witness the registry previously lacked).
+"""The r13 query batch. Each query is registered with a DuckDB
+value-hash oracle, checked by tests/test_queries_oracle.py;
+tests/test_r13_staging.py keeps the semantic pins.
 
 - ``eval_decontaminate_semantic`` — the third leg of the
   decontamination family: EXACT 13-grams (eval_decontaminate_exact_

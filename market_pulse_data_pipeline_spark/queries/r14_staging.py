@@ -1,9 +1,6 @@
-"""Round-12 registrations, third batch — staged and triple-gated in
-round 11 (implementations, DuckDB value-hash oracles, pytest pins in
-tests/test_r14_staging.py; check_oracle --staging matched at
-sf0.001/0.01/0.1 and hostile_check --chaos --staging passed),
-registered in round 12 under VERDICT round-11 item 7's accelerated
-drain (backlog ≤ 21 by end of round 12, full drain by round 16).
+"""The r14 query batch. Each query is registered with a DuckDB
+value-hash oracle, checked by tests/test_queries_oracle.py;
+tests/test_r14_staging.py keeps the semantic pins.
 
 The three close the next tier of LLM-pipeline gaps:
 

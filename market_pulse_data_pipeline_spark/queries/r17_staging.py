@@ -1,10 +1,6 @@
-"""Round-13 registrations, second batch — staged and triple-gated in
-round 11 (implementations, DuckDB value-hash oracles, pytest pins in
-tests/test_r17_staging.py; check_oracle --staging matched at
-sf0.001/0.01/0.1 and hostile_check --chaos --staging passed, re-gated
-on round-13 code before the flip), registered in round 13 under
-VERDICT round-12 item 2's accelerated drain (backlog 9 by end of
-round 13, full drain by round 14).
+"""The r17 query batch. Each query is registered with a DuckDB
+value-hash oracle, checked by tests/test_queries_oracle.py;
+tests/test_r17_staging.py keeps the semantic pins.
 
 The three close distinct holes:
 

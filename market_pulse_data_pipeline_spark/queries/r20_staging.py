@@ -1,11 +1,6 @@
-"""Round-14 registrations, first batch — staged and triple-gated in
-round 11 (implementations, DuckDB value-hash oracles, pytest pins in
-tests/test_r20_staging.py; check_oracle --staging matched at
-sf0.001/0.01/0.1 and hostile_check --chaos --staging passed, re-gated
-on round-13 code before the flip), registered in round 14 under
-VERDICT round-13 item 1's full drain (the entire remaining backlog
-r20+r21+r22 flips this round — backlog 0, two rounds ahead of the
-original drain-by-round-16 schedule).
+"""The r20 query batch. Each query is registered with a DuckDB
+value-hash oracle, checked by tests/test_queries_oracle.py;
+tests/test_r20_staging.py keeps the semantic pins.
 
 The three close distinct holes:
 

@@ -1,11 +1,6 @@
-"""Round-14 registrations, third batch — staged and triple-gated in
-round 11 as the second RESERVE batch (implementations, DuckDB
-value-hash oracles, pytest pins in tests/test_r22_staging.py;
-check_oracle --staging matched at sf0.001/0.01/0.1 and
-hostile_check --chaos --staging passed, re-gated on round-13 code
-before the flip), registered in round 14 under VERDICT round-13
-item 1's full drain (r20+r21+r22 flip together — backlog 0, two
-rounds ahead of the original drain-by-round-16 schedule).
+"""The r22 query batch. Each query is registered with a DuckDB
+value-hash oracle, checked by tests/test_queries_oracle.py;
+tests/test_r22_staging.py keeps the semantic pins.
 
 The three open capability families no registered query touches:
 

@@ -1,10 +1,6 @@
-"""Round-15 registrations — staged and triple-gated in round 13
-(implementations, DuckDB value-hash oracles, pytest pins in
-tests/test_r23_staging.py; check_oracle --staging matched at
-sf0.001/0.01/0.1 and hostile_check --chaos --staging passed, re-gated
-on round-14 code end-of-round and again by the round-14 judge),
-registered in round 15 on this batch's named flip round per the
-round-13 handoff rule (registry 298 → 301; VERDICT round-14 item 2).
+"""The r23 query batch. Each query is registered with a DuckDB
+value-hash oracle, checked by tests/test_queries_oracle.py;
+tests/test_r23_staging.py keeps the semantic pins.
 
 The three close real gaps:
 

@@ -1,12 +1,9 @@
-"""Round-24-batch staged queries — implemented, oracle-paired, NOT
-registered.
+"""Round-24-batch queries: PII propagation through near-dup clusters,
+intra-document line dedup, and margin-based pair mining.
 
-Staged in round 13 (second new-capability batch of the round, after
-r23_staging). The published drain schedule (round 14 flips
-r20+r21+r22, backlog 0) and the r23 flip (round 15) are untouched —
-this batch's named flip round is **round 16**.
-``staging_candidates()`` (queries/__init__.py) merges this module into
-the check_oracle --staging / hostile_check --staging sweeps.
+Each one is registered with a DuckDB value-hash oracle, checked by
+tests/test_queries_oracle.py; tests/test_r24_staging.py keeps the
+semantic replays.
 
 The three close distinct holes:
 
@@ -49,33 +46,16 @@ The three close distinct holes:
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from market_pulse_data_pipeline_spark.queries.common import (
-    QueryDef,
+    register,
     round_div,
     sql_round_div,
     t,
 )
 from market_pulse_data_pipeline_spark.queries.text import _PII_EMAIL, _PII_ID
-
-STAGED: dict[str, QueryDef] = {}
-
-
-def stage(name: str, oracle: str | None, bench: bool = False, doc: str = ""):
-    """register()'s twin that fills STAGED instead of QUERY_REGISTRY —
-    the round-16 registration budget stays untouched while the
-    implementations, oracles, and tests land."""
-
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        STAGED[name] = QueryDef(name, fn, oracle, bench, doc)
-        return fn
-
-    return deco
-
 
 # --------------------------------------------------------------------
 # pii_cluster_contagion
@@ -180,7 +160,7 @@ def pii_cluster_contagion_from(base: DataFrame) -> DataFrame:
     )
 
 
-@stage(
+@register(
     "pii_cluster_contagion",
     _pcc_oracle(),
     doc="PII propagation through near-dup clusters — the conservative "
@@ -309,7 +289,7 @@ def intra_doc_line_dedup_from(docs: DataFrame) -> DataFrame:
     )
 
 
-@stage(
+@register(
     "intra_doc_line_dedup",
     _ild_oracle(),
     doc="WITHIN-document repeated-line removal — the intra-doc "
@@ -471,7 +451,7 @@ def margin_mine(e: DataFrame, q: DataFrame) -> DataFrame:
     ).orderBy("qid")
 
 
-@stage(
+@register(
     "cross_label_margin_mining",
     _mm_oracle(),
     doc="margin-based nearest-neighbor mining (Artetxe & Schwenk "

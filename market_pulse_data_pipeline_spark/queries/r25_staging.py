@@ -1,13 +1,9 @@
-"""Round-25-batch staged queries — implemented, oracle-paired, NOT
-registered.
+"""Round-25-batch queries: harmonic size-class packing, FlashText
+multi-replace, and the adaptive prefix-sum switch.
 
-Staged in round 14 (the round that executed VERDICT r13's full drain,
-flipping r20–r22 and emptying the round-11 backlog). Per the
-round-13 handoff rule every new capability batch gets its own named
-flip round: r23 flips round 15, r24 flips round 16, and **this batch
-flips round 17**. ``staging_candidates()`` (queries/__init__.py)
-merges this module into the check_oracle --staging /
-hostile_check --staging sweeps.
+Each one is registered with a DuckDB value-hash oracle, checked by
+tests/test_queries_oracle.py; tests/test_r25_staging.py keeps the
+semantic replays.
 
 The three close real gaps (VERDICT r13 item 7's named candidates):
 
@@ -57,36 +53,17 @@ The three close real gaps (VERDICT r13 item 7's named candidates):
   fixture makes the switch non-vacuous at every gated SF: the
   rollup leg (150 type-day rows) is always serial, while the raw
   leg crosses the threshold between sf0.001 (1000 rows, serial) and
-  sf0.01/0.1 (10k/100k rows, two-phase) — the triple gate exercises
-  BOTH branches on the same leg.
+  sf0.01/0.1 (10k/100k rows, two-phase) — the sf0.001 test oracle and
+  the sf0.01 driver oracle together exercise BOTH branches on the
+  same leg.
 """
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from market_pulse_data_pipeline_spark.queries.common import (
-    QueryDef,
-    t,
-)
-
-STAGED: dict[str, QueryDef] = {}
-
-
-def stage(name: str, oracle: str | None, bench: bool = False, doc: str = ""):
-    """register()'s twin that fills STAGED instead of QUERY_REGISTRY —
-    the round-17 registration budget stays untouched while the
-    implementations, oracles, and tests land."""
-
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        STAGED[name] = QueryDef(name, fn, oracle, bench, doc)
-        return fn
-
-    return deco
-
+from market_pulse_data_pipeline_spark.queries.common import register, t
 
 # --------------------------------------------------------------------
 # harmonic_size_class_packing
@@ -134,7 +111,7 @@ def _hp_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "harmonic_size_class_packing",
     _hp_oracle(),
     doc="document packing by the harmonic size-class algorithm (Lee & "
@@ -307,7 +284,7 @@ def _ft_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "flashtext_multi_replace",
     _ft_oracle(),
     doc="multi-phrase dictionary REPLACE — the FlashText workload "
@@ -447,7 +424,7 @@ def _ps_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "prefix_sum_adaptive_switch",
     _ps_oracle(),
     doc="the registered witness of functions/prefix.py's "
@@ -465,11 +442,11 @@ def _ps_oracle() -> str:
     "sanctioned model-sized case — cheaper than two-phase's "
     "localCheckpoint + totals job + offset join), while the raw leg "
     "crosses the threshold between sf0.001 (serial) and sf0.01/0.1 "
-    "(two-phase) — the staging triple gate exercises BOTH branches "
-    "of the switch on the same leg. 100 TB shape: the raw leg is the "
-    "two-phase path (range partition + local cumsums + O(partitions) "
-    "offsets); the size probe is one count() — at warehouse scale "
-    "table statistics replace it.",
+    "(two-phase) — the sf0.001 and sf0.01 oracle checks together "
+    "exercise BOTH branches of the switch on the same leg. 100 TB "
+    "shape: the raw leg is the two-phase path (range partition + "
+    "local cumsums + O(partitions) offsets); the size probe is one "
+    "count() — at warehouse scale table statistics replace it.",
 )
 def prefix_sum_adaptive_switch(
     spark: SparkSession, sf_dir: str

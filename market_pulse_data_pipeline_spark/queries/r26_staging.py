@@ -1,14 +1,11 @@
-"""Round-26-batch staged queries — implemented, oracle-paired, NOT
-registered.
+"""Round-26-batch queries: PMI collocation mining, Cohen's kappa,
+and bootstrap confidence intervals.
 
-Staged in round 14 alongside r25_staging (the second new-capability
-batch of the round). Per the round-13 handoff rule every new
-capability batch gets its own named flip round: r23 flips round 15,
-r24 round 16, r25 round 17, and **this batch flips round 18**.
-``staging_candidates()`` (queries/__init__.py) merges this module
-into the check_oracle --staging / hostile_check --staging sweeps.
+Each one is registered with a DuckDB value-hash oracle, checked by
+tests/test_queries_oracle.py; tests/test_r26_staging.py keeps the
+semantic replays.
 
-The three open capability families no registered query touches:
+The three open capability families no other registered query touches:
 
 - ``pmi_collocation_mining`` — phrase DISCOVERY (the word2phrase
   score of Mikolov et al. 2013, "Distributed Representations of
@@ -51,8 +48,6 @@ The three open capability families no registered query touches:
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -60,26 +55,11 @@ from market_pulse_data_pipeline_spark.functions.dedup import (
     portable_hash60,
 )
 from market_pulse_data_pipeline_spark.queries.common import (
-    QueryDef,
+    register,
     round_div,
     sql_round_div,
     t,
 )
-
-STAGED: dict[str, QueryDef] = {}
-
-
-def stage(name: str, oracle: str | None, bench: bool = False, doc: str = ""):
-    """register()'s twin that fills STAGED instead of QUERY_REGISTRY —
-    the round-18 registration budget stays untouched while the
-    implementations, oracles, and tests land."""
-
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        STAGED[name] = QueryDef(name, fn, oracle, bench, doc)
-        return fn
-
-    return deco
-
 
 # --------------------------------------------------------------------
 # pmi_collocation_mining
@@ -145,7 +125,7 @@ def _pmi_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "pmi_collocation_mining",
     _pmi_oracle(),
     doc="collocation / phrase discovery by the word2phrase score "
@@ -289,7 +269,7 @@ def _kp_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "cohens_kappa_agreement",
     _kp_oracle(),
     doc="inter-annotator agreement per language (Cohen 1960): the "
@@ -429,7 +409,7 @@ def _bs_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "bootstrap_metric_ci",
     _bs_oracle(),
     doc="bootstrap confidence interval for a corpus metric (Efron "

@@ -1,14 +1,11 @@
-"""Round-27-batch staged queries — implemented, oracle-paired, NOT
-registered.
+"""Round-27-batch queries: group k-fold leakage audit, PII span
+redaction, and the Zipf token-frequency profile.
 
-Staged in round 14 (third new-capability batch of the round). Per the
-round-13 handoff rule every new capability batch gets its own named
-flip round: r23 flips round 15, r24 round 16, r25 round 17, r26 round
-18, and **this batch flips round 19**. ``staging_candidates()``
-(queries/__init__.py) merges this module into the check_oracle
---staging / hostile_check --staging sweeps.
+Each one is registered with a DuckDB value-hash oracle, checked by
+tests/test_queries_oracle.py; tests/test_r27_staging.py keeps the
+semantic replays.
 
-The three open capability families no registered query touches:
+The three open capability families no other registered query touches:
 
 - ``group_kfold_leakage_audit`` — train/validation SPLIT HYGIENE:
   random per-document fold assignment leaks — a near-duplicate pair
@@ -49,8 +46,6 @@ The three open capability families no registered query touches:
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -58,26 +53,11 @@ from market_pulse_data_pipeline_spark.functions.dedup import (
     portable_hash60,
 )
 from market_pulse_data_pipeline_spark.queries.common import (
-    QueryDef,
+    register,
     round_div,
     sql_round_div,
     t,
 )
-
-STAGED: dict[str, QueryDef] = {}
-
-
-def stage(name: str, oracle: str | None, bench: bool = False, doc: str = ""):
-    """register()'s twin that fills STAGED instead of QUERY_REGISTRY —
-    the round-19 registration budget stays untouched while the
-    implementations, oracles, and tests land."""
-
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        STAGED[name] = QueryDef(name, fn, oracle, bench, doc)
-        return fn
-
-    return deco
-
 
 # --------------------------------------------------------------------
 # group_kfold_leakage_audit
@@ -144,7 +124,7 @@ def _kf_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "group_kfold_leakage_audit",
     _kf_oracle(),
     doc="train/validation split hygiene — the GroupKFold audit: "
@@ -345,7 +325,7 @@ def _rd_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "pii_redact_spans",
     _rd_oracle(),
     doc="PII REDACTION - the mutation twin of text_pii_scan and the "
@@ -479,7 +459,7 @@ def _zp_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "zipf_token_frequency_profile",
     _zp_oracle(),
     doc="corpus-shape diagnostics: the token frequency SPECTRUM per "

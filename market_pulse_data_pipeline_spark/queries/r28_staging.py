@@ -1,15 +1,11 @@
-"""Round-28-batch staged queries — implemented, oracle-paired, NOT
-registered.
+"""Round-28-batch queries: the Heaps vocabulary growth curve,
+ROUGE-1/2 overlap, and span-match F1.
 
-Staged in round 14 (fourth new-capability batch of the round). Per
-the round-13 handoff rule every new capability batch gets its own
-named flip round: r23 flips round 15 … r27 round 19, and **this batch
-flips round 20** — with it EVERY remaining driver round is a pure
-@stage → @register flip. ``staging_candidates()``
-(queries/__init__.py) merges this module into the check_oracle
---staging / hostile_check --staging sweeps.
+Each one is registered with a DuckDB value-hash oracle, checked by
+tests/test_queries_oracle.py; tests/test_r28_staging.py keeps the
+semantic replays.
 
-The three open capability families no registered query touches:
+The three open capability families no other registered query touches:
 
 - ``heaps_vocab_growth_curve`` — the second corpus LAW next to the
   Zipf spectrum (Heaps/Herdan: vocabulary grows ~ K·n^β): cumulative
@@ -45,8 +41,6 @@ The three open capability families no registered query touches:
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -54,26 +48,11 @@ from market_pulse_data_pipeline_spark.functions.dedup import (
     portable_hash60,
 )
 from market_pulse_data_pipeline_spark.queries.common import (
-    QueryDef,
+    register,
     round_div,
     sql_round_div,
     t,
 )
-
-STAGED: dict[str, QueryDef] = {}
-
-
-def stage(name: str, oracle: str | None, bench: bool = False, doc: str = ""):
-    """register()'s twin that fills STAGED instead of QUERY_REGISTRY —
-    the round-20 registration budget stays untouched while the
-    implementations, oracles, and tests land."""
-
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        STAGED[name] = QueryDef(name, fn, oracle, bench, doc)
-        return fn
-
-    return deco
-
 
 # --------------------------------------------------------------------
 # heaps_vocab_growth_curve
@@ -134,7 +113,7 @@ def _hv_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "heaps_vocab_growth_curve",
     _hv_oracle(),
     doc="Heaps'/Herdan's-law vocabulary growth: cumulative vocabulary "
@@ -304,7 +283,7 @@ def _rg_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "rouge_n_eval_overlap",
     _rg_oracle(),
     doc="ROUGE-1/ROUGE-2 with CLIPPED bag matching (Lin 2004) - the "
@@ -483,7 +462,7 @@ def _sp_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "span_match_f1",
     _sp_oracle(),
     doc="span-level annotation evaluation - the NER/extraction scorer "

@@ -1,14 +1,8 @@
-"""Round-29-batch staged queries — implemented, oracle-paired, NOT
-registered.
-
-Staged in round 15 under VERDICT round-14 item 4 ("register a
-streaming-state recovery witness — the one real capability hole the
-builder itself names"): checkpoint recovery of STATEFUL streaming
-state, not just the file-source offset replay that
-``streaming_ingest_upsert`` already witnesses. Named flip round per
-the round-13 handoff rule: **round 16**, alongside r24_staging.
-``staging_candidates()`` (queries/__init__.py) merges this module into
-the check_oracle --staging / hostile_check --staging sweeps.
+"""Streaming-state recovery witnesses (VERDICT round-14 item 4):
+checkpoint recovery of STATEFUL streaming state, not just the
+file-source offset replay that ``streaming_ingest_upsert`` already
+witnesses. Both are registered with a DuckDB value-hash oracle,
+checked by tests/test_queries_oracle.py.
 
 The two queries witness the two distinct recovery paths Structured
 Streaming guarantees (both modeled on streaming_evidence.py's
@@ -55,27 +49,10 @@ import glob
 import os
 import shutil
 import tempfile
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from market_pulse_data_pipeline_spark.queries.common import QueryDef, t
-
-STAGED: dict[str, QueryDef] = {}
-
-
-def stage(name: str, oracle: str | None, bench: bool = False, doc: str = ""):
-    """register()'s twin that fills STAGED instead of QUERY_REGISTRY —
-    the round-16 registration budget stays untouched while the
-    implementations, oracles, and tests land."""
-
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        STAGED[name] = QueryDef(name, fn, oracle, bench, doc)
-        return fn
-
-    return deco
-
+from market_pulse_data_pipeline_spark.queries.common import register, t
 
 # Per-process scratch root — same pattern as streaming_evidence.py:
 # concurrent harness processes get distinct paths, content is fully
@@ -118,7 +95,7 @@ def _ranged_source_files(
     return src, out
 
 
-@stage(
+@register(
     "streaming_dedup_state_recovery",
     f"""
     SELECT DISTINCT user_id, event_type
@@ -203,7 +180,7 @@ def streaming_dedup_state_recovery_from(
     return spark.read.parquet(sink).localCheckpoint(eager=True)
 
 
-@stage(
+@register(
     "streaming_stateful_crash_recovery",
     f"""
     SELECT user_id,

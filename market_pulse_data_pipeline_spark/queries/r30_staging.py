@@ -1,14 +1,10 @@
-"""Round-30-batch staged query — implemented, oracle-paired, NOT
-registered.
-
-Staged in the round-15 surplus session, closing VERDICT round-14
-"What's missing" item 5 (LCS/ROUGE-L — "conscious deferral; would be
-the registry's first rows-only query"). The deferral reason is now
-GONE: the LCS dynamic program is expressible as a DuckDB RECURSIVE CTE
-over DP rows, so ``rouge_l_eval_overlap`` ships with a FULL value-hash
-oracle — the registry's zero-rows-only invariant survives the
-registry's first sequence-alignment query. Named flip round: **17**,
-alongside r25_staging (registry 309 → 310 after both flips).
+"""Round-30-batch query: ROUGE-L, closing VERDICT round-14 "What's
+missing" item 5 (LCS/ROUGE-L — "conscious deferral; would be the
+registry's first rows-only query"). The LCS dynamic program is
+expressible as a DuckDB RECURSIVE CTE over DP rows, so
+``rouge_l_eval_overlap`` is registered with a FULL value-hash oracle
+(checked by tests/test_queries_oracle.py) and the registry keeps its
+zero-rows-only invariant.
 
 - ``rouge_l_eval_overlap`` — generation/summarization evaluation, the
   sequence-sensitive complement to the clipped bag-overlap ROUGE-1/2
@@ -46,8 +42,6 @@ part of the training-data evaluation surface the build adds.
 
 from __future__ import annotations
 
-from typing import Callable
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -56,26 +50,11 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from market_pulse_data_pipeline_spark.queries.common import (
-    QueryDef,
+    register,
     round_div,
     sql_round_div,
     t,
 )
-
-STAGED: dict[str, QueryDef] = {}
-
-
-def stage(name: str, oracle: str | None, bench: bool = False, doc: str = ""):
-    """register()'s twin that fills STAGED instead of QUERY_REGISTRY —
-    the registration budget stays untouched while the implementation,
-    oracle, and tests land."""
-
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        STAGED[name] = QueryDef(name, fn, oracle, bench, doc)
-        return fn
-
-    return deco
-
 
 # --------------------------------------------------------------------
 # rouge_l_eval_overlap
@@ -174,7 +153,7 @@ def _lcs_len(ref: pd.Series, cand: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-@stage(
+@register(
     "rouge_l_eval_overlap",
     _rl_oracle(),
     doc="ROUGE-L (LCS) generation-evaluation overlap — the sequence-"

@@ -1,10 +1,6 @@
-"""Round-10 registrations — staged and triple-gated in round 9
-(implementations, DuckDB value-hash oracles, and pytest semantic pins
-in tests/test_r9_staging.py; check_oracle --staging matched at
-sf0.001/0.01/0.1 and hostile_check --chaos --staging passed),
-registered here in round 10 per VERDICT round-9 item 1. The names head
-the round-10 correctness window (never-witnessed beats stale), and the
-two corpus-scale shapes carry ``bench=True`` per VERDICT item 3.
+"""The r9 query batch. Each query is registered with a DuckDB
+value-hash oracle, checked by tests/test_queries_oracle.py;
+tests/test_r9_staging.py keeps the semantic pins.
 
 All three close gaps VERDICT round-8 item 6 named on the LLM-pipeline
 surface:

@@ -26,28 +26,18 @@ R10_NAMES = [
     "domain_dedup_quality_gate",
 ]
 
-STAGED = {n: QUERY_REGISTRY[n] for n in R10_NAMES if n in QUERY_REGISTRY}
+QUERIES = {n: QUERY_REGISTRY[n] for n in R10_NAMES}
 
 
 def test_r10_registration_composition():
-    from market_pulse_data_pipeline_spark.queries import (
-        _DRIVER_GREEN,
-        staging_candidates,
-    )
-
-    # registered in round 11 (the first half of the double flip), first
-    # driver witness green in CORRECTNESS_r11 (the ledger records it)
     assert set(R10_NAMES) <= set(QUERY_REGISTRY)
-    assert all(_DRIVER_GREEN.get(n) == 11 for n in R10_NAMES)
-    # the flip dropped the batch out of the staging tools' view
-    assert not set(R10_NAMES) & staging_candidates().keys()
     # no rows-only drift: every registration ships a value-hash oracle
-    assert all(d.oracle is not None for d in STAGED.values())
+    assert all(QUERY_REGISTRY[n].oracle is not None for n in R10_NAMES)
 
 
 @pytest.mark.parametrize("name", R10_NAMES)
 def test_r10_plan_antipatterns(spark, sf_dir, name):
-    df = STAGED[name].spark(spark, sf_dir)
+    df = QUERIES[name].spark(spark, sf_dir)
     plan = df._jdf.queryExecution().sparkPlan().toString()
     assert "CartesianProduct" not in plan, f"{name}: cartesian product"
     assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python"
@@ -62,7 +52,7 @@ def test_r10_plan_antipatterns(spark, sf_dir, name):
 def trim_rows(spark, sf_dir):
     return {
         r.doc_id: r
-        for r in STAGED["exact_substring_trim"].spark(spark, sf_dir).collect()
+        for r in QUERIES["exact_substring_trim"].spark(spark, sf_dir).collect()
     }
 
 
@@ -120,7 +110,7 @@ def test_trim_counts_are_conserved(trim_rows):
 @pytest.fixture(scope="module")
 def sample_rows(spark, sf_dir):
     return (
-        STAGED["perplexity_stratified_sample"].spark(spark, sf_dir).collect()
+        QUERIES["perplexity_stratified_sample"].spark(spark, sf_dir).collect()
     )
 
 
@@ -164,7 +154,7 @@ def test_sample_is_nested_and_stratified(sample_rows):
 def domain_rows(spark, sf_dir):
     return {
         r.source: r
-        for r in STAGED["domain_dedup_quality_gate"]
+        for r in QUERIES["domain_dedup_quality_gate"]
         .spark(spark, sf_dir)
         .collect()
     }

@@ -24,28 +24,18 @@ R11_NAMES = [
     "curriculum_pack_easy_first",
 ]
 
-STAGED = {n: QUERY_REGISTRY[n] for n in R11_NAMES if n in QUERY_REGISTRY}
+QUERIES = {n: QUERY_REGISTRY[n] for n in R11_NAMES}
 
 
 def test_r11_registration_composition():
-    from market_pulse_data_pipeline_spark.queries import (
-        _DRIVER_GREEN,
-        staging_candidates,
-    )
-
-    # registered in round 11 (the second half of the double flip), first
-    # driver witness green in CORRECTNESS_r11 (the ledger records it)
     assert set(R11_NAMES) <= set(QUERY_REGISTRY)
-    assert all(_DRIVER_GREEN.get(n) == 11 for n in R11_NAMES)
-    # the flip dropped the batch out of the staging tools' view
-    assert not set(R11_NAMES) & staging_candidates().keys()
     # no rows-only drift: every registration ships a value-hash oracle
-    assert all(d.oracle is not None for d in STAGED.values())
+    assert all(QUERY_REGISTRY[n].oracle is not None for n in R11_NAMES)
 
 
 @pytest.mark.parametrize("name", R11_NAMES)
 def test_r11_plan_antipatterns(spark, sf_dir, name):
-    df = STAGED[name].spark(spark, sf_dir)
+    df = QUERIES[name].spark(spark, sf_dir)
     plan = df._jdf.queryExecution().sparkPlan().toString()
     assert "CartesianProduct" not in plan, f"{name}: cartesian product"
     assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python"
@@ -59,7 +49,7 @@ def test_r11_plan_antipatterns(spark, sf_dir, name):
 @pytest.fixture(scope="module")
 def ph_rows(spark, sf_dir):
     return (
-        STAGED["paragraph_simhash_near_dups"].spark(spark, sf_dir).collect()
+        QUERIES["paragraph_simhash_near_dups"].spark(spark, sf_dir).collect()
     )
 
 
@@ -116,7 +106,7 @@ def test_ph_all_pairs_within_threshold_and_ordered(ph_rows):
 @pytest.fixture(scope="module")
 def dm_rows(spark, sf_dir):
     return (
-        STAGED["doremi_excess_loss_reweight"].spark(spark, sf_dir).collect()
+        QUERIES["doremi_excess_loss_reweight"].spark(spark, sf_dir).collect()
     )
 
 
@@ -163,7 +153,7 @@ def test_doremi_upweights_high_excess_domains(dm_rows):
 
 def test_curriculum_replay_and_easy_first_order(spark, sf_dir):
     rows = (
-        STAGED["curriculum_pack_easy_first"].spark(spark, sf_dir).collect()
+        QUERIES["curriculum_pack_easy_first"].spark(spark, sf_dir).collect()
     )
     assert len(rows) == 500
     by_lang = {}

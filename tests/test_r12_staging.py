@@ -28,27 +28,18 @@ R12_NAMES = [
     "hot_ngram_blocklist_coverage",
 ]
 
-STAGED = {n: QUERY_REGISTRY[n] for n in R12_NAMES if n in QUERY_REGISTRY}
+QUERIES = {n: QUERY_REGISTRY[n] for n in R12_NAMES}
 
 
 def test_r12_registration_composition():
-    from market_pulse_data_pipeline_spark.queries import (
-        _DRIVER_GREEN,
-        staging_candidates,
-    )
-
-    # registered in round 12 (the first batch of the accelerated drain),
-    # first driver witness green in CORRECTNESS_r12 (the ledger records it)
     assert set(R12_NAMES) <= set(QUERY_REGISTRY)
-    assert all(_DRIVER_GREEN.get(x) == 12 for x in R12_NAMES)
-    # the flip dropped the batch out of the staging tools' view
-    assert not set(STAGED) & staging_candidates().keys()
-    assert all(d.oracle is not None for d in STAGED.values())
+    # no rows-only drift: every registration ships a value-hash oracle
+    assert all(QUERY_REGISTRY[n].oracle is not None for n in R12_NAMES)
 
 
 @pytest.mark.parametrize("name", R12_NAMES)
 def test_r12_plan_antipatterns(spark, sf_dir, name):
-    df = STAGED[name].spark(spark, sf_dir)
+    df = QUERIES[name].spark(spark, sf_dir)
     plan = df._jdf.queryExecution().sparkPlan().toString()
     assert "CartesianProduct" not in plan, f"{name}: cartesian product"
     assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python"
@@ -58,7 +49,7 @@ def test_r12_plan_antipatterns(spark, sf_dir, name):
 def funnel_rows(spark, sf_dir):
     return {
         r.source: r
-        for r in STAGED["corpus_yield_funnel"].spark(spark, sf_dir).collect()
+        for r in QUERIES["corpus_yield_funnel"].spark(spark, sf_dir).collect()
     }
 
 
@@ -105,7 +96,7 @@ def test_funnel_stages_actually_drop_something(funnel_rows):
 @pytest.fixture(scope="module")
 def c4_rows(spark, sf_dir):
     return {
-        r.doc_id: r for r in STAGED["c4_line_filters"].spark(spark, sf_dir).collect()
+        r.doc_id: r for r in QUERIES["c4_line_filters"].spark(spark, sf_dir).collect()
     }
 
 
@@ -194,7 +185,7 @@ def test_hot_ngram_matches_pure_python_replay(spark, sf_dir):
 
     import duckdb
 
-    rows = STAGED["hot_ngram_blocklist_coverage"].spark(spark, sf_dir).collect()
+    rows = QUERIES["hot_ngram_blocklist_coverage"].spark(spark, sf_dir).collect()
     docs = duckdb.sql(
         f"SELECT doc_id, text FROM "
         f"read_parquet('{sf_dir}/documents.parquet') ORDER BY doc_id"
@@ -229,7 +220,7 @@ def test_hot_ngram_blocklist_has_organic_bite(spark, sf_dir):
     # the fixture vocabulary is small and shared, so the corpus DOES
     # have hot trigrams: the flag must fire somewhere and not
     # everywhere, and coverage must stay a valid fraction
-    rows = STAGED["hot_ngram_blocklist_coverage"].spark(spark, sf_dir).collect()
+    rows = QUERIES["hot_ngram_blocklist_coverage"].spark(spark, sf_dir).collect()
     flagged = [r for r in rows if r.flagged]
     assert 0 < len(flagged) < len(rows)
     for r in rows:

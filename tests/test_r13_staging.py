@@ -28,27 +28,18 @@ R13_NAMES = [
     "lsh_recall_curve",
 ]
 
-STAGED = {n: QUERY_REGISTRY[n] for n in R13_NAMES if n in QUERY_REGISTRY}
+QUERIES = {n: QUERY_REGISTRY[n] for n in R13_NAMES}
 
 
 def test_r13_registration_composition():
-    from market_pulse_data_pipeline_spark.queries import (
-        _DRIVER_GREEN,
-        staging_candidates,
-    )
-
-    # registered in round 12 (the second batch of the accelerated drain),
-    # first driver witness green in CORRECTNESS_r12 (the ledger records it)
     assert set(R13_NAMES) <= set(QUERY_REGISTRY)
-    assert all(_DRIVER_GREEN.get(x) == 12 for x in R13_NAMES)
-    # the flip dropped the batch out of the staging tools' view
-    assert not set(STAGED) & staging_candidates().keys()
-    assert all(d.oracle is not None for d in STAGED.values())
+    # no rows-only drift: every registration ships a value-hash oracle
+    assert all(QUERY_REGISTRY[n].oracle is not None for n in R13_NAMES)
 
 
 @pytest.mark.parametrize("name", R13_NAMES)
 def test_r13_plan_antipatterns(spark, sf_dir, name):
-    df = STAGED[name].spark(spark, sf_dir)
+    df = QUERIES[name].spark(spark, sf_dir)
     plan = df._jdf.queryExecution().sparkPlan().toString()
     assert "CartesianProduct" not in plan, f"{name}: cartesian product"
     assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python"
@@ -62,7 +53,7 @@ def test_r13_plan_antipatterns(spark, sf_dir, name):
 @pytest.fixture(scope="module")
 def esem_rows(spark, sf_dir):
     return (
-        STAGED["eval_decontaminate_semantic"].spark(spark, sf_dir).collect()
+        QUERIES["eval_decontaminate_semantic"].spark(spark, sf_dir).collect()
     )
 
 
@@ -265,7 +256,7 @@ def _hrw_score(doc_id: int, shard: int) -> int:
 @pytest.fixture(scope="module")
 def rv_rows(spark, sf_dir):
     return (
-        STAGED["rendezvous_shard_assignment"].spark(spark, sf_dir).collect()
+        QUERIES["rendezvous_shard_assignment"].spark(spark, sf_dir).collect()
     )
 
 
@@ -320,7 +311,7 @@ def test_rendezvous_balance_is_reasonable(rv_rows):
 def rc_rows(spark, sf_dir):
     return {
         r.j_bucket: r
-        for r in STAGED["lsh_recall_curve"].spark(spark, sf_dir).collect()
+        for r in QUERIES["lsh_recall_curve"].spark(spark, sf_dir).collect()
     }
 
 

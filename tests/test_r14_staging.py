@@ -31,27 +31,18 @@ R14_NAMES = [
     "quality_calibration_ece",
 ]
 
-STAGED = {n: QUERY_REGISTRY[n] for n in R14_NAMES if n in QUERY_REGISTRY}
+QUERIES = {n: QUERY_REGISTRY[n] for n in R14_NAMES}
 
 
 def test_r14_registration_composition():
-    from market_pulse_data_pipeline_spark.queries import (
-        _DRIVER_GREEN,
-        staging_candidates,
-    )
-
-    # registered in round 12 (the third batch of the accelerated drain),
-    # first driver witness green in CORRECTNESS_r12 (the ledger records it)
     assert set(R14_NAMES) <= set(QUERY_REGISTRY)
-    assert all(_DRIVER_GREEN.get(x) == 12 for x in R14_NAMES)
-    # the flip dropped the batch out of the staging tools' view
-    assert not set(STAGED) & staging_candidates().keys()
-    assert all(d.oracle is not None for d in STAGED.values())
+    # no rows-only drift: every registration ships a value-hash oracle
+    assert all(QUERY_REGISTRY[n].oracle is not None for n in R14_NAMES)
 
 
 @pytest.mark.parametrize("name", R14_NAMES)
 def test_r14_plan_antipatterns(spark, sf_dir, name):
-    df = STAGED[name].spark(spark, sf_dir)
+    df = QUERIES[name].spark(spark, sf_dir)
     plan = df._jdf.queryExecution().sparkPlan().toString()
     assert "CartesianProduct" not in plan, f"{name}: cartesian product"
     assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python"
@@ -115,7 +106,7 @@ def _dsir_replay(sf_dir: str):
 def dsir_rows(spark, sf_dir):
     return {
         r.doc_id: r
-        for r in STAGED["dsir_importance_resample"].spark(spark, sf_dir).collect()
+        for r in QUERIES["dsir_importance_resample"].spark(spark, sf_dir).collect()
     }
 
 
@@ -155,7 +146,7 @@ def test_dsir_tilts_toward_the_target(dsir_rows):
 
 @pytest.fixture(scope="module")
 def ce_rows(spark, sf_dir):
-    return STAGED["containment_excerpt_dups"].spark(spark, sf_dir).collect()
+    return QUERIES["containment_excerpt_dups"].spark(spark, sf_dir).collect()
 
 
 def test_containment_flags_planted_excerpts(ce_rows):
@@ -299,7 +290,7 @@ def test_containment_pair_gen_matches_self_join(spark, sf_dir):
 
 @pytest.fixture(scope="module")
 def ece_rows(spark, sf_dir):
-    return STAGED["quality_calibration_ece"].spark(spark, sf_dir).collect()
+    return QUERIES["quality_calibration_ece"].spark(spark, sf_dir).collect()
 
 
 def test_ece_bins_cover_the_corpus(ece_rows, sf_dir):

@@ -36,7 +36,7 @@ R15_NAMES = [
     "domain_suffix_optout_filter",
 ]
 
-STAGED = {n: QUERY_REGISTRY[n] for n in R15_NAMES if n in QUERY_REGISTRY}
+QUERIES = {n: QUERY_REGISTRY[n] for n in R15_NAMES}
 
 
 def _round_div(n: int, d: int) -> float:
@@ -60,23 +60,14 @@ def _doc_ids(sf_dir: str) -> list[int]:
 
 
 def test_r15_registration_composition():
-    from market_pulse_data_pipeline_spark.queries import (
-        _DRIVER_GREEN,
-        staging_candidates,
-    )
-
-    # registered in round 12 (the fourth batch of the accelerated drain),
-    # first driver witness green in CORRECTNESS_r12 (the ledger records it)
     assert set(R15_NAMES) <= set(QUERY_REGISTRY)
-    assert all(_DRIVER_GREEN.get(x) == 12 for x in R15_NAMES)
-    # the flip dropped the batch out of the staging tools' view
-    assert not set(STAGED) & staging_candidates().keys()
-    assert all(d.oracle is not None for d in STAGED.values())
+    # no rows-only drift: every registration ships a value-hash oracle
+    assert all(QUERY_REGISTRY[n].oracle is not None for n in R15_NAMES)
 
 
 @pytest.mark.parametrize("name", R15_NAMES)
 def test_r15_plan_antipatterns(spark, sf_dir, name):
-    df = STAGED[name].spark(spark, sf_dir)
+    df = QUERIES[name].spark(spark, sf_dir)
     plan = df._jdf.queryExecution().sparkPlan().toString()
     assert "CartesianProduct" not in plan, f"{name}: cartesian product"
     assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python"
@@ -120,7 +111,7 @@ def _softdedup_replay(sf_dir: str) -> dict[int, tuple[int, int]]:
 @pytest.fixture(scope="module")
 def sw_rows(spark, sf_dir):
     return (
-        STAGED["softdedup_commonness_reweight"]
+        QUERIES["softdedup_commonness_reweight"]
         .spark(spark, sf_dir)
         .collect()
     )
@@ -191,7 +182,7 @@ def _url_for(doc_id: int) -> str:
 
 @pytest.fixture(scope="module")
 def uc_rows(spark, sf_dir):
-    return STAGED["url_canonicalize_dedup"].spark(spark, sf_dir).collect()
+    return QUERIES["url_canonicalize_dedup"].spark(spark, sf_dir).collect()
 
 
 def test_url_replay_exact(uc_rows, sf_dir):
@@ -263,7 +254,7 @@ def _optout_replay(sf_dir: str) -> dict[int, tuple[int, str]]:
 @pytest.fixture(scope="module")
 def oo_rows(spark, sf_dir):
     return (
-        STAGED["domain_suffix_optout_filter"].spark(spark, sf_dir).collect()
+        QUERIES["domain_suffix_optout_filter"].spark(spark, sf_dir).collect()
     )
 
 

@@ -47,7 +47,7 @@ R16_NAMES = [
     "delta_join_view_maintenance",
 ]
 
-STAGED = {n: QUERY_REGISTRY[n] for n in R16_NAMES if n in QUERY_REGISTRY}
+QUERIES = {n: QUERY_REGISTRY[n] for n in R16_NAMES}
 
 
 def _docs(sf_dir: str) -> list[tuple[int, str]]:
@@ -58,23 +58,14 @@ def _docs(sf_dir: str) -> list[tuple[int, str]]:
 
 
 def test_r16_registration_composition():
-    from market_pulse_data_pipeline_spark.queries import (
-        _DRIVER_GREEN,
-        staging_candidates,
-    )
-
-    # registered in round 13 (the second accelerated drain), first
-    # driver witness green in CORRECTNESS_r13 (the ledger records it)
     assert set(R16_NAMES) <= set(QUERY_REGISTRY)
-    assert all(_DRIVER_GREEN.get(x) == 13 for x in R16_NAMES)
-    # the flip dropped the batch out of the staging tools' view
-    assert not set(STAGED) & staging_candidates().keys()
-    assert all(d.oracle is not None for d in STAGED.values())
+    # no rows-only drift: every registration ships a value-hash oracle
+    assert all(QUERY_REGISTRY[n].oracle is not None for n in R16_NAMES)
 
 
 @pytest.mark.parametrize("name", R16_NAMES)
 def test_r16_plan_antipatterns(spark, sf_dir, name):
-    df = STAGED[name].spark(spark, sf_dir)
+    df = QUERIES[name].spark(spark, sf_dir)
     plan = df._jdf.queryExecution().sparkPlan().toString()
     assert "CartesianProduct" not in plan, f"{name}: cartesian product"
     assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python"
@@ -131,7 +122,7 @@ def _bloom_replay(sf_dir: str) -> dict[int, tuple[int, int, int]]:
 @pytest.fixture(scope="module")
 def bl_rows(spark, sf_dir):
     return (
-        STAGED["bloom_decontaminate_portable"].spark(spark, sf_dir).collect()
+        QUERIES["bloom_decontaminate_portable"].spark(spark, sf_dir).collect()
     )
 
 
@@ -212,7 +203,7 @@ def _extract(html: str) -> str:
 
 @pytest.fixture(scope="module")
 def ht_rows(spark, sf_dir):
-    return STAGED["html_tag_strip_extract"].spark(spark, sf_dir).collect()
+    return QUERIES["html_tag_strip_extract"].spark(spark, sf_dir).collect()
 
 
 def test_html_replay_exact(ht_rows, sf_dir):
@@ -300,7 +291,7 @@ def test_delta_view_totals(spark, sf_dir):
     """The incrementally-maintained view's grand totals equal the
     monolithic recompute's (per-group equality is the oracle gate)."""
     rows = (
-        STAGED["delta_join_view_maintenance"].spark(spark, sf_dir).collect()
+        QUERIES["delta_join_view_maintenance"].spark(spark, sf_dir).collect()
     )
     con = duckdb.connect()
     for t in ("orders", "customer", "nation"):

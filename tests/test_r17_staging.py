@@ -33,27 +33,18 @@ R17_NAMES = [
     "l_diversity_check",
 ]
 
-STAGED = {n: QUERY_REGISTRY[n] for n in R17_NAMES if n in QUERY_REGISTRY}
+QUERIES = {n: QUERY_REGISTRY[n] for n in R17_NAMES}
 
 
 def test_r17_registration_composition():
-    from market_pulse_data_pipeline_spark.queries import (
-        _DRIVER_GREEN,
-        staging_candidates,
-    )
-
-    # registered in round 13 (the second accelerated drain), first
-    # driver witness green in CORRECTNESS_r13 (the ledger records it)
     assert set(R17_NAMES) <= set(QUERY_REGISTRY)
-    assert all(_DRIVER_GREEN.get(x) == 13 for x in R17_NAMES)
-    # the flip dropped the batch out of the staging tools' view
-    assert not set(STAGED) & staging_candidates().keys()
-    assert all(d.oracle is not None for d in STAGED.values())
+    # no rows-only drift: every registration ships a value-hash oracle
+    assert all(QUERY_REGISTRY[n].oracle is not None for n in R17_NAMES)
 
 
 @pytest.mark.parametrize("name", R17_NAMES)
 def test_r17_plan_antipatterns(spark, sf_dir, name):
-    df = STAGED[name].spark(spark, sf_dir)
+    df = QUERIES[name].spark(spark, sf_dir)
     plan = df._jdf.queryExecution().sparkPlan().toString()
     assert "CartesianProduct" not in plan, f"{name}: cartesian product"
     # semdedup's Lloyd assignment is the repo's sanctioned Arrow-batched
@@ -68,7 +59,7 @@ def test_r17_plan_antipatterns(spark, sf_dir, name):
 
 @pytest.fixture(scope="module")
 def ss_rows(spark, sf_dir):
-    return STAGED["semdedup_scaled_prune"].spark(spark, sf_dir).collect()
+    return QUERIES["semdedup_scaled_prune"].spark(spark, sf_dir).collect()
 
 
 def _expected_k(sf_dir: str) -> tuple[int, int]:
@@ -157,7 +148,7 @@ def _tv_replay(sf_dir: str) -> dict[str, tuple[int, int, int, Fraction]]:
 
 @pytest.fixture(scope="module")
 def tv_rows(spark, sf_dir):
-    return STAGED["tv_distance_source_drift"].spark(spark, sf_dir).collect()
+    return QUERIES["tv_distance_source_drift"].spark(spark, sf_dir).collect()
 
 
 def test_tv_replay_exact(tv_rows, sf_dir):
@@ -214,7 +205,7 @@ def _ldiv_replay(sf_dir: str) -> dict[tuple, tuple[int, int]]:
 
 
 def test_ldiv_replay_exact(spark, sf_dir):
-    rows = STAGED["l_diversity_check"].spark(spark, sf_dir).collect()
+    rows = QUERIES["l_diversity_check"].spark(spark, sf_dir).collect()
     expect = _ldiv_replay(sf_dir)
     got = {
         (r.c_nationkey, r.c_mktsegment, r.bal_bucket): (
@@ -233,7 +224,7 @@ def test_ldiv_homogeneity_attack_witness(spark, sf_dir):
     k-anonymity size check (n >= 5) yet expose their members through
     sensitive-value homogeneity MUST appear in the fixture — otherwise
     this query witnesses nothing k_anonymity_check doesn't."""
-    rows = STAGED["l_diversity_check"].spark(spark, sf_dir).collect()
+    rows = QUERIES["l_diversity_check"].spark(spark, sf_dir).collect()
     violating = [r for r in rows if r.violates_l]
     assert violating, "fixture has no l-diversity violations"
     assert any(r.n_orders >= 5 for r in violating), (

@@ -30,27 +30,18 @@ R18_NAMES = [
     "dynamic_partition_pruning_join",
 ]
 
-STAGED = {n: QUERY_REGISTRY[n] for n in R18_NAMES if n in QUERY_REGISTRY}
+QUERIES = {n: QUERY_REGISTRY[n] for n in R18_NAMES}
 
 
 def test_r18_registration_composition():
-    from market_pulse_data_pipeline_spark.queries import (
-        _DRIVER_GREEN,
-        staging_candidates,
-    )
-
-    # registered in round 13 (the second accelerated drain), first
-    # driver witness green in CORRECTNESS_r13 (the ledger records it)
     assert set(R18_NAMES) <= set(QUERY_REGISTRY)
-    assert all(_DRIVER_GREEN.get(x) == 13 for x in R18_NAMES)
-    # the flip dropped the batch out of the staging tools' view
-    assert not set(STAGED) & staging_candidates().keys()
-    assert all(d.oracle is not None for d in STAGED.values())
+    # no rows-only drift: every registration ships a value-hash oracle
+    assert all(QUERY_REGISTRY[n].oracle is not None for n in R18_NAMES)
 
 
 @pytest.mark.parametrize("name", R18_NAMES)
 def test_r18_plan_antipatterns(spark, sf_dir, name):
-    df = STAGED[name].spark(spark, sf_dir)
+    df = QUERIES[name].spark(spark, sf_dir)
     plan = df._jdf.queryExecution().sparkPlan().toString()
     assert "CartesianProduct" not in plan, f"{name}: cartesian product"
     assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python"
@@ -69,7 +60,7 @@ def _fold(s: str) -> str:
 
 @pytest.fixture(scope="module")
 def un_rows(spark, sf_dir):
-    return STAGED["unicode_fold_normalize"].spark(spark, sf_dir).collect()
+    return QUERIES["unicode_fold_normalize"].spark(spark, sf_dir).collect()
 
 
 def test_unicode_replay_exact(un_rows, sf_dir):
@@ -112,7 +103,7 @@ def test_unicode_rule_families_and_control(un_rows):
 
 @pytest.fixture(scope="module")
 def dv_rows(spark, sf_dir):
-    return STAGED["deletion_vector_scan"].spark(spark, sf_dir).collect()
+    return QUERIES["deletion_vector_scan"].spark(spark, sf_dir).collect()
 
 
 def test_dv_replay_exact(dv_rows, sf_dir):
@@ -157,7 +148,7 @@ def test_dv_read_is_an_anti_join(spark, sf_dir):
     """The read path must BE the DV shape — a broadcast anti-join on
     the row address — not a rewritten filter (that would witness
     copy-on-write, not merge-on-read)."""
-    df = STAGED["deletion_vector_scan"].spark(spark, sf_dir)
+    df = QUERIES["deletion_vector_scan"].spark(spark, sf_dir)
     plan = df._jdf.queryExecution().sparkPlan().toString()
     assert "LeftAnti" in plan
     assert "BroadcastHashJoin" in plan
@@ -172,14 +163,14 @@ def test_dpp_expression_in_executed_plan(spark, sf_dir):
     """The witnessed FEATURE: the fact scan carries a dynamicpruning
     subquery (runtime partition pruning off the dimension filter) —
     only the urgent partitions' directories are listed."""
-    df = STAGED["dynamic_partition_pruning_join"].spark(spark, sf_dir)
+    df = QUERIES["dynamic_partition_pruning_join"].spark(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "dynamicpruning" in plan
 
 
 def test_dpp_values_match_direct_filter(spark, sf_dir):
     rows = (
-        STAGED["dynamic_partition_pruning_join"]
+        QUERIES["dynamic_partition_pruning_join"]
         .spark(spark, sf_dir)
         .collect()
     )

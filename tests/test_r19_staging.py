@@ -28,7 +28,7 @@ R19_NAMES = [
     "user_erasure_cascade",
 ]
 
-STAGED = {n: QUERY_REGISTRY[n] for n in R19_NAMES if n in QUERY_REGISTRY}
+QUERIES = {n: QUERY_REGISTRY[n] for n in R19_NAMES}
 
 
 def _docs(sf_dir: str) -> list[tuple[int, str]]:
@@ -39,23 +39,14 @@ def _docs(sf_dir: str) -> list[tuple[int, str]]:
 
 
 def test_r19_registration_composition():
-    from market_pulse_data_pipeline_spark.queries import (
-        _DRIVER_GREEN,
-        staging_candidates,
-    )
-
-    # registered in round 13 (the second accelerated drain), first
-    # driver witness green in CORRECTNESS_r13 (the ledger records it)
     assert set(R19_NAMES) <= set(QUERY_REGISTRY)
-    assert all(_DRIVER_GREEN.get(x) == 13 for x in R19_NAMES)
-    # the flip dropped the batch out of the staging tools' view
-    assert not set(STAGED) & staging_candidates().keys()
-    assert all(d.oracle is not None for d in STAGED.values())
+    # no rows-only drift: every registration ships a value-hash oracle
+    assert all(QUERY_REGISTRY[n].oracle is not None for n in R19_NAMES)
 
 
 @pytest.mark.parametrize("name", R19_NAMES)
 def test_r19_plan_antipatterns(spark, sf_dir, name):
-    df = STAGED[name].spark(spark, sf_dir)
+    df = QUERIES[name].spark(spark, sf_dir)
     plan = df._jdf.queryExecution().sparkPlan().toString()
     assert "CartesianProduct" not in plan, f"{name}: cartesian product"
     assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python"
@@ -85,7 +76,7 @@ def _langmix_replay(doc_id: int, text: str):
 
 @pytest.fixture(scope="module")
 def lm_rows(spark, sf_dir):
-    return STAGED["sentence_lang_mix_profile"].spark(spark, sf_dir).collect()
+    return QUERIES["sentence_lang_mix_profile"].spark(spark, sf_dir).collect()
 
 
 def test_langmix_replay_exact(lm_rows, sf_dir):
@@ -119,7 +110,7 @@ def test_langmix_plants_force_minority(lm_rows):
 
 @pytest.fixture(scope="module")
 def sp_rows(spark, sf_dir):
-    return STAGED["token_spans_offsets"].spark(spark, sf_dir).collect()
+    return QUERIES["token_spans_offsets"].spark(spark, sf_dir).collect()
 
 
 def test_spans_tile_the_text_exactly(sp_rows, sf_dir):
@@ -152,7 +143,7 @@ def test_spans_tile_the_text_exactly(sp_rows, sf_dir):
 def test_erasure_accounting(spark, sf_dir):
     rows = {
         r.table_name: r
-        for r in STAGED["user_erasure_cascade"].spark(spark, sf_dir).collect()
+        for r in QUERIES["user_erasure_cascade"].spark(spark, sf_dir).collect()
     }
     assert set(rows) == {"events", "user_event_type_agg", "user_profile"}
     ev = duckdb.sql(

@@ -26,27 +26,18 @@ R20_NAMES = [
     "incremental_sessionization",
 ]
 
-STAGED = {n: QUERY_REGISTRY[n] for n in R20_NAMES if n in QUERY_REGISTRY}
+QUERIES = {n: QUERY_REGISTRY[n] for n in R20_NAMES}
 
 
 def test_r20_registration_composition():
-    from market_pulse_data_pipeline_spark.queries import (
-        _DRIVER_GREEN,
-        staging_candidates,
-    )
-
-    # registered in round 14 (the full drain), first driver witness
-    # green in CORRECTNESS_r14 (the ledger records it)
     assert set(R20_NAMES) <= set(QUERY_REGISTRY)
-    assert all(_DRIVER_GREEN.get(x) == 14 for x in R20_NAMES)
-    # the flip dropped the batch out of the staging tools' view
-    assert not set(STAGED) & staging_candidates().keys()
-    assert all(d.oracle is not None for d in STAGED.values())
+    # no rows-only drift: every registration ships a value-hash oracle
+    assert all(QUERY_REGISTRY[n].oracle is not None for n in R20_NAMES)
 
 
 @pytest.mark.parametrize("name", R20_NAMES)
 def test_r20_plan_antipatterns(spark, sf_dir, name):
-    df = STAGED[name].spark(spark, sf_dir)
+    df = QUERIES[name].spark(spark, sf_dir)
     plan = df._jdf.queryExecution().sparkPlan().toString()
     assert "CartesianProduct" not in plan, f"{name}: cartesian product"
     assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python"
@@ -60,7 +51,7 @@ def test_r20_plan_antipatterns(spark, sf_dir, name):
 def test_trigram_replay_exact(spark, sf_dir):
     rows = {
         r.pattern: r
-        for r in STAGED["trigram_substring_index"]
+        for r in QUERIES["trigram_substring_index"]
         .spark(spark, sf_dir)
         .collect()
     }
@@ -92,7 +83,7 @@ def test_trigram_crossword_patterns_answered(spark, sf_dir):
     substrings no token index can answer — must return real matches."""
     rows = {
         r.pattern: r
-        for r in STAGED["trigram_substring_index"]
+        for r in QUERIES["trigram_substring_index"]
         .spark(spark, sf_dir)
         .collect()
     }
@@ -107,7 +98,7 @@ def test_trigram_crossword_patterns_answered(spark, sf_dir):
 
 def test_histogram_replay_and_monotonicity(spark, sf_dir):
     rows = (
-        STAGED["equi_depth_histogram_stats"].spark(spark, sf_dir).collect()
+        QUERIES["equi_depth_histogram_stats"].spark(spark, sf_dir).collect()
     )
     ev = duckdb.sql(
         f"SELECT event_type, event_id, value FROM "
@@ -183,7 +174,7 @@ def _full_sessions(sf_dir: str):
 def test_incremental_matches_monolithic_replay(spark, sf_dir):
     got = sorted(
         (r.user_id, r.session_start_us, r.session_end_us, r.n_events)
-        for r in STAGED["incremental_sessionization"]
+        for r in QUERIES["incremental_sessionization"]
         .spark(spark, sf_dir)
         .collect()
     )
@@ -210,7 +201,7 @@ def test_stitch_actually_exercised(spark, sf_dir):
     # truncated at the boundary)
     got = {
         (r.user_id, r.session_start_us, r.session_end_us)
-        for r in STAGED["incremental_sessionization"]
+        for r in QUERIES["incremental_sessionization"]
         .spark(spark, sf_dir)
         .collect()
     }

@@ -26,7 +26,7 @@ R21_NAMES = [
     "categorical_dictionary_encode",
 ]
 
-STAGED = {n: QUERY_REGISTRY[n] for n in R21_NAMES if n in QUERY_REGISTRY}
+QUERIES = {n: QUERY_REGISTRY[n] for n in R21_NAMES}
 
 
 def _round_div(n: int, d: int) -> float:
@@ -38,23 +38,14 @@ def _round_div(n: int, d: int) -> float:
 
 
 def test_r21_registration_composition():
-    from market_pulse_data_pipeline_spark.queries import (
-        _DRIVER_GREEN,
-        staging_candidates,
-    )
-
-    # registered in round 14 (the full drain), first driver witness
-    # green in CORRECTNESS_r14 (the ledger records it)
     assert set(R21_NAMES) <= set(QUERY_REGISTRY)
-    assert all(_DRIVER_GREEN.get(x) == 14 for x in R21_NAMES)
-    # the flip dropped the batch out of the staging tools' view
-    assert not set(STAGED) & staging_candidates().keys()
-    assert all(d.oracle is not None for d in STAGED.values())
+    # no rows-only drift: every registration ships a value-hash oracle
+    assert all(QUERY_REGISTRY[n].oracle is not None for n in R21_NAMES)
 
 
 @pytest.mark.parametrize("name", R21_NAMES)
 def test_r21_plan_antipatterns(spark, sf_dir, name):
-    df = STAGED[name].spark(spark, sf_dir)
+    df = QUERIES[name].spark(spark, sf_dir)
     plan = df._jdf.queryExecution().sparkPlan().toString()
     assert "CartesianProduct" not in plan, f"{name}: cartesian product"
     assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python"
@@ -68,7 +59,7 @@ def test_r21_plan_antipatterns(spark, sf_dir, name):
 def test_decay_replay_exact(spark, sf_dir):
     rows = {
         r.event_type: r
-        for r in STAGED["decayed_event_frequency"]
+        for r in QUERIES["decayed_event_frequency"]
         .spark(spark, sf_dir)
         .collect()
     }
@@ -116,7 +107,7 @@ def _expected_class(residue: int, path: str) -> str:
 
 def test_json_infer_replay_exact(spark, sf_dir):
     rows = (
-        STAGED["json_schema_infer"].spark(spark, sf_dir).collect()
+        QUERIES["json_schema_infer"].spark(spark, sf_dir).collect()
     )
     ids = [
         r[0]
@@ -149,7 +140,7 @@ def test_json_infer_replay_exact(spark, sf_dir):
 
 def test_dictionary_replay_and_bijectivity(spark, sf_dir):
     rows = (
-        STAGED["categorical_dictionary_encode"]
+        QUERIES["categorical_dictionary_encode"]
         .spark(spark, sf_dir)
         .collect()
     )

@@ -31,7 +31,7 @@ R22_NAMES = [
     "gazetteer_phrase_match",
 ]
 
-STAGED = {n: QUERY_REGISTRY[n] for n in R22_NAMES if n in QUERY_REGISTRY}
+QUERIES = {n: QUERY_REGISTRY[n] for n in R22_NAMES}
 
 
 def _round_div(n, d) -> float:
@@ -43,23 +43,14 @@ def _round_div(n, d) -> float:
 
 
 def test_r22_registration_composition():
-    from market_pulse_data_pipeline_spark.queries import (
-        _DRIVER_GREEN,
-        staging_candidates,
-    )
-
-    # registered in round 14 (the full drain), first driver witness
-    # green in CORRECTNESS_r14 (the ledger records it)
     assert set(R22_NAMES) <= set(QUERY_REGISTRY)
-    assert all(_DRIVER_GREEN.get(x) == 14 for x in R22_NAMES)
-    # the flip dropped the batch out of the staging tools' view
-    assert not set(STAGED) & staging_candidates().keys()
-    assert all(d.oracle is not None for d in STAGED.values())
+    # no rows-only drift: every registration ships a value-hash oracle
+    assert all(QUERY_REGISTRY[n].oracle is not None for n in R22_NAMES)
 
 
 @pytest.mark.parametrize("name", R22_NAMES)
 def test_r22_plan_antipatterns(spark, sf_dir, name):
-    df = STAGED[name].spark(spark, sf_dir)
+    df = QUERIES[name].spark(spark, sf_dir)
     plan = df._jdf.queryExecution().sparkPlan().toString()
     # the whole point of the grid join is that the radius predicate
     # NEVER plans as a cross product
@@ -78,7 +69,7 @@ def test_grid_join_exactly_matches_brute_force(spark, sf_dir):
     true cell means NO duplicates. Brute force is the ground truth."""
     got = [
         (r.id_a, r.id_b, r.dist_sq)
-        for r in STAGED["grid_radius_join"].spark(spark, sf_dir).collect()
+        for r in QUERIES["grid_radius_join"].spark(spark, sf_dir).collect()
     ]
     ids = [
         r[0]
@@ -111,7 +102,7 @@ def test_grid_join_exactly_matches_brute_force(spark, sf_dir):
 def test_backtest_replay_exact(spark, sf_dir):
     rows = {
         r.event_type: r
-        for r in STAGED["seasonal_naive_backtest"]
+        for r in QUERIES["seasonal_naive_backtest"]
         .spark(spark, sf_dir)
         .collect()
     }
@@ -187,7 +178,7 @@ def _gz_replay(sf_dir: str):
 def test_gazetteer_replay_exact(spark, sf_dir):
     rows = {
         r.phrase: r
-        for r in STAGED["gazetteer_phrase_match"]
+        for r in QUERIES["gazetteer_phrase_match"]
         .spark(spark, sf_dir)
         .collect()
     }

@@ -35,27 +35,18 @@ R23_NAMES = [
     "unimax_epoch_cap_allocation",
 ]
 
-STAGED = {n: QUERY_REGISTRY[n] for n in R23_NAMES if n in QUERY_REGISTRY}
+QUERIES = {n: QUERY_REGISTRY[n] for n in R23_NAMES}
 
 
 def test_r23_registration_composition():
-    from market_pulse_data_pipeline_spark.queries import (
-        _R15_FIRST_WITNESS,
-        staging_candidates,
-    )
-
-    # registered in round 15 (the named flip round), heading the
-    # correctness window for their first driver witness
     assert set(R23_NAMES) <= set(QUERY_REGISTRY)
-    assert set(R23_NAMES) <= set(_R15_FIRST_WITNESS)
-    # the flip dropped the batch out of the staging tools' view
-    assert not set(STAGED) & staging_candidates().keys()
-    assert all(d.oracle is not None for d in STAGED.values())
+    # no rows-only drift: every registration ships a value-hash oracle
+    assert all(QUERY_REGISTRY[n].oracle is not None for n in R23_NAMES)
 
 
 @pytest.mark.parametrize("name", R23_NAMES)
 def test_r23_plan_antipatterns(spark, sf_dir, name):
-    df = STAGED[name].spark(spark, sf_dir)
+    df = QUERIES[name].spark(spark, sf_dir)
     plan = df._jdf.queryExecution().sparkPlan().toString()
     assert "CartesianProduct" not in plan, f"{name}: cartesian product"
     assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python"
@@ -101,7 +92,7 @@ def _tcl_replay(sf_dir: str):
 
 @pytest.fixture(scope="module")
 def tcl_rows(spark, sf_dir):
-    return STAGED["t_closeness_check"].spark(spark, sf_dir).collect()
+    return QUERIES["t_closeness_check"].spark(spark, sf_dir).collect()
 
 
 def test_tcl_replay_exact(tcl_rows, sf_dir):
@@ -183,7 +174,7 @@ def _auc_replay(sf_dir: str):
 
 
 def test_auc_replay_exact(spark, sf_dir):
-    got = STAGED["auc_quality_classifier"].spark(spark, sf_dir).collect()
+    got = QUERIES["auc_quality_classifier"].spark(spark, sf_dir).collect()
     expect = _auc_replay(sf_dir)
     assert {r.lang for r in got} == set(expect)
     for r in got:
@@ -243,7 +234,7 @@ def _unimax_replay(sf_dir: str):
 
 def test_unimax_replay_exact(spark, sf_dir):
     got = (
-        STAGED["unimax_epoch_cap_allocation"].spark(spark, sf_dir).collect()
+        QUERIES["unimax_epoch_cap_allocation"].spark(spark, sf_dir).collect()
     )
     toks, cap, alloc, budget, capped = _unimax_replay(sf_dir)
     assert {r.source for r in got} == set(toks)
@@ -258,7 +249,7 @@ def test_unimax_replay_exact(spark, sf_dir):
 
 def test_unimax_contracts(spark, sf_dir):
     got = (
-        STAGED["unimax_epoch_cap_allocation"].spark(spark, sf_dir).collect()
+        QUERIES["unimax_epoch_cap_allocation"].spark(spark, sf_dir).collect()
     )
     # non-vacuous: both classes present at every checked SF
     assert any(r.is_capped for r in got)

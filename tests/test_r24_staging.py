@@ -1,13 +1,12 @@
-"""Semantic pins for the round-24-batch staged operators
-(queries/r24_staging.py — staged in round 13, second new-capability
-batch, named flip round 16). Oracle parity is covered by check_oracle
---staging at sf0.001/0.01/0.1 and hostile_check --chaos --staging;
-this file keeps the invariants the value-hash can't express:
-pure-python replays of all three operators (re + hashlib for the
-contagion clusters and the line dedup's byte witness, integer dots
-for the margin criterion), the contagion non-vacuousness pin
-(inherited flags EXIST — the operator's whole point), the planted
-twin-line drop, and the accepted-AND-rejected margin balance."""
+"""Semantic pins for the round-24-batch operators
+(queries/r24_staging.py). Oracle parity is covered by
+tests/test_queries_oracle.py; this file keeps the invariants the
+value-hash can't express: pure-python replays of all three operators
+(re + hashlib for the contagion clusters and the line dedup's byte
+witness, integer dots for the margin criterion), the contagion
+non-vacuousness pin (inherited flags EXIST — the operator's whole
+point), the planted twin-line drop, and the accepted-AND-rejected
+margin balance."""
 
 import hashlib
 import re
@@ -15,6 +14,7 @@ import re
 import duckdb
 import pytest
 
+from market_pulse_data_pipeline_spark.queries import QUERY_REGISTRY
 from market_pulse_data_pipeline_spark.queries.r24_staging import (
     _IL_PLANT_MOD,
     _IL_W,
@@ -26,7 +26,6 @@ from market_pulse_data_pipeline_spark.queries.r24_staging import (
     _PC_OFFSET,
     _PC_PLANT_MOD,
     _PC_PREFIX_W,
-    STAGED,
 )
 from market_pulse_data_pipeline_spark.queries.text import _PII_EMAIL, _PII_ID
 
@@ -36,23 +35,18 @@ R24_NAMES = [
     "cross_label_margin_mining",
 ]
 
+QUERIES = {n: QUERY_REGISTRY[n] for n in R24_NAMES}
+
 
 def test_r24_staging_composition():
-    from market_pulse_data_pipeline_spark.queries import (
-        QUERY_REGISTRY,
-        staging_candidates,
-    )
-
-    assert list(STAGED) == R24_NAMES
-    # staged, NOT registered: the round-16 flip owns the registration
-    assert not set(STAGED) & set(QUERY_REGISTRY)
-    assert set(STAGED) <= staging_candidates().keys()
-    assert all(d.oracle is not None for d in STAGED.values())
+    assert set(R24_NAMES) <= set(QUERY_REGISTRY)
+    # no rows-only drift: every registration ships a value-hash oracle
+    assert all(QUERY_REGISTRY[n].oracle is not None for n in R24_NAMES)
 
 
 @pytest.mark.parametrize("name", R24_NAMES)
 def test_r24_plan_antipatterns(spark, sf_dir, name):
-    df = STAGED[name].spark(spark, sf_dir)
+    df = QUERIES[name].spark(spark, sf_dir)
     plan = df._jdf.queryExecution().sparkPlan().toString()
     assert "CartesianProduct" not in plan, f"{name}: cartesian product"
     assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python"
@@ -102,7 +96,7 @@ def _pcc_replay(sf_dir: str):
 
 
 def test_pcc_replay_exact(spark, sf_dir):
-    got = STAGED["pii_cluster_contagion"].spark(spark, sf_dir).collect()
+    got = QUERIES["pii_cluster_contagion"].spark(spark, sf_dir).collect()
     expect = _pcc_replay(sf_dir)
     assert {r.doc_id for r in got} == set(expect)
     for r in got:
@@ -115,7 +109,7 @@ def test_pcc_replay_exact(spark, sf_dir):
 
 
 def test_pcc_contagion_nonvacuous(spark, sf_dir):
-    got = STAGED["pii_cluster_contagion"].spark(spark, sf_dir).collect()
+    got = QUERIES["pii_cluster_contagion"].spark(spark, sf_dir).collect()
     by_id = {r.doc_id: r for r in got}
     # every planted twin carries PII itself
     twins = [r for r in got if r.doc_id >= _PC_OFFSET]
@@ -165,7 +159,7 @@ def _ild_replay(sf_dir: str):
 
 
 def test_ild_replay_exact(spark, sf_dir):
-    got = STAGED["intra_doc_line_dedup"].spark(spark, sf_dir).collect()
+    got = QUERIES["intra_doc_line_dedup"].spark(spark, sf_dir).collect()
     expect = _ild_replay(sf_dir)
     assert {r.doc_id for r in got} == set(expect)
     for r in got:
@@ -179,7 +173,7 @@ def test_ild_replay_exact(spark, sf_dir):
 
 
 def test_ild_planted_twin_line_drops(spark, sf_dir):
-    got = STAGED["intra_doc_line_dedup"].spark(spark, sf_dir).collect()
+    got = QUERIES["intra_doc_line_dedup"].spark(spark, sf_dir).collect()
     planted = [
         r for r in got if r.doc_id % _IL_PLANT_MOD == 0 and r.n_lines > 1
     ]
@@ -237,7 +231,7 @@ def _mm_replay(sf_dir: str):
 
 def test_mm_replay_exact(spark, sf_dir):
     got = (
-        STAGED["cross_label_margin_mining"].spark(spark, sf_dir).collect()
+        QUERIES["cross_label_margin_mining"].spark(spark, sf_dir).collect()
     )
     expect = _mm_replay(sf_dir)
     assert {r.qid for r in got} == set(expect)
@@ -255,7 +249,7 @@ def test_mm_replay_exact(spark, sf_dir):
 
 def test_mm_both_classes_present(spark, sf_dir):
     got = (
-        STAGED["cross_label_margin_mining"].spark(spark, sf_dir).collect()
+        QUERIES["cross_label_margin_mining"].spark(spark, sf_dir).collect()
     )
     assert any(r.accepted for r in got)
     assert any(not r.accepted for r in got)

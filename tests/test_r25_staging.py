@@ -1,16 +1,13 @@
-"""Semantic pins for the round-25-batch staged operators
-(queries/r25_staging.py — staged in round 14 as NEW capability with
-its own named flip round, round 17, after r23 flips in 15 and r24 in
-16). Oracle parity is covered by check_oracle --staging at
-sf0.001/0.01/0.1 and hostile_check --chaos --staging; this file keeps
-the invariants the value-hash can't express: a pure-python replay of
-the harmonic packing assignment plus its no-overflow /
-optimal-bins-per-class algebra, a pure-python replay of the
-doubled-space replace chain (with the adjacency and nested-phrase
-properties that justify the construction, engine-free), and the
-adaptive prefix-sum switch's branch equivalence (forcing the OTHER
-branch on the same input must produce identical rows) plus the
-non-vacuousness of the mode rule at the fixture SF."""
+"""Semantic pins for the round-25-batch operators
+(queries/r25_staging.py). Oracle parity is covered by
+tests/test_queries_oracle.py; this file keeps the invariants the
+value-hash can't express: a pure-python replay of the harmonic packing
+assignment plus its no-overflow / optimal-bins-per-class algebra, a
+pure-python replay of the doubled-space replace chain (with the
+adjacency and nested-phrase properties that justify the construction,
+engine-free), and the adaptive prefix-sum switch's branch equivalence
+(forcing the OTHER branch on the same input must produce identical
+rows) plus the non-vacuousness of the mode rule at the fixture SF."""
 
 import hashlib
 import math
@@ -22,12 +19,12 @@ import pytest
 from market_pulse_data_pipeline_spark.functions.prefix import (
     PREFIX_SERIAL_MAX_ROWS,
 )
+from market_pulse_data_pipeline_spark.queries import QUERY_REGISTRY
 from market_pulse_data_pipeline_spark.queries.r25_staging import (
     _FT_PHRASES,
     _HP_CAP,
     _ft_pat,
     _ft_rep,
-    STAGED,
 )
 
 R25_NAMES = [
@@ -36,23 +33,18 @@ R25_NAMES = [
     "prefix_sum_adaptive_switch",
 ]
 
+QUERIES = {n: QUERY_REGISTRY[n] for n in R25_NAMES}
+
 
 def test_r25_staging_composition():
-    from market_pulse_data_pipeline_spark.queries import (
-        QUERY_REGISTRY,
-        staging_candidates,
-    )
-
-    assert list(STAGED) == R25_NAMES
-    # staged, NOT registered: the round-17 flip owns the registration
-    assert not set(STAGED) & set(QUERY_REGISTRY)
-    assert set(STAGED) <= staging_candidates().keys()
-    assert all(d.oracle is not None for d in STAGED.values())
+    assert set(R25_NAMES) <= set(QUERY_REGISTRY)
+    # no rows-only drift: every registration ships a value-hash oracle
+    assert all(QUERY_REGISTRY[n].oracle is not None for n in R25_NAMES)
 
 
 @pytest.mark.parametrize("name", R25_NAMES)
 def test_r25_plan_antipatterns(spark, sf_dir, name):
-    df = STAGED[name].spark(spark, sf_dir)
+    df = QUERIES[name].spark(spark, sf_dir)
     plan = df._jdf.queryExecution().sparkPlan().toString()
     assert "CartesianProduct" not in plan, f"{name}: cartesian product"
     assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python"
@@ -91,7 +83,7 @@ def _harmonic_replay(docs):
 
 def test_harmonic_replay_matches_spark(spark, sf_dir):
     expect = _harmonic_replay(_docs(sf_dir))
-    rows = STAGED["harmonic_size_class_packing"].spark(
+    rows = QUERIES["harmonic_size_class_packing"].spark(
         spark, sf_dir
     ).collect()
     assert len(rows) == len(expect)
@@ -115,7 +107,7 @@ def test_harmonic_replay_matches_spark(spark, sf_dir):
 
 
 def test_harmonic_no_overflow_and_optimal_bins(spark, sf_dir):
-    rows = STAGED["harmonic_size_class_packing"].spark(
+    rows = QUERIES["harmonic_size_class_packing"].spark(
         spark, sf_dir
     ).collect()
     # the no-overflow proof in the compared bytes: k items of length
@@ -155,7 +147,7 @@ def _ft_replay(text):
 
 def test_flashtext_replay_matches_spark(spark, sf_dir):
     docs = {d: t for d, _, t in _docs(sf_dir)}
-    rows = STAGED["flashtext_multi_replace"].spark(spark, sf_dir).collect()
+    rows = QUERIES["flashtext_multi_replace"].spark(spark, sf_dir).collect()
     assert len(rows) == len(docs)
     total = 0
     for r in rows:
@@ -207,7 +199,7 @@ def test_flashtext_nested_phrase_longest_wins():
 
 
 def test_adaptive_switch_modes_follow_the_rule(spark, sf_dir):
-    rows = STAGED["prefix_sum_adaptive_switch"].spark(
+    rows = QUERIES["prefix_sum_adaptive_switch"].spark(
         spark, sf_dir
     ).collect()
     legs: dict = {}

@@ -1,11 +1,9 @@
-"""Semantic pins for the round-26-batch staged operators
-(queries/r26_staging.py — staged in round 14 as the second
-new-capability batch of the round, named flip round 18). Oracle
-parity is covered by check_oracle --staging at sf0.001/0.01/0.1 and
-hostile_check --chaos --staging; this file keeps the invariants the
-value-hash can't express: a full pure-python replay of the
-word2phrase score with the planted-collocation / natural-rejection
-split, a Decimal replay of the kappa contingency algebra with the
+"""Semantic pins for the round-26-batch operators
+(queries/r26_staging.py). Oracle parity is covered by
+tests/test_queries_oracle.py; this file keeps the invariants the
+value-hash can't express: a full pure-python replay of the word2phrase
+score with the planted-collocation / natural-rejection split, a
+Decimal replay of the kappa contingency algebra with the
 non-vacuous-disagreement and above-chance pins, and the bootstrap's
 multiplicity replay plus the order-statistic CI bracketing."""
 
@@ -16,6 +14,7 @@ from decimal import ROUND_HALF_UP, Decimal
 import duckdb
 import pytest
 
+from market_pulse_data_pipeline_spark.queries import QUERY_REGISTRY
 from market_pulse_data_pipeline_spark.queries.r26_staging import (
     _BS_B,
     _BS_SCALE,
@@ -32,7 +31,6 @@ from market_pulse_data_pipeline_spark.queries.r26_staging import (
     _PMI_MOD_B,
     _PMI_THETA_DEN,
     _PMI_THETA_NUM,
-    STAGED,
 )
 
 R26_NAMES = [
@@ -41,23 +39,18 @@ R26_NAMES = [
     "bootstrap_metric_ci",
 ]
 
+QUERIES = {n: QUERY_REGISTRY[n] for n in R26_NAMES}
+
 
 def test_r26_staging_composition():
-    from market_pulse_data_pipeline_spark.queries import (
-        QUERY_REGISTRY,
-        staging_candidates,
-    )
-
-    assert list(STAGED) == R26_NAMES
-    # staged, NOT registered: the round-18 flip owns the registration
-    assert not set(STAGED) & set(QUERY_REGISTRY)
-    assert set(STAGED) <= staging_candidates().keys()
-    assert all(d.oracle is not None for d in STAGED.values())
+    assert set(R26_NAMES) <= set(QUERY_REGISTRY)
+    # no rows-only drift: every registration ships a value-hash oracle
+    assert all(QUERY_REGISTRY[n].oracle is not None for n in R26_NAMES)
 
 
 @pytest.mark.parametrize("name", R26_NAMES)
 def test_r26_plan_antipatterns(spark, sf_dir, name):
-    df = STAGED[name].spark(spark, sf_dir)
+    df = QUERIES[name].spark(spark, sf_dir)
     plan = df._jdf.queryExecution().sparkPlan().toString()
     assert "CartesianProduct" not in plan, f"{name}: cartesian product"
     assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python"
@@ -118,7 +111,7 @@ def _pmi_replay(docs):
 
 def test_pmi_replay_matches_spark(spark, sf_dir):
     expect = _pmi_replay(_docs(sf_dir))
-    rows = STAGED["pmi_collocation_mining"].spark(spark, sf_dir).collect()
+    rows = QUERIES["pmi_collocation_mining"].spark(spark, sf_dir).collect()
     assert len(rows) == len(expect)
     for r in rows:
         cab, ca, cb, score, acc = expect[(r.token_a, r.token_b)]
@@ -128,7 +121,7 @@ def test_pmi_replay_matches_spark(spark, sf_dir):
 
 
 def test_pmi_plants_accepted_naturals_rejected(spark, sf_dir):
-    rows = STAGED["pmi_collocation_mining"].spark(spark, sf_dir).collect()
+    rows = QUERIES["pmi_collocation_mining"].spark(spark, sf_dir).collect()
     acc = {(r.token_a, r.token_b) for r in rows if r.accepted == 1}
     # both planted collocations fire: their tokens never appear apart
     assert ("qq", "ww") in acc and ("qq", "zz") in acc
@@ -179,7 +172,7 @@ def _kappa_replay(docs):
 
 def test_kappa_replay_matches_spark(spark, sf_dir):
     expect = _kappa_replay(_docs(sf_dir))
-    rows = STAGED["cohens_kappa_agreement"].spark(spark, sf_dir).collect()
+    rows = QUERIES["cohens_kappa_agreement"].spark(spark, sf_dir).collect()
     assert {r.lang for r in rows} == set(expect)
     for r in rows:
         n, n00, n01, n10, n11, kappa = expect[r.lang]
@@ -212,7 +205,7 @@ def _bs_mult(doc_id: int, r: int) -> int:
 
 def test_bootstrap_replay_matches_spark(spark, sf_dir):
     docs = _docs(sf_dir)
-    rows = STAGED["bootstrap_metric_ci"].spark(spark, sf_dir).collect()
+    rows = QUERIES["bootstrap_metric_ci"].spark(spark, sf_dir).collect()
     langs = {d[1] for d in docs}
     assert len(rows) == len(langs) * _BS_B
     # replay one full language end-to-end (the smallest one)

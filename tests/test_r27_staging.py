@@ -1,8 +1,6 @@
-"""Semantic pins for the round-27-batch staged operators
-(queries/r27_staging.py — staged in round 14 as the third
-new-capability batch of the round, named flip round 19). Oracle
-parity is covered by check_oracle --staging at sf0.001/0.01/0.1 and
-hostile_check --chaos --staging; this file keeps the invariants the
+"""Semantic pins for the round-27-batch operators
+(queries/r27_staging.py). Oracle parity is covered by
+tests/test_queries_oracle.py; this file keeps the invariants the
 value-hash can't express: a full pure-python replay of both fold
 strategies with the group-folding-never-splits-a-source pin and the
 by_doc > by_group leakage contrast, a regex replay of the redaction
@@ -17,6 +15,7 @@ from decimal import ROUND_HALF_UP, Decimal
 import duckdb
 import pytest
 
+from market_pulse_data_pipeline_spark.queries import QUERY_REGISTRY
 from market_pulse_data_pipeline_spark.queries.r27_staging import (
     _KF_CROSS_MOD,
     _KF_K,
@@ -27,7 +26,6 @@ from market_pulse_data_pipeline_spark.queries.r27_staging import (
     _RD_ID,
     _RD_ID_TOK,
     _RD_MOD,
-    STAGED,
 )
 
 R27_NAMES = [
@@ -36,23 +34,18 @@ R27_NAMES = [
     "zipf_token_frequency_profile",
 ]
 
+QUERIES = {n: QUERY_REGISTRY[n] for n in R27_NAMES}
+
 
 def test_r27_staging_composition():
-    from market_pulse_data_pipeline_spark.queries import (
-        QUERY_REGISTRY,
-        staging_candidates,
-    )
-
-    assert list(STAGED) == R27_NAMES
-    # staged, NOT registered: the round-19 flip owns the registration
-    assert not set(STAGED) & set(QUERY_REGISTRY)
-    assert set(STAGED) <= staging_candidates().keys()
-    assert all(d.oracle is not None for d in STAGED.values())
+    assert set(R27_NAMES) <= set(QUERY_REGISTRY)
+    # no rows-only drift: every registration ships a value-hash oracle
+    assert all(QUERY_REGISTRY[n].oracle is not None for n in R27_NAMES)
 
 
 @pytest.mark.parametrize("name", R27_NAMES)
 def test_r27_plan_antipatterns(spark, sf_dir, name):
-    df = STAGED[name].spark(spark, sf_dir)
+    df = QUERIES[name].spark(spark, sf_dir)
     plan = df._jdf.queryExecution().sparkPlan().toString()
     assert "CartesianProduct" not in plan, f"{name}: cartesian product"
     assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python"
@@ -131,7 +124,7 @@ def _kf_replay(docs):
 
 def test_kfold_replay_matches_spark(spark, sf_dir):
     expect = {r[0]: r for r in _kf_replay(_docs(sf_dir))}
-    rows = STAGED["group_kfold_leakage_audit"].spark(
+    rows = QUERIES["group_kfold_leakage_audit"].spark(
         spark, sf_dir
     ).collect()
     assert len(rows) == 2 * _KF_K
@@ -195,7 +188,7 @@ def _rd_replay(txt: str):
 
 def test_redact_replay_matches_spark(spark, sf_dir):
     docs = {d: t for d, _, _, t in _docs(sf_dir)}
-    rows = STAGED["pii_redact_spans"].spark(spark, sf_dir).collect()
+    rows = QUERIES["pii_redact_spans"].spark(spark, sf_dir).collect()
     assert len(rows) == len(docs)
     tot_email = tot_id = 0
     for r in rows:
@@ -242,7 +235,7 @@ def test_zipf_replay_matches_spark(spark, sf_dir):
     for _, lang, _, text in docs:
         for tok in text.split(" "):
             tf[(lang, tok)] += 1
-    rows = STAGED["zipf_token_frequency_profile"].spark(
+    rows = QUERIES["zipf_token_frequency_profile"].spark(
         spark, sf_dir
     ).collect()
     # replay the spectrum + totals

@@ -1,11 +1,8 @@
-"""Semantic pins for the round-28-batch staged operators
-(queries/r28_staging.py — staged in round 14 as the fourth
-new-capability batch of the round, named flip round 20; with it every
-remaining driver round is a pure flip). Oracle parity is covered by
-check_oracle --staging at sf0.001/0.01/0.1 and hostile_check --chaos
---staging; this file keeps the invariants the value-hash can't
-express: the Heaps curve's first-occurrence replay with the
-strictly-increasing and cumulative-consistency pins, a full
+"""Semantic pins for the round-28-batch operators
+(queries/r28_staging.py). Oracle parity is covered by
+tests/test_queries_oracle.py; this file keeps the invariants the
+value-hash can't express: the Heaps curve's first-occurrence replay
+with the strictly-increasing and cumulative-consistency pins, a full
 pure-python clipped-ROUGE replay with the clip-refuses-to-double-count
 witness, and the span scorer's perturbation replay with the
 shifted-span-matches-nothing property."""
@@ -17,6 +14,7 @@ from decimal import ROUND_HALF_UP, Decimal
 import duckdb
 import pytest
 
+from market_pulse_data_pipeline_spark.queries import QUERY_REGISTRY
 from market_pulse_data_pipeline_spark.queries.r28_staging import (
     _HV_DECILES,
     _HV_PLANT_MOD,
@@ -27,7 +25,6 @@ from market_pulse_data_pipeline_spark.queries.r28_staging import (
     _SP_B,
     _SP_MOD,
     _SP_SPUR_MOD,
-    STAGED,
 )
 
 R28_NAMES = [
@@ -36,23 +33,18 @@ R28_NAMES = [
     "span_match_f1",
 ]
 
+QUERIES = {n: QUERY_REGISTRY[n] for n in R28_NAMES}
+
 
 def test_r28_staging_composition():
-    from market_pulse_data_pipeline_spark.queries import (
-        QUERY_REGISTRY,
-        staging_candidates,
-    )
-
-    assert list(STAGED) == R28_NAMES
-    # staged, NOT registered: the round-20 flip owns the registration
-    assert not set(STAGED) & set(QUERY_REGISTRY)
-    assert set(STAGED) <= staging_candidates().keys()
-    assert all(d.oracle is not None for d in STAGED.values())
+    assert set(R28_NAMES) <= set(QUERY_REGISTRY)
+    # no rows-only drift: every registration ships a value-hash oracle
+    assert all(QUERY_REGISTRY[n].oracle is not None for n in R28_NAMES)
 
 
 @pytest.mark.parametrize("name", R28_NAMES)
 def test_r28_plan_antipatterns(spark, sf_dir, name):
-    df = STAGED[name].spark(spark, sf_dir)
+    df = QUERIES[name].spark(spark, sf_dir)
     plan = df._jdf.queryExecution().sparkPlan().toString()
     assert "CartesianProduct" not in plan, f"{name}: cartesian product"
     assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python"
@@ -100,7 +92,7 @@ def test_heaps_replay_matches_spark(spark, sf_dir):
         sizes[doc_id] = len(ws)
         for tok in ws:
             first.setdefault(tok, doc_id)
-    rows = STAGED["heaps_vocab_growth_curve"].spark(
+    rows = QUERIES["heaps_vocab_growth_curve"].spark(
         spark, sf_dir
     ).collect()
     assert len(rows) == _HV_DECILES
@@ -142,7 +134,7 @@ def _clipped(ref_grams, cand_grams) -> int:
 
 def test_rouge_replay_matches_spark(spark, sf_dir):
     docs = dict(_docs(sf_dir))
-    rows = STAGED["rouge_n_eval_overlap"].spark(spark, sf_dir).collect()
+    rows = QUERIES["rouge_n_eval_overlap"].spark(spark, sf_dir).collect()
     assert len(rows) == sum(1 for d in docs if d % _RG_EVAL_MOD == 0)
     for r in rows:
         ref, cand = _rg_pair(docs[r.doc_id])
@@ -224,7 +216,7 @@ def _sp_replay(docs):
 def test_span_f1_replay_matches_spark(spark, sf_dir):
     gold, pred = _sp_replay(_docs(sf_dir))
     tp = len(gold & pred)
-    row = STAGED["span_match_f1"].spark(spark, sf_dir).collect()
+    row = QUERIES["span_match_f1"].spark(spark, sf_dir).collect()
     assert len(row) == 1
     r = row[0]
     assert (r.n_gold, r.n_pred, r.tp) == (len(gold), len(pred), tp)

@@ -1,9 +1,6 @@
-"""Semantic pins for the round-29-batch staged operators
-(queries/r29_staging.py — the streaming-state recovery witnesses
-VERDICT round-14 item 4 ordered; staged in round 15, named flip round
-16 alongside r24_staging). Oracle parity is covered by
-check_oracle --staging at sf0.001/0.01/0.1 and
-hostile_check --chaos --staging; this file keeps the invariants the
+"""Semantic pins for the round-29-batch operators
+(queries/r29_staging.py). Oracle parity is covered by
+tests/test_queries_oracle.py; this file keeps the invariants the
 value-hash can't express: that the dedup witness's cross-run key
 overlap is genuinely non-empty (state recovery MATTERED, the run was
 not vacuously split), that the recovered output equals an
@@ -11,21 +8,21 @@ UNINTERRUPTED single run literally, that checkpointed state actually
 reached disk, that the FINAL recovered state store holds exactly one
 entry per emitted key (read back directly via Spark 4's `statestore`
 data source), that the planted crash fired and its batch replayed
-exactly once, and that per-user counts are cumulative ACROSS the
-crash boundary (continuation, not restart-from-zero)."""
+exactly once, and that per-user counts are cumulative ACROSS the crash
+boundary (continuation, not restart-from-zero)."""
 
 import os
 
 import duckdb
 import pytest
 
+from market_pulse_data_pipeline_spark.queries import QUERY_REGISTRY
 from market_pulse_data_pipeline_spark.queries.r29_staging import (
     _CRASH_BATCH,
     _DD_MOD,
     _R29_ROOT,
     _SS_MOD,
     _SS_REM,
-    STAGED,
 )
 
 R29_NAMES = [
@@ -33,23 +30,18 @@ R29_NAMES = [
     "streaming_stateful_crash_recovery",
 ]
 
+QUERIES = {n: QUERY_REGISTRY[n] for n in R29_NAMES}
+
 
 def test_r29_staging_composition():
-    from market_pulse_data_pipeline_spark.queries import (
-        QUERY_REGISTRY,
-        staging_candidates,
-    )
-
-    assert list(STAGED) == R29_NAMES
-    # staged, NOT registered: the round-16 flip owns the registration
-    assert not set(STAGED) & set(QUERY_REGISTRY)
-    assert set(STAGED) <= staging_candidates().keys()
-    assert all(d.oracle is not None for d in STAGED.values())
+    assert set(R29_NAMES) <= set(QUERY_REGISTRY)
+    # no rows-only drift: every registration ships a value-hash oracle
+    assert all(QUERY_REGISTRY[n].oracle is not None for n in R29_NAMES)
 
 
 @pytest.mark.parametrize("name", R29_NAMES)
 def test_r29_plan_antipatterns(spark, sf_dir, name):
-    df = STAGED[name].spark(spark, sf_dir)
+    df = QUERIES[name].spark(spark, sf_dir)
     plan = df._jdf.queryExecution().sparkPlan().toString()
     assert "CartesianProduct" not in plan, f"{name}: cartesian product"
     assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python"
@@ -62,7 +54,7 @@ def test_r29_plan_antipatterns(spark, sf_dir, name):
 
 @pytest.fixture(scope="module")
 def dedup_rows(spark, sf_dir):
-    df = STAGED["streaming_dedup_state_recovery"].spark(spark, sf_dir)
+    df = QUERIES["streaming_dedup_state_recovery"].spark(spark, sf_dir)
     return [(r.user_id, r.event_type) for r in df.collect()]
 
 
@@ -167,7 +159,7 @@ def test_dedup_recovery_equals_uninterrupted_run(
 
 @pytest.fixture(scope="module")
 def crash_result(spark, sf_dir):
-    df = STAGED["streaming_stateful_crash_recovery"].spark(spark, sf_dir)
+    df = QUERIES["streaming_stateful_crash_recovery"].spark(spark, sf_dir)
     final = {r.user_id: r.n_events for r in df.collect()}
     capture = spark.read.parquet(os.path.join(_R29_ROOT, "stateful", "capture"))
     updates = [

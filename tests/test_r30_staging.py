@@ -1,28 +1,26 @@
-"""Semantic pins for the round-30-batch staged operator
-(queries/r30_staging.py — staged in the round-15 surplus session,
-closing VERDICT r14 "What's missing" 5; named flip round 17 alongside
-r25_staging). Oracle parity is covered by check_oracle --staging at
-sf0.001/0.01/0.1 and hostile_check --chaos --staging; this file keeps
-what the value-hash can't express: a pure-python TEXTBOOK-form LCS
-replay against the shipping max-form Arrow kernel (fuzzed, including
-ties, repeats, and empty sequences), the order-sensitivity witness
-that separates ROUGE-L from bag-overlap ROUGE-1, and the
-single-token-reference edge."""
+"""Semantic pins for the round-30-batch operator
+(queries/r30_staging.py). Oracle parity is covered by
+tests/test_queries_oracle.py; this file keeps what the value-hash
+can't express: a pure-python TEXTBOOK-form LCS replay against the
+shipping max-form Arrow kernel (fuzzed, including ties, repeats, and
+empty sequences), the order-sensitivity witness that separates ROUGE-L
+from bag-overlap ROUGE-1, and the single-token-reference edge."""
 
 import random
 
 import pytest
 
+from market_pulse_data_pipeline_spark.queries import QUERY_REGISTRY
 from market_pulse_data_pipeline_spark.queries.r30_staging import (
     _RL_DROP,
     _RL_EVAL_MOD,
     _RL_MID,
     _RL_TAIL,
-    STAGED,
     _lcs_len,
 )
 
 R30_NAMES = ["rouge_l_eval_overlap"]
+QUERIES = {n: QUERY_REGISTRY[n] for n in R30_NAMES}
 
 
 def _lcs_textbook(a, b):
@@ -48,21 +46,14 @@ def _rl_pair(text):
 
 
 def test_r30_staging_composition():
-    from market_pulse_data_pipeline_spark.queries import (
-        QUERY_REGISTRY,
-        staging_candidates,
-    )
-
-    assert list(STAGED) == R30_NAMES
-    # staged, NOT registered: the round-17 flip owns the registration
-    assert not set(STAGED) & set(QUERY_REGISTRY)
-    assert set(STAGED) <= staging_candidates().keys()
-    assert all(d.oracle is not None for d in STAGED.values())
+    assert set(R30_NAMES) <= set(QUERY_REGISTRY)
+    # no rows-only drift: every registration ships a value-hash oracle
+    assert all(QUERY_REGISTRY[n].oracle is not None for n in R30_NAMES)
 
 
 @pytest.mark.parametrize("name", R30_NAMES)
 def test_r30_plan_antipatterns(spark, sf_dir, name):
-    df = STAGED[name].spark(spark, sf_dir)
+    df = QUERIES[name].spark(spark, sf_dir)
     plan = df._jdf.queryExecution().sparkPlan().toString()
     assert "CartesianProduct" not in plan, f"{name}: cartesian product"
     assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python"
@@ -76,7 +67,7 @@ def test_rouge_l_replay_matches_spark(spark, sf_dir):
             f"SELECT doc_id, text FROM '{sf_dir}/documents.parquet'"
         ).fetchall()
     )
-    rows = STAGED["rouge_l_eval_overlap"].spark(spark, sf_dir).collect()
+    rows = QUERIES["rouge_l_eval_overlap"].spark(spark, sf_dir).collect()
     assert len(rows) == sum(1 for d in docs if d % _RL_EVAL_MOD == 0)
     for r in rows:
         ref, cand = _rl_pair(docs[r.doc_id])

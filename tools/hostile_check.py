@@ -48,26 +48,14 @@ def main() -> int:
         help=(
             "attack PARALLELISM instead of just session state: 5 cores, "
             "7 shuffle partitions (prime, != any input split count), "
-            "1 MB input splits (every sf0.01 parquet shreds into many "
-            "tasks), and 512-row Arrow batches (every mapInPandas / "
-            "pandas_udf path sees MANY partial batches instead of one). "
-            "Any query whose bytes depend on fold order, partial-agg "
-            "grouping, per-batch state, or partition count fails here "
-            "even though the layout-friendly default sweep passes."
+            "a half-hour-offset process time zone (Asia/Kolkata), and "
+            "512-row Arrow batches. The 1 MB input-split setting does "
+            "NOT spread the fixtures over many tasks: every fixture "
+            "parquet is a single row group, so each scan still lands "
+            "its rows in one partition. Any query whose bytes depend on "
+            "shuffle partition count, partial-agg grouping or per-batch "
+            "Arrow state fails here even though the default sweep passes."
         ),
-    )
-    ap.add_argument(
-        "--staging",
-        action="store_true",
-        help="sweep the pre-registration staging dict "
-        "(queries.staging_candidates()) with the identical machinery",
-    )
-    ap.add_argument(
-        "--staged",
-        action="store_true",
-        help="sweep the newest registrations still awaiting their "
-        "first driver witness (queries/__init__.py::"
-        "PENDING_FIRST_WITNESS) instead of the whole registry",
     )
     args = ap.parse_args()
 
@@ -119,31 +107,8 @@ def main() -> int:
             f"read_parquet('{args.sf}/{name}.parquet')"
         )
 
-    if args.staging:
-        from market_pulse_data_pipeline_spark.queries import (
-            staging_candidates,
-        )
-
-        staged = staging_candidates()
-        qs = {n: d.spark for n, d in staged.items()}
-        oracles = {n: d.oracle for n, d in staged.items() if d.oracle}
-    elif args.staged:
-        # "staged" means the newest registrations still awaiting
-        # their first driver witness (the current deferral list)
-        from market_pulse_data_pipeline_spark.queries import (
-            PENDING_FIRST_WITNESS,
-            QUERY_REGISTRY,
-        )
-
-        qs = {n: QUERY_REGISTRY[n].spark for n in PENDING_FIRST_WITNESS}
-        oracles = {
-            n: QUERY_REGISTRY[n].oracle
-            for n in PENDING_FIRST_WITNESS
-            if QUERY_REGISTRY[n].oracle
-        }
-    else:
-        qs = entrymod.queries()
-        oracles = entrymod.oracle_sql()
+    qs = entrymod.queries()
+    oracles = entrymod.oracle_sql()
     only = set(args.only.split(",")) if args.only else None
     failures = []
     for name, fn in qs.items():
