@@ -39,30 +39,7 @@ from market_pulse_data_pipeline_spark.queries import layout  # noqa: F401, E402
 from market_pulse_data_pipeline_spark.queries import sketches  # noqa: F401, E402
 from market_pulse_data_pipeline_spark.queries import shuffle_ops  # noqa: F401, E402
 from market_pulse_data_pipeline_spark.queries import mining  # noqa: F401, E402
-from market_pulse_data_pipeline_spark.queries import r7_staging  # noqa: F401, E402
-from market_pulse_data_pipeline_spark.queries import r8_staging  # noqa: F401, E402
-from market_pulse_data_pipeline_spark.queries import r9_staging  # noqa: F401, E402
-from market_pulse_data_pipeline_spark.queries import r10_staging  # noqa: F401, E402
-from market_pulse_data_pipeline_spark.queries import r11_staging  # noqa: F401, E402
-from market_pulse_data_pipeline_spark.queries import r12_staging  # noqa: F401, E402
-from market_pulse_data_pipeline_spark.queries import r13_staging  # noqa: F401, E402
-from market_pulse_data_pipeline_spark.queries import r14_staging  # noqa: F401, E402
-from market_pulse_data_pipeline_spark.queries import r15_staging  # noqa: F401, E402
-from market_pulse_data_pipeline_spark.queries import r16_staging  # noqa: F401, E402
-from market_pulse_data_pipeline_spark.queries import r17_staging  # noqa: F401, E402
-from market_pulse_data_pipeline_spark.queries import r18_staging  # noqa: F401, E402
-from market_pulse_data_pipeline_spark.queries import r19_staging  # noqa: F401, E402
-from market_pulse_data_pipeline_spark.queries import r20_staging  # noqa: F401, E402
-from market_pulse_data_pipeline_spark.queries import r21_staging  # noqa: F401, E402
-from market_pulse_data_pipeline_spark.queries import r22_staging  # noqa: F401, E402
-from market_pulse_data_pipeline_spark.queries import r23_staging  # noqa: F401, E402
-from market_pulse_data_pipeline_spark.queries import r24_staging  # noqa: F401, E402
-from market_pulse_data_pipeline_spark.queries import r25_staging  # noqa: F401, E402
-from market_pulse_data_pipeline_spark.queries import r26_staging  # noqa: F401, E402
-from market_pulse_data_pipeline_spark.queries import r27_staging  # noqa: F401, E402
-from market_pulse_data_pipeline_spark.queries import r28_staging  # noqa: F401, E402
-from market_pulse_data_pipeline_spark.queries import r29_staging  # noqa: F401, E402
-from market_pulse_data_pipeline_spark.queries import r30_staging  # noqa: F401, E402
+from market_pulse_data_pipeline_spark.queries import evaluation  # noqa: F401, E402
 
 # the committed correctness-harness results, CORRECTNESS_r{N}.json:
 # one row per checked query, green when the value hash matched

@@ -4,6 +4,30 @@ semi/anti subqueries, string & date scalar suites.
 The reference outsources all of this to Snowflake; a drop-in engine has
 to own it. Shapes chosen so the DuckDB oracle is exactly expressible
 (deterministic orders, decimal-exact window sums, tie-free ranking).
+
+- ``equi_depth_histogram_stats`` — the optimizer-statistics artifact
+  itself: per-group equi-depth (NTILE) histograms with per-bucket
+  row counts and [min, max] bounds — what a CBO consumes for
+  selectivity estimation and what ANALYZE TABLE materializes.
+  Deterministic under a total order (value, event_id tiebreak), so
+  the bucket boundaries are bit-identical across engines; bounds are
+  raw untouched doubles (no arithmetic, no rounding boundary).
+- ``json_schema_infer`` — semi-structured schema profiling: per JSON
+  path, the observed value-class distribution (missing / int / float
+  / bool / string) with presence ratios — the first thing a data
+  lake runs against a new feed, and the complement of the registered
+  extractors (json_path_extract / variant_path_extract assume the
+  schema; this DISCOVERS it). Classification is value-pattern-based
+  on the canonical string extraction (get_json_object twins DuckDB's
+  json_extract_string byte-for-byte — verified on every planted
+  shape), deterministic across engines; production swaps in variant
+  typeof for quoted-number fidelity, same plan.
+- ``seasonal_naive_backtest`` — forecast backtesting, the evaluation
+  loop every metrics platform runs: the seasonal-naive baseline
+  (forecast(d) = actual(d - 7)) joined against actuals per series,
+  with MAE and signed bias through the exact-decimal route (sums are
+  order-independent DECIMAL, ONE terminal rounding each). Day buckets
+  are epoch_us div 86400000000 (integer truncation on both engines) — timezone-free integers.
 """
 
 from __future__ import annotations
@@ -2483,4 +2507,333 @@ def ab_test_proportions(spark: SparkSession, sf_dir: str) -> DataFrame:
         snap(pb).alias("rate_b"),
         snap(z).alias("z_stat"),
         (F.abs(z) > 1.96).alias("significant"),
+    )
+
+
+# --------------------------------------------------------------------
+# equi_depth_histogram_stats
+# --------------------------------------------------------------------
+
+_EH_BUCKETS = 10
+
+
+def _histo_oracle() -> str:
+    return f"""
+    WITH ranked AS (
+      SELECT event_type, value,
+             NTILE({_EH_BUCKETS}) OVER (
+               PARTITION BY event_type ORDER BY value NULLS LAST, event_id
+             ) AS bucket
+      FROM events
+    )
+    SELECT event_type,
+           CAST(bucket AS INTEGER) AS bucket,
+           CAST(COUNT(*) AS BIGINT) AS n_rows,
+           MIN(value) AS min_value,
+           MAX(value) AS max_value
+    FROM ranked
+    GROUP BY event_type, bucket
+    ORDER BY event_type, bucket
+    """
+
+
+@register(
+    "equi_depth_histogram_stats",
+    _histo_oracle(),
+    doc="the optimizer-statistics artifact itself: per-group "
+    "equi-depth histograms (NTILE over a TOTAL order — value with "
+    "event_id tiebreak, so bucket boundaries are bit-identical across "
+    "engines) with per-bucket row counts and [min, max] bounds — what "
+    "a cost-based optimizer consumes for range-selectivity estimates "
+    "and what ANALYZE TABLE materializes. Bounds are raw untouched "
+    "doubles: no arithmetic, so no rounding boundary can exist in the "
+    "compared bytes. 100 TB shape: one partitioned window (per-group "
+    "sort — the price every histogram build pays, parallel across "
+    "groups) + one hash aggregate; output size is groups x buckets, "
+    "constant in row count — persist per snapshot and selectivity "
+    "lookups never rescan. Complements value_histogram_by_event_type "
+    "(equi-WIDTH: fixed ranges, variable counts) with the equi-DEPTH "
+    "dual (fixed counts, data-driven ranges).",
+)
+def equi_depth_histogram_stats(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    ev = t(spark, sf_dir, "events").select("event_type", "event_id", "value")
+    # NULLS LAST pinned explicitly: Spark's ascending default is NULLS
+    # FIRST, DuckDB's is NULLS LAST — a NULL value would silently shift
+    # every bucket assignment between engines
+    w = Window.partitionBy("event_type").orderBy(
+        F.asc_nulls_last("value"), "event_id"
+    )
+    ranked = ev.select(
+        "event_type",
+        "value",
+        F.ntile(_EH_BUCKETS).over(w).alias("bucket"),
+    )
+    return (
+        ranked.groupBy("event_type", "bucket")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_rows"),
+            F.min("value").alias("min_value"),
+            F.max("value").alias("max_value"),
+        )
+        .orderBy("event_type", "bucket")
+    )
+
+
+# --------------------------------------------------------------------
+# json_schema_infer
+# --------------------------------------------------------------------
+
+# planted JSON shapes by event_id % 6 (the house idiom) — the fixture
+# props column is uniformly {"k": <int>}, too regular to witness
+# inference
+_JS_PATHS = ["$.k", "$.extra.v"]
+_JS_INT_RE = "^-?[0-9]+$"
+_JS_FLOAT_RE = "^-?[0-9]+[.][0-9]+$"
+
+
+def _js_doc_sql() -> str:
+    v = "CAST(event_id % 100 AS VARCHAR)"
+    return f"""
+        CASE event_id % 6
+          WHEN 0 THEN '{{"k": ' || {v} || '}}'
+          WHEN 1 THEN '{{"k": "s' || {v} || '"}}'
+          WHEN 2 THEN '{{"k": ' || {v} || '.5}}'
+          WHEN 3 THEN '{{"k": ' || (CASE WHEN event_id % 2 = 0
+                                    THEN 'true' ELSE 'false' END) || '}}'
+          WHEN 4 THEN '{{"k": ' || {v} || ', "extra": {{"v": '
+                   || {v} || '}}}}'
+          ELSE '{{}}'
+        END
+    """
+
+
+def _js_oracle() -> str:
+    path_union = " UNION ALL ".join(
+        f"SELECT '{p}' AS path" for p in _JS_PATHS
+    )
+    return f"""
+    WITH raw AS (
+      SELECT event_id, {_js_doc_sql()} AS j FROM events
+    ),
+    paths AS ({path_union}),
+    ext AS (
+      SELECT p.path, json_extract_string(r.j, p.path) AS v
+      FROM raw r CROSS JOIN paths p
+    ),
+    cls AS (
+      SELECT path,
+             CASE WHEN v IS NULL THEN 'missing'
+                  WHEN v IN ('true', 'false') THEN 'bool'
+                  WHEN regexp_matches(v, '{_JS_INT_RE}') THEN 'int'
+                  WHEN regexp_matches(v, '{_JS_FLOAT_RE}') THEN 'float'
+                  ELSE 'string' END AS type_class
+      FROM ext
+    ),
+    tot AS (SELECT path, COUNT(*) AS n FROM cls GROUP BY path)
+    SELECT c.path, c.type_class,
+           CAST(COUNT(*) AS BIGINT) AS n_values,
+           {sql_round_div('COUNT(*)', 't.n')} AS fraction
+    FROM cls c JOIN tot t USING (path)
+    GROUP BY c.path, c.type_class, t.n
+    ORDER BY c.path, c.type_class
+    """
+
+
+@register(
+    "json_schema_infer",
+    _js_oracle(),
+    doc="semi-structured schema inference: per JSON path, the observed "
+    "value-class distribution (missing / int / float / bool / "
+    "string) with presence fractions — the first profile a data lake "
+    "runs on a new feed, and the DISCOVERY complement of the "
+    "registered extractors (json_path_extract / variant_path_extract "
+    "consume a known schema). Six planted JSON shapes by event_id "
+    "residue (int / quoted-string / float / bool / nested-object / "
+    "empty) exercise every class including the missing-path case on "
+    "both a top-level and a nested path. Classification is value-"
+    "pattern-based on the canonical string extraction — Spark "
+    "get_json_object and DuckDB json_extract_string return byte-"
+    "identical strings on every shape (verified), so the CASE chain "
+    "cannot diverge; the quoted-number ambiguity ('5' vs 5) is "
+    "inherent to string extraction and documented — production swaps "
+    "in variant typeof, same plan shape. 100 TB shape: map-only "
+    "extraction per (row x path, path list is a tiny literal) + one "
+    "hash aggregate bounded by paths x classes; the profile is "
+    "persistable per feed snapshot.",
+)
+def json_schema_infer(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from market_pulse_data_pipeline_spark.functions.dedup import (  # noqa: PLC0415
+        fan_out,
+    )
+
+    ev = fan_out(t(spark, sf_dir, "events").select("event_id"))
+    v = (F.col("event_id") % 100).cast("string")
+    m = F.col("event_id") % 6
+    j = (
+        F.when(m == 0, F.concat(F.lit('{"k": '), v, F.lit("}")))
+        .when(m == 1, F.concat(F.lit('{"k": "s'), v, F.lit('"}')))
+        .when(m == 2, F.concat(F.lit('{"k": '), v, F.lit(".5}")))
+        .when(
+            m == 3,
+            F.concat(
+                F.lit('{"k": '),
+                F.when(F.col("event_id") % 2 == 0, "true").otherwise(
+                    "false"
+                ),
+                F.lit("}"),
+            ),
+        )
+        .when(
+            m == 4,
+            F.concat(
+                F.lit('{"k": '),
+                v,
+                F.lit(', "extra": {"v": '),
+                v,
+                F.lit("}}"),
+            ),
+        )
+        .otherwise(F.lit("{}"))
+    )
+    raw = ev.select("event_id", j.alias("j"))
+    ext = raw.select(
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(p).alias("path"),
+                        F.get_json_object("j", p).alias("v"),
+                    )
+                    for p in _JS_PATHS
+                ]
+            )
+        ).alias("e")
+    ).select("e.path", "e.v")
+    cls = ext.select(
+        "path",
+        F.when(F.col("v").isNull(), "missing")
+        .when(F.col("v").isin("true", "false"), "bool")
+        .when(F.col("v").rlike(_JS_INT_RE), "int")
+        .when(F.col("v").rlike(_JS_FLOAT_RE), "float")
+        .otherwise("string")
+        .alias("type_class"),
+    )
+    tot = cls.groupBy("path").agg(F.count(F.lit(1)).alias("n"))
+    return (
+        cls.groupBy("path", "type_class")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_values"))
+        .join(F.broadcast(tot), "path")
+        .select(
+            "path",
+            "type_class",
+            "n_values",
+            round_div(F.col("n_values"), F.col("n")).alias("fraction"),
+        )
+        .orderBy("path", "type_class")
+    )
+
+
+# --------------------------------------------------------------------
+# seasonal_naive_backtest
+# --------------------------------------------------------------------
+
+_SN_DAY_US = 86_400_000_000
+_SN_LAG = 7  # the seasonal-naive lag (weekly seasonality)
+
+
+def _backtest_oracle() -> str:
+    return f"""
+    WITH daily AS (
+      SELECT event_type,
+             epoch_us(CAST(ts AS TIMESTAMP)) // {_SN_DAY_US} AS day,
+             SUM(CAST(value AS DECIMAL(20,6))) AS actual
+      FROM events GROUP BY 1, 2
+    ),
+    joined AS (
+      SELECT d.event_type, d.day, d.actual, p.actual AS forecast
+      FROM daily d
+      JOIN daily p ON p.event_type = d.event_type
+                  AND p.day = d.day - {_SN_LAG}
+    ),
+    per_type AS (
+      SELECT event_type,
+             COUNT(*) AS n_eval,
+             SUM(ABS(actual - forecast)) AS abs_err,
+             SUM(actual - forecast) AS err
+      FROM joined GROUP BY event_type
+    ),
+    days AS (
+      SELECT event_type, COUNT(*) AS n_days FROM daily GROUP BY 1
+    )
+    SELECT p.event_type,
+           CAST(d.n_days AS BIGINT) AS n_days,
+           CAST(p.n_eval AS BIGINT) AS n_eval,
+           {sql_round_div('p.abs_err', 'p.n_eval')} AS mae,
+           {sql_round_div('p.err', 'p.n_eval')} AS bias
+    FROM per_type p JOIN days d USING (event_type)
+    ORDER BY p.event_type
+    """
+
+
+@register(
+    "seasonal_naive_backtest",
+    _backtest_oracle(),
+    doc="forecast backtesting — the evaluation loop every metrics "
+    "platform runs before trusting a model: the seasonal-naive "
+    "baseline forecast(d) = actual(d - 7) per series (the benchmark "
+    "every real forecaster must beat, per the M-competitions), "
+    "scored with MAE and signed bias. Daily actuals are exact "
+    "DECIMAL sums (order-independent), the error aggregates stay "
+    "DECIMAL end-to-end, and each output metric takes ONE terminal "
+    "rounding through the shared decimal route — no float "
+    "reassociation anywhere. Day buckets are epoch_us div 86400000000 (integer truncation on both engines), "
+    "timezone-free integers. Only days with an "
+    "observation 7 days prior are evaluable — n_eval vs n_days makes "
+    "the coverage explicit rather than silently imputing. 100 TB "
+    "shape: one hash aggregate to daily grain (map-side combine "
+    "collapses events before any shuffle), one self equi-join on "
+    "(series, day-7) at DAILY grain — series x days rows, thousands "
+    "of times smaller than the event stream — then a series-keyed "
+    "fold; persist the daily table and successive backtests never "
+    "rescan raw events.",
+)
+def seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = t(spark, sf_dir, "events").select(
+        "event_type",
+        # integer `div` matches DuckDB's integer // (both truncate
+        # toward zero) for ALL inputs incl. pre-1970 ts
+        F.expr(f"unix_micros(ts) div {_SN_DAY_US}").alias("day"),
+        "value",
+    )
+    daily = ev.groupBy("event_type", "day").agg(
+        F.sum(F.col("value").cast("decimal(20,6)")).alias("actual")
+    )
+    prev = daily.select(
+        "event_type",
+        (F.col("day") + _SN_LAG).alias("day"),
+        F.col("actual").alias("forecast"),
+    )
+    joined = daily.join(prev, ["event_type", "day"])
+    per_type = joined.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("long").alias("n_eval"),
+        F.sum(F.abs(F.col("actual") - F.col("forecast"))).alias(
+            "abs_err"
+        ),
+        F.sum(F.col("actual") - F.col("forecast")).alias("err"),
+    )
+    days = daily.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("long").alias("n_days")
+    )
+    return (
+        per_type.join(days, "event_type")
+        .select(
+            "event_type",
+            "n_days",
+            "n_eval",
+            round_div(F.col("abs_err"), F.col("n_eval")).alias("mae"),
+            round_div(F.col("err"), F.col("n_eval")).alias("bias"),
+        )
+        .orderBy("event_type")
     )

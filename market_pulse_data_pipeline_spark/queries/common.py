@@ -9,6 +9,10 @@ double and rounding then yields bit-identical results on both sides.
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
+import tempfile
 from dataclasses import dataclass
 from typing import Callable
 
@@ -45,6 +49,22 @@ def register(
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
+
+
+# Per-process scratch root for queries that write files: an oracle
+# f-string and its Spark function share the path within one process,
+# while concurrent harness processes get distinct roots. Content is
+# fully deterministic; only the location varies. Removed at exit.
+SCRATCH_ROOT = os.path.join(tempfile.gettempdir(), f"mp_scratch_{os.getpid()}")
+atexit.register(shutil.rmtree, SCRATCH_ROOT, ignore_errors=True)
+
+
+def scratch(name: str) -> str:
+    """An emptied ``SCRATCH_ROOT/name`` path (names are unique across
+    the query modules)."""
+    path = os.path.join(SCRATCH_ROOT, name)
+    shutil.rmtree(path, ignore_errors=True)
+    return path
 
 
 def exact_sum(col: Column, scale: int = 6) -> Column:

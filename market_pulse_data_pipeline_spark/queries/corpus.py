@@ -9,6 +9,117 @@ aggregate broadcast), so each hash-checks against a DuckDB oracle.
 
 None of these exist in the reference (its corpus is 10 stock symbols);
 they are north-star extensions in the sense of SURVEY §2.6.
+
+- ``domain_frequency_cap`` — C4/CCNet-style per-source document cap
+  with a deterministic quality priority (n_chars DESC, doc_id ASC):
+  the anti-boilerplate step that bounds any one domain's share of the
+  training mix. Distinct from ``stratified_sample_per_lang``
+  (proportional sampling) and ``quota_largest_remainder``
+  (budget apportionment): a cap is an absolute per-key ceiling.
+- ``mixture_temperature_weights`` — temperature-based mixture
+  re-weighting (the multilingual sampling recipe of mBERT / XLM-R,
+  Devlin et al. 2019 appendix, Conneau et al. 2020: sample languages
+  ∝ p^α to up-weight low-resource ones). α = 0.5, so the re-weight is
+  ``sqrt`` — correctly-rounded IEEE, bit-identical across engines —
+  and the normalization runs through the exact-decimal sum + decimal
+  quotient route, so every emitted weight hash-matches. Emits per
+  language: document count, raw share p, temperature weight, and the
+  up/down-sampling factor weight/p.
+- ``perplexity_stratified_sample`` — the sampling step CCNet actually
+  executes after bucketing: compose the registered
+  ``ccnet_perplexity_buckets`` terciles with the registered
+  content-free md5 Bernoulli idiom (bernoulli_sample_hash) into
+  per-bucket keep rates (head 100%, middle 50%, tail ~10%) — the
+  standard keep-the-fluent-half recipe, deterministic and
+  repartition-stable, no RNG state.
+- ``doremi_excess_loss_reweight`` — DoReMi-style domain reweighting
+  (Xie et al. 2023): up-weight domains whose proxy loss exceeds the
+  corpus reference, one exponentiated-gradient step linearized into
+  exact integer milli-arithmetic. The registry's model-free bigram
+  fluency plays the proxy loss (the real algorithm plugs in a small
+  trained model's per-domain excess loss — the SOLVER shape is what
+  this operator contributes).
+- ``curriculum_pack_easy_first`` — curriculum-ordered sequence
+  packing: ``token_budget_packing``'s running-sum pack assignment,
+  but ordered easy → hard per language (integer milli avg-token-
+  length as the difficulty proxy) so early packs hold the easiest
+  documents — the standard length-curriculum recipe, fully
+  deterministic (integer sort key + id tiebreak).
+- ``rendezvous_shard_assignment`` — deterministic doc→shard placement
+  by Highest-Random-Weight hashing (Thaler & Ravishankar 1996, the
+  classic rendezvous scheme): every document independently scores all
+  S shards with an integer hash and takes the argmax. The property
+  that matters for a training pipeline: when a shard is removed, ONLY
+  the documents that lived on it move (pinned in tests) — re-sharding
+  a 100 TB corpus touches 1/S of it, not all of it.
+- ``dsir_importance_resample`` — Data Selection via Importance
+  Resampling (Xie et al., NeurIPS 2023): score every raw document by
+  how target-like its hashed-bigram feature distribution is, then
+  Bernoulli-accept proportionally to the (capped) importance ratio.
+  Linearized into exact integer micro-arithmetic the way the
+  registered ``doremi_excess_loss_reweight`` linearizes exponentiated
+  gradients: per-bucket Laplace-smoothed probability RATIOS quantized
+  to integer micro via the decimal route (no log, no float boundary),
+  a per-doc integer sum, and the registered content-free md5-Bernoulli
+  acceptance with an integer cross-multiplied keep rule.
+- ``categorical_dictionary_encode`` — the dictionary/label-encoding
+  step every feature and tokenizer pipeline runs: dense integer ids
+  over a categorical domain, frequency-ranked (count DESC, value ASC
+  — the tokenizer-vocab convention), plus encoded-corpus evidence
+  (per-id counts and an md5 over the decoded round-trip concat that
+  witnesses bijectivity in the compared bytes). The only sort is
+  over the DISTINCT domain — vocabulary-bounded, the registry's
+  sanctioned exception to the unpartitioned-window ban.
+- ``unimax_epoch_cap_allocation`` — UniMax-style source sampling
+  (Chung et al. 2023, "UniMax: Fairer and More Effective Language
+  Sampling for Large-Scale Multilingual Pretraining"): allocate a
+  token budget across sources as uniformly as possible subject to
+  per-source repetition caps (cap_s = epoch-limit x source tokens).
+  The exact integer waterfill: sources ordered by (cap, source), a
+  source is capped iff prefix_i + cap_i*(K - rank_i) <= B (the
+  per-row predicate equals the sequential fill because that left-hand
+  side is monotone in rank), survivors split the remainder by integer DIV
+  with largest-remainder ties to the smallest caps — allocations sum
+  to B EXACTLY (pytest-pinned). Completes the mixture family
+  (source_mixture_weights, mixture_temperature_weights, DoReMi,
+  DSIR) with the budget-constrained variant production actually runs.
+- ``harmonic_size_class_packing`` — the ``token_budget_packing``
+  upgrade: greedy in-order packing (pack_id = floor(cumsum/budget))
+  fills bins with whatever arrives, wasting tail capacity exactly the
+  way "Fewer Truncations Improve Language Modeling" (Ding et al.
+  2024) shows hurts training. Exact best-fit-decreasing is inherently
+  sequential (each placement depends on every open bin), so the
+  scalable form is the HARMONIC algorithm (Lee & Lee 1985): classify
+  each document into size class k = capacity div length — every item
+  in class k satisfies k·len <= capacity, so exactly k of them fill a
+  bin — then within (lang, class) rank by length descending and
+  assign bin = (rank-1) div k. Fully closed-form (two partitioned
+  windows, zero driver state, zero sequential dependence), provably
+  never overflows a bin, and ceil(n/k) bins per class is OPTIMAL
+  within the class. The compared bytes carry every per-doc
+  assignment plus per-bin fill/slack, so the no-overflow contract and
+  the class algebra are both value-hashed.
+- ``zipf_token_frequency_profile`` — corpus-shape diagnostics: the
+  token frequency spectrum per language — type counts per log2
+  frequency bucket (the portable integer form of the Zipf
+  rank-frequency plot: bucket = len(bin(freq)) - 1, exact in both
+  engines), plus vocabulary size, total tokens, hapax/dis legomena
+  counts and the type-token ratio. Templated or machine-generated
+  corpora show anomalous spectra (missing hapax mass, truncated
+  tails) — this is the health check corpus curation runs before
+  trusting language-level mixtures. Aggregate-only: no window
+  anywhere.
+- ``heaps_vocab_growth_curve`` — the second corpus LAW next to the
+  Zipf spectrum (Heaps/Herdan: vocabulary grows ~ K·n^β): cumulative
+  vocabulary size at each corpus-prefix decile, computed EXACTLY
+  without any running-distinct machinery — a token's first occurrence
+  doc (one hash aggregate) makes vocab(prefix) a simple count of
+  first-occurrences at or below the cutoff. Templated/synthetic
+  corpora flatten early; a real crawl keeps growing — this is the
+  diagnostic that catches a corpus whose "new" shards add no new
+  content. Planted never-seen tokens (every 13th doc) keep the
+  fixture curve strictly increasing, so the first-occurrence algebra
+  is live in every compared row instead of saturating in decile 1.
 """
 
 from __future__ import annotations
@@ -22,6 +133,7 @@ from market_pulse_data_pipeline_spark.queries.common import (
     sql_round_div,
     t,
 )
+from market_pulse_data_pipeline_spark.queries.quality import _H60_SQL, _h60
 
 _VOCAB_K = 200
 
@@ -928,4 +1040,1440 @@ def vocab_top_p_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.lit(100) * F.col("cum_before") < _TOPP_PCT * F.col("tot"))
         .select("lang", "token", "n", "rnk")
+    )
+
+
+# --------------------------------------------------------------------
+# domain_frequency_cap
+# --------------------------------------------------------------------
+
+_CAP = 15  # max docs per source (each source has 25 at the fixture SFs)
+
+
+@register(
+    "domain_frequency_cap",
+    f"""
+    WITH ranked AS (
+      SELECT source, n_chars,
+             ROW_NUMBER() OVER (PARTITION BY source
+                                ORDER BY n_chars DESC, doc_id) AS rk
+      FROM documents
+    )
+    SELECT source,
+           CAST(COUNT(*) AS BIGINT) AS n_docs,
+           CAST(SUM(CASE WHEN rk <= {_CAP} THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_kept,
+           CAST(SUM(CASE WHEN rk > {_CAP} THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_dropped,
+           CAST(SUM(CASE WHEN rk <= {_CAP} THEN n_chars ELSE 0 END)
+                AS BIGINT) AS chars_kept
+    FROM ranked
+    GROUP BY source
+    ORDER BY source
+    """,
+    doc="C4/CCNet-style per-domain frequency cap: keep at most 15 docs "
+    "per source under a deterministic quality priority (n_chars DESC, "
+    "doc_id ASC tiebreak) — the ceiling that stops one boilerplate-"
+    "heavy domain from dominating the mix, distinct from proportional "
+    "sampling (stratified_sample_per_lang) and budget apportionment "
+    "(quota_largest_remainder). One shuffle on source for the window "
+    "rank, then a per-source aggregate; at 100 TB a skewed domain is "
+    "exactly the case the cap exists for — the rank only needs each "
+    "source's top CAP rows, which Spark's window TopK/rank pushdown "
+    "bounds, and the output is one row per domain.",
+)
+def domain_frequency_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = t(spark, sf_dir, "documents")
+    w = Window.partitionBy("source").orderBy(
+        F.desc("n_chars"), F.asc("doc_id")
+    )
+    ranked = docs.select(
+        "source", "n_chars", F.row_number().over(w).alias("rk")
+    )
+    kept = F.col("rk") <= _CAP
+    return (
+        ranked.groupBy("source")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum(F.when(kept, 1).otherwise(0)).alias("n_kept"),
+            F.sum(F.when(~kept, 1).otherwise(0)).alias("n_dropped"),
+            F.sum(F.when(kept, F.col("n_chars")).otherwise(0)).alias(
+                "chars_kept"
+            ),
+        )
+        .orderBy("source")
+    )
+
+
+# --------------------------------------------------------------------
+# mixture_temperature_weights
+# --------------------------------------------------------------------
+
+# α = 0.5 exactly so the re-weight is sqrt — correctly-rounded IEEE,
+# hence bit-identical across engines (a general pow(x, 0.3) is NOT
+# correctly rounded everywhere and could diverge in the last ulp)
+
+
+@register(
+    "mixture_temperature_weights",
+    f"""
+    WITH counts AS (
+      SELECT lang, COUNT(*) AS n FROM documents GROUP BY lang
+    ),
+    shares AS (
+      SELECT lang, n,
+             CAST(n AS DOUBLE) / (SELECT SUM(n) FROM counts) AS p,
+             CAST(sqrt(CAST(n AS DOUBLE) / (SELECT SUM(n) FROM counts))
+                  AS DECIMAL(28,12)) AS sq
+      FROM counts
+    )
+    SELECT lang,
+           CAST(n AS BIGINT) AS n_docs,
+           {sql_round_div("p", "1")} AS p_raw,
+           {sql_round_div(
+        "CAST(sq AS DOUBLE)",
+        "CAST((SELECT SUM(sq) FROM shares) AS DOUBLE)",
+        6,
+    )} AS weight,
+           {sql_round_div(
+        "CAST(sq AS DOUBLE)"
+        " / CAST((SELECT SUM(sq) FROM shares) AS DOUBLE)",
+        "p",
+        6,
+    )} AS boost
+    FROM shares
+    ORDER BY lang
+    """,
+    doc="temperature-based mixture re-weighting (the multilingual "
+    "sampling recipe of mBERT/XLM-R: sample languages proportional to "
+    "p^alpha, alpha=0.5, to up-weight low-resource languages without "
+    "drowning high-resource ones). alpha=0.5 makes the re-weight "
+    "sqrt — correctly-rounded IEEE, bit-identical on both engines — "
+    "and the normalization runs each sqrt through DECIMAL(28,12) "
+    "snapping so the cross-language sum is order-independent and "
+    "exact. Emits per language: doc count, raw share p, temperature "
+    "weight, and the up/down-sampling factor weight/p (the number a "
+    "sampler multiplies into per-language inclusion probabilities). "
+    "100 TB shape: one count aggregate on the |langs|-bounded key; "
+    "everything after is arithmetic on a handful of rows.",
+)
+def mixture_temperature_weights(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    docs = t(spark, sf_dir, "documents")
+    counts = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
+    # the unpartitioned window runs over the |langs|-bounded counts
+    # table (a handful of rows by construction), not the corpus — the
+    # WindowExec single-partition warning is expected and scale-safe
+    tot = Window.rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
+    shares = counts.select(
+        "lang",
+        "n",
+        (F.col("n").cast("double") / F.sum("n").over(tot)).alias("p"),
+    ).withColumn("sq", F.sqrt(F.col("p")).cast("decimal(28,12)"))
+    denom = F.sum("sq").over(tot).cast("double")
+    return shares.select(
+        "lang",
+        F.col("n").cast("long").alias("n_docs"),
+        round_div(F.col("p"), F.lit(1)).alias("p_raw"),
+        round_div(F.col("sq").cast("double"), denom, 6).alias("weight"),
+        round_div(
+            F.col("sq").cast("double") / denom, F.col("p"), 6
+        ).alias("boost"),
+    ).orderBy("lang")
+
+
+# --------------------------------------------------------------------
+# perplexity_stratified_sample
+# --------------------------------------------------------------------
+
+# per-bucket keep rates via the registered content-free md5 Bernoulli
+# idiom (two-hex-digit buckets, 256 cells): head keeps everything,
+# middle keeps <= '7f' (128/256 = 50%), tail keeps <= '19'
+# (26/256 ~ 10.2%)
+_PS_MIDDLE_HEX = "7f"
+_PS_TAIL_HEX = "19"
+
+
+def _stratified_oracle() -> str:
+    from market_pulse_data_pipeline_spark.queries.quality import (  # noqa: PLC0415
+        _CCNET_SCORE_SQL,
+    )
+
+    return (
+        _CCNET_SCORE_SQL
+        + f"""
+    SELECT doc_id, lang, bucket,
+           CASE bucket
+             WHEN 'head' THEN TRUE
+             WHEN 'middle' THEN
+               substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) <= '{_PS_MIDDLE_HEX}'
+             ELSE
+               substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) <= '{_PS_TAIL_HEX}'
+           END AS sampled
+    FROM (
+      SELECT lang, doc_id,
+             CASE tile WHEN 1 THEN 'head' WHEN 2 THEN 'middle'
+                       ELSE 'tail' END AS bucket
+      FROM (
+        SELECT lang, doc_id,
+               NTILE(3) OVER (PARTITION BY lang
+                              ORDER BY mean_inv_p, doc_id) AS tile
+        FROM scored
+      )
+    )
+    ORDER BY doc_id
+    """
+    )
+
+
+@register(
+    "perplexity_stratified_sample",
+    _stratified_oracle(),
+    doc="perplexity-stratified sampling — the sampling step CCNet "
+    "actually EXECUTES after bucketing (Wenzek et al. keep head+"
+    "middle; production mixes keep graded fractions): compose the "
+    "registered ccnet_perplexity_buckets terciles with the registered "
+    "content-free md5 Bernoulli idiom into per-bucket keep rates "
+    "(head 100%, middle 50%, tail ~10.2%). Deterministic, seedless, "
+    "repartition-stable, and NESTED — lowering a rate keeps a subset "
+    "of the old sample, so mix ablations are monotone. Emits every "
+    "doc with its bucket and sampled flag. 100 TB shape: the bucket "
+    "stage is the driver-green fluency aggregate + one per-lang "
+    "window; the sample gate is a pure map-side filter expression — "
+    "no new shuffle at all.",
+)
+def perplexity_stratified_sample(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    from market_pulse_data_pipeline_spark.queries.quality import (  # noqa: PLC0415
+        ccnet_perplexity_buckets,
+    )
+
+    buck = ccnet_perplexity_buckets(spark, sf_dir)
+    hexb = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
+    sampled = (
+        F.when(F.col("bucket") == "head", F.lit(True))
+        .when(F.col("bucket") == "middle", hexb <= _PS_MIDDLE_HEX)
+        .otherwise(hexb <= _PS_TAIL_HEX)
+    )
+    return buck.select(
+        "doc_id", "lang", "bucket", sampled.alias("sampled")
+    ).orderBy("doc_id")
+
+
+# --------------------------------------------------------------------
+# doremi_excess_loss_reweight
+# --------------------------------------------------------------------
+
+_DM_CAP_MILLI = 1000  # multiplier cap: factor in [1.0, 2.0]
+
+
+def _doremi_oracle() -> str:
+    from market_pulse_data_pipeline_spark.queries.quality import (  # noqa: PLC0415
+        _CCNET_SCORE_SQL,
+    )
+
+    # scored (doc_id, lang, mean_inv_p) comes from the shared CCNet
+    # fluency chain; source rides back in via a doc_id join
+    return (
+        _CCNET_SCORE_SQL
+        + f""",
+    bysrc AS (
+      SELECT d.source,
+             COUNT(*) AS n_docs,
+             {sql_round_div(
+            'CAST(SUM(CAST(s.mean_inv_p AS DECIMAL(20,6))) AS DOUBLE)',
+            'COUNT(*)',
+        )} AS domain_loss
+      FROM scored s JOIN documents d USING (doc_id)
+      GROUP BY d.source
+    ),
+    ref AS (
+      SELECT {sql_round_div(
+            'CAST(SUM(CAST(mean_inv_p AS DECIMAL(20,6))) AS DOUBLE)',
+            'COUNT(*)',
+        )} AS corpus_loss
+      FROM scored
+    ),
+    stepped AS (
+      SELECT source, n_docs, domain_loss,
+             CAST(ROUND((CAST(domain_loss AS DECIMAL(20,6))
+                         - CAST(corpus_loss AS DECIMAL(20,6))) * 1000, 0)
+                  AS BIGINT) AS excess_milli
+      FROM bysrc, ref
+    ),
+    factored AS (
+      SELECT source, n_docs, domain_loss, excess_milli,
+             1000 + LEAST({_DM_CAP_MILLI}, GREATEST(0, excess_milli))
+               AS factor_milli
+      FROM stepped
+    )
+    SELECT source, CAST(n_docs AS BIGINT) AS n_docs, domain_loss,
+           excess_milli, CAST(factor_milli AS BIGINT) AS factor_milli,
+           {sql_round_div(
+            'n_docs * factor_milli * 1.0',
+            'SUM(n_docs * factor_milli) OVER ()', 6,
+        )} AS weight
+    FROM factored
+    ORDER BY source
+    """
+    )
+
+
+@register(
+    "doremi_excess_loss_reweight",
+    _doremi_oracle(),
+    doc="DoReMi-style domain reweighting (Xie et al. 2023): up-weight "
+    "domains whose proxy loss EXCEEDS the corpus reference — the "
+    "higher a domain's excess loss, the more the next mix samples it. "
+    "One exponentiated-gradient step, linearized and capped into "
+    "exact integer milli-arithmetic (factor = 1 + clip(excess, 0, 1), "
+    "weights = n_docs x factor normalized through the decimal-"
+    "quotient route), so every emitted weight is bit-identical "
+    "cross-engine — no exp(), no float boundary. The registry's "
+    "model-free bigram fluency plays the proxy loss; the real "
+    "algorithm plugs a small trained model's per-domain excess loss "
+    "into the same solver shape, and iterates — each iteration is "
+    "this ONE bounded aggregate, so T iterations cost T |domains|-"
+    "bounded passes, never a corpus rescan. 100 TB shape: the corpus "
+    "work is the driver-green fluency chain; everything after is "
+    "|domains|-bounded (one hash aggregate + a 1-row reference "
+    "broadcast).",
+)
+def doremi_excess_loss_reweight(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    from market_pulse_data_pipeline_spark.queries.quality import (  # noqa: PLC0415
+        ccnet_perplexity_buckets,
+    )
+
+    # reuse the registered bucket op's scored stage by recomputing the
+    # fluency signal: ccnet_perplexity_buckets exposes (doc_id, lang,
+    # mean_inv_p) among its outputs — the per-doc fluency this solver
+    # consumes; source rides back in via a doc_id join
+    docs = t(spark, sf_dir, "documents").select("doc_id", "source")
+    # materialize the proxy-loss scores once: the fluency pipeline
+    # behind ccnet_perplexity_buckets is the expensive stage and BOTH
+    # aggregates below (per-domain and corpus reference) consume it —
+    # the lazy form re-ran the whole scoring pipeline for each
+    # (14 document scans in the audited plan otherwise)
+    scored = ccnet_perplexity_buckets(spark, sf_dir).select(
+        "doc_id", "mean_inv_p"
+    ).localCheckpoint()
+    dec = F.col("mean_inv_p").cast("decimal(20,6)")
+    bysrc = (
+        scored.join(docs, "doc_id")
+        .groupBy("source")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            round_div(
+                F.sum(dec).cast("double"), F.count(F.lit(1))
+            ).alias("domain_loss"),
+        )
+    )
+    ref = scored.agg(
+        round_div(F.sum(dec).cast("double"), F.count(F.lit(1))).alias(
+            "corpus_loss"
+        )
+    )
+    excess = F.round(
+        (
+            F.col("domain_loss").cast("decimal(20,6)")
+            - F.col("corpus_loss").cast("decimal(20,6)")
+        )
+        * 1000,
+        0,
+    ).cast("long")
+    stepped = bysrc.crossJoin(F.broadcast(ref)).select(
+        "source",
+        "n_docs",
+        "domain_loss",
+        excess.alias("excess_milli"),
+    )
+    factor = F.lit(1000) + F.least(
+        F.lit(_DM_CAP_MILLI), F.greatest(F.lit(0), F.col("excess_milli"))
+    )
+    factored = stepped.withColumn("factor_milli", factor.cast("long"))
+    # normalization total via the scalar-join idiom (broadcast of a
+    # 1-row aggregate) instead of an unpartitioned window — same 20-row
+    # input, but no single-partition WindowExec in the plan
+    total_df = factored.agg(
+        F.sum(F.col("n_docs") * F.col("factor_milli")).alias("_total")
+    )
+    return (
+        factored.crossJoin(F.broadcast(total_df))
+        .select(
+            "source",
+            F.col("n_docs").cast("long").alias("n_docs"),
+            "domain_loss",
+            "excess_milli",
+            "factor_milli",
+            round_div(
+                F.col("n_docs") * F.col("factor_milli") * 1.0,
+                F.col("_total"),
+                6,
+            ).alias("weight"),
+        )
+        .orderBy("source")
+    )
+
+
+# --------------------------------------------------------------------
+# curriculum_pack_easy_first
+# --------------------------------------------------------------------
+
+_CU_BUDGET = 512  # tokens per pack (token_budget_packing's unit)
+
+
+def _curriculum_oracle() -> str:
+    return f"""
+    SELECT doc_id, lang, difficulty_milli, n_tokens,
+           CAST(FLOOR((cum_tokens - n_tokens) / {_CU_BUDGET}) AS BIGINT)
+             AS pack_id
+    FROM (
+      SELECT doc_id, lang, difficulty_milli, n_tokens,
+             SUM(n_tokens) OVER (
+               PARTITION BY lang
+               ORDER BY difficulty_milli, doc_id
+               ROWS UNBOUNDED PRECEDING) AS cum_tokens
+      FROM (
+        SELECT doc_id, lang,
+               CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
+               ((n_chars - len(string_split(text, ' ')) + 1) * 1000)
+                 // len(string_split(text, ' ')) AS difficulty_milli
+        FROM documents)
+    )
+    ORDER BY doc_id
+    """
+
+
+@register(
+    "curriculum_pack_easy_first",
+    _curriculum_oracle(),
+    doc="curriculum-ordered sequence packing: token_budget_packing's "
+    "running-sum pack assignment, but per language the documents are "
+    "ordered EASY -> HARD before packing (difficulty proxy = average "
+    "token length in integer millis — floor division, so the sort key "
+    "is exact on both engines — with doc_id as the total-order "
+    "tiebreak). Early packs then hold the easiest documents: the "
+    "standard length-curriculum recipe for LLM training, fully "
+    "deterministic and seedless. Swapping the difficulty expression "
+    "for a model score changes one line. 100 TB shape: ONE window "
+    "shuffle partitioned by the class key (same as the registered "
+    "packer); the difficulty key is a map-side projection, and no "
+    "global sort exists — ordering is per-language inside the "
+    "window partition.",
+)
+def curriculum_pack_easy_first(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    docs = t(spark, sf_dir, "documents")
+    n_tok = F.size(F.split("text", " "))
+    diff = F.expr(
+        "((n_chars - size(split(text, ' ')) + 1) * 1000)"
+        " div size(split(text, ' '))"
+    )
+    base = docs.select(
+        "doc_id",
+        "lang",
+        n_tok.cast("long").alias("n_tokens"),
+        diff.alias("difficulty_milli"),
+    )
+    w = (
+        Window.partitionBy("lang")
+        .orderBy("difficulty_milli", "doc_id")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    return base.select(
+        "doc_id",
+        "lang",
+        "difficulty_milli",
+        "n_tokens",
+        F.floor(
+            (F.sum("n_tokens").over(w) - F.col("n_tokens")) / _CU_BUDGET
+        )
+        .cast("long")
+        .alias("pack_id"),
+    ).orderBy("doc_id")
+
+
+# --------------------------------------------------------------------
+# rendezvous_shard_assignment
+# --------------------------------------------------------------------
+
+_RV_SHARDS = 16  # shard count S; scores are per-(doc, shard) hashes
+
+
+def _rv_score_sql(doc: str, shard: str) -> str:
+    # portable 60-bit score: first 15 hex digits of md5("doc:shard")
+    return (
+        f"(('0x' || substring(md5(CAST({doc} AS VARCHAR) || ':' || "
+        f"CAST({shard} AS VARCHAR)), 1, 15))::BIGINT)"
+    )
+
+
+def _rendezvous_oracle() -> str:
+    score = _rv_score_sql("d.doc_id", "g.s")
+    return f"""
+    WITH scored AS (
+      SELECT d.doc_id,
+             len(string_split(d.text, ' ')) AS n_tokens,
+             g.s AS shard, {score} AS score
+      FROM documents d
+      CROSS JOIN (SELECT UNNEST(range(0, {_RV_SHARDS})) AS s) g
+    ),
+    best AS (
+      SELECT doc_id, n_tokens, shard,
+             ROW_NUMBER() OVER (
+               PARTITION BY doc_id ORDER BY score DESC, shard ASC
+             ) AS rn
+      FROM scored
+    )
+    SELECT doc_id, CAST(shard AS BIGINT) AS shard,
+           CAST(n_tokens AS BIGINT) AS n_tokens
+    FROM best WHERE rn = 1
+    ORDER BY doc_id
+    """
+
+
+@register(
+    "rendezvous_shard_assignment",
+    _rendezvous_oracle(),
+    doc="deterministic doc->shard placement by Highest-Random-Weight "
+    "(rendezvous) hashing (Thaler & Ravishankar 1996): every document "
+    "independently scores all S=16 shards with the portable 60-bit "
+    "md5 hash of 'doc_id:shard' and takes the argmax under the total "
+    "order (score DESC, shard ASC). THE property a training pipeline "
+    "wants from its sharder: removing a shard remaps ONLY the "
+    "documents that lived on it (each survivor's argmax over the "
+    "remaining shards is unchanged) — re-sharding a 100 TB corpus "
+    "moves 1/S of it, where mod-S hashing moves (S-1)/S. The "
+    "monotonicity contract is pinned in tests by recomputing the "
+    "assignment with shard 7 deleted. 100 TB shape: pure map-side "
+    "(the S scores are a per-row transform over a literal sequence, "
+    "argmax via one array_max over (score, shard) structs); zero "
+    "shuffle, zero state — any executor can place any document "
+    "without coordination.",
+)
+def rendezvous_shard_assignment(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    from market_pulse_data_pipeline_spark.functions.dedup import (  # noqa: PLC0415
+        portable_hash60,
+    )
+
+    docs = t(spark, sf_dir, "documents").select("doc_id", "text")
+    score = lambda s: portable_hash60(  # noqa: E731
+        F.concat(
+            F.col("doc_id").cast("string"), F.lit(":"), s.cast("string")
+        )
+    )
+    # argmax via array_max over (score, -shard) structs: struct
+    # comparison is lexicographic, so ties (impossible for a 60-bit
+    # hash in practice, but the order is total anyway) resolve to the
+    # SMALLEST shard — the same (score DESC, shard ASC) order the
+    # oracle's ROW_NUMBER uses
+    best = F.array_max(
+        F.transform(
+            F.sequence(F.lit(0), F.lit(_RV_SHARDS - 1)),
+            lambda s: F.struct(
+                score(s).alias("score"), (-s).alias("negs")
+            ),
+        )
+    )
+    return (
+        docs.select(
+            "doc_id",
+            (-best["negs"]).cast("long").alias("shard"),
+            F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
+        )
+        .orderBy("doc_id")
+    )
+
+
+# --------------------------------------------------------------------
+# dsir_importance_resample
+# --------------------------------------------------------------------
+
+_DS_B = 128  # hashed-bigram feature buckets (DSIR uses 10k; B-bounded)
+_DS_TARGET_LANG = "en"  # the target distribution: English documents
+_DS_CAP_MICRO = 10_000_000  # per-bucket ratio clip at 10.0 (DSIR clips
+# importance weights so one rare feature can't dominate a doc score)
+_DS_KEEP_DEN = 2_000_000  # keep prob = avg_ratio / 2, clipped at 1:
+# u/2^24 < score_micro/(nb*2e6)  <=>  u*nb*2e6 < score_micro*2^24
+_DS_U_MAX = 16**6  # 6 hex digits of md5 -> uniform in [0, 2^24)
+
+
+def _dsir_oracle() -> str:
+    bucket = _H60_SQL.format(e="bg")
+    u = (
+        "(('0x' || substring(md5('dsir:' || CAST(doc_id AS VARCHAR)), 1, 6))"
+        "::BIGINT)"
+    )
+    return f"""
+    WITH tokd AS (
+      SELECT doc_id, lang, string_split(text, ' ') AS ws
+      FROM documents
+      WHERE len(string_split(text, ' ')) >= 2
+    ),
+    big AS (
+      SELECT doc_id, lang,
+             ({bucket}) % {_DS_B} AS bucket
+      FROM (
+        SELECT doc_id, lang,
+               UNNEST(list_transform(range(1, len(ws)),
+                                     i -> ws[i] || ' ' || ws[i + 1])) AS bg
+        FROM tokd
+      )
+    ),
+    bstats AS (
+      SELECT bucket,
+             COUNT(*) AS cr,
+             SUM(CASE WHEN lang = '{_DS_TARGET_LANG}' THEN 1 ELSE 0 END)
+               AS ct
+      FROM big GROUP BY bucket
+    ),
+    tot AS (
+      SELECT SUM(cr) AS tr, SUM(ct) AS tt FROM bstats
+    ),
+    ratio AS (
+      SELECT b.bucket,
+             LEAST(CAST(ROUND(CAST(
+               ((b.ct + 1) * (t.tr + {_DS_B})) * 1.0
+                 / ((b.cr + 1) * (t.tt + {_DS_B}))
+               AS DECIMAL(28,10)) * 1000000, 0) AS BIGINT),
+               {_DS_CAP_MICRO}) AS micro
+      FROM bstats b, tot t
+    ),
+    dsc AS (
+      SELECT g.doc_id, MIN(g.lang) AS lang,
+             CAST(COUNT(*) AS BIGINT) AS n_bigrams,
+             CAST(SUM(r.micro) AS BIGINT) AS score_micro
+      FROM big g JOIN ratio r USING (bucket)
+      GROUP BY g.doc_id
+    )
+    SELECT doc_id, lang, n_bigrams, score_micro,
+           {sql_round_div('score_micro * 1.0', 'n_bigrams * 1000000.0')}
+             AS avg_ratio,
+           ({u}) * n_bigrams * {_DS_KEEP_DEN}
+             < score_micro * {_DS_U_MAX} AS kept
+    FROM dsc
+    ORDER BY doc_id
+    """
+
+
+@register(
+    "dsir_importance_resample",
+    _dsir_oracle(),
+    doc="DSIR importance resampling (Xie et al., NeurIPS 2023): raw "
+    "documents are scored by the likelihood ratio a hashed-bigram "
+    "bag-of-features model assigns target-vs-raw, then kept with "
+    "probability proportional to the ratio — the principled way to "
+    "tilt a 100 TB crawl toward a target domain without training a "
+    "classifier. Target = lang='en' docs; features = bigrams hashed "
+    "into 128 buckets (portable md5-60); per-bucket Laplace-smoothed "
+    "probability RATIO quantized to integer micro through the decimal "
+    "half-up route and clipped at 10x (DSIR's weight clip), so no log "
+    "and no float boundary exists on either engine; per-doc score = "
+    "exact integer sum over its bigram stream; acceptance = the "
+    "registered md5-Bernoulli idiom with an integer cross-multiplied "
+    "rule (u*nb*2e6 < score*2^24 — keep prob = avg_ratio/2 capped at "
+    "1). Deviation from the paper, documented: the per-doc aggregate "
+    "is the SUM of per-feature ratios rather than the sum of "
+    "log-ratios — the same monotone linearization the registered "
+    "doremi_excess_loss_reweight applies to exponentiated gradients, "
+    "chosen because ln() is not bit-portable across engines. "
+    "100 TB shape: one B-bounded bucket aggregate (map-side combine), "
+    "the 128-row ratio table broadcast back onto the bigram stream, "
+    "one doc-keyed aggregate, map-only accept — cost linear in corpus "
+    "bigrams. The bucket products stay exact doubles below 2^53; past "
+    "~10^15 corpus bigrams route the ratio through DECIMAL(38) "
+    "products (documented escalation).",
+)
+def dsir_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from market_pulse_data_pipeline_spark.functions.dedup import (  # noqa: PLC0415
+        fan_out,
+    )
+
+    docs = t(spark, sf_dir, "documents").select("doc_id", "lang", "text")
+    tokd = (
+        fan_out(docs)
+        .select("doc_id", "lang", F.split("text", " ").alias("ws"))
+        .filter(F.size("ws") >= 2)
+    )
+    bg = F.transform(
+        F.sequence(F.lit(0), F.size("ws") - 2),
+        lambda i: F.concat_ws(" ", F.col("ws")[i], F.col("ws")[i + 1]),
+    )
+    big = tokd.select(
+        "doc_id",
+        "lang",
+        F.explode(bg).alias("bg"),
+    ).select(
+        "doc_id",
+        "lang",
+        F.pmod(_h60(F.col("bg")), F.lit(_DS_B)).alias("bucket"),
+    )
+    bstats = big.groupBy("bucket").agg(
+        F.count(F.lit(1)).alias("cr"),
+        F.sum(
+            F.when(F.col("lang") == _DS_TARGET_LANG, 1).otherwise(0)
+        ).alias("ct"),
+    )
+    tot = bstats.agg(
+        F.sum("cr").alias("tr"), F.sum("ct").alias("tt")
+    )
+    # scalar join (the DoReMi idiom): totals are ONE row
+    ratio = bstats.crossJoin(F.broadcast(tot)).select(
+        "bucket",
+        F.least(
+            F.round(
+                (
+                    ((F.col("ct") + 1) * (F.col("tr") + _DS_B)) * 1.0
+                    / ((F.col("cr") + 1) * (F.col("tt") + _DS_B))
+                ).cast("decimal(28,10)")
+                * 1000000,
+                0,
+            ).cast("long"),
+            F.lit(_DS_CAP_MICRO).cast("long"),
+        ).alias("micro"),
+    )
+    # the ratio table is B-bounded (128 rows): broadcast, never shuffle
+    # the bigram stream on bucket
+    dsc = (
+        big.join(F.broadcast(ratio), "bucket")
+        .groupBy("doc_id")
+        .agg(
+            F.min("lang").alias("lang"),
+            F.count(F.lit(1)).cast("long").alias("n_bigrams"),
+            F.sum("micro").cast("long").alias("score_micro"),
+        )
+    )
+    u = F.conv(
+        F.substring(
+            F.md5(
+                F.concat(
+                    F.lit("dsir:"), F.col("doc_id").cast("string")
+                ).cast("binary")
+            ),
+            1,
+            6,
+        ),
+        16,
+        10,
+    ).cast("long")
+    return dsc.select(
+        "doc_id",
+        "lang",
+        "n_bigrams",
+        "score_micro",
+        round_div(
+            F.col("score_micro") * 1.0, F.col("n_bigrams") * 1000000.0
+        ).alias("avg_ratio"),
+        (
+            u * F.col("n_bigrams") * _DS_KEEP_DEN
+            < F.col("score_micro") * _DS_U_MAX
+        ).alias("kept"),
+    ).orderBy("doc_id")
+
+
+# --------------------------------------------------------------------
+# categorical_dictionary_encode
+# --------------------------------------------------------------------
+
+
+def _dict_oracle() -> str:
+    return """
+    WITH cat AS (
+      SELECT doc_id, source || '|' || lang AS category FROM documents
+    ),
+    vocab AS (
+      SELECT category, COUNT(*) AS n,
+             CAST(ROW_NUMBER() OVER (ORDER BY COUNT(*) DESC, category)
+                  AS INTEGER) - 1 AS cat_id
+      FROM cat GROUP BY category
+    ),
+    enc AS (
+      SELECT c.doc_id, v.cat_id, v.category
+      FROM cat c JOIN vocab v USING (category)
+    )
+    SELECT v.cat_id, v.category,
+           CAST(v.n AS BIGINT) AS n_docs,
+           md5(string_agg(e.category, ',' ORDER BY e.doc_id))
+             AS decode_roundtrip_md5
+    FROM vocab v JOIN enc e ON e.cat_id = v.cat_id
+    GROUP BY v.cat_id, v.category, v.n
+    ORDER BY v.cat_id
+    """
+
+
+@register(
+    "categorical_dictionary_encode",
+    _dict_oracle(),
+    doc="dictionary / label encoding — the step every feature pipeline "
+    "and tokenizer-vocab build runs: dense integer ids over a "
+    "categorical domain (source x lang composite), FREQUENCY-ranked "
+    "(count DESC, value ASC — the tokenizer-vocab convention: hot "
+    "categories get small ids, which matters for varint/dictionary "
+    "compression downstream). The encoded corpus is then DECODED "
+    "back through the id and the per-id md5 over the ordered decoded "
+    "values witnesses bijectivity in the compared bytes (a collision "
+    "or off-by-one in the id assignment scrambles the hash). The "
+    "only sort is ROW_NUMBER over the DISTINCT domain — vocabulary-"
+    "bounded (the registry's sanctioned exception to the "
+    "unpartitioned-window ban; domains are compressible precisely "
+    "because they are small). BOUND: the windowed input is "
+    "|distinct(source x lang)| rows — the CROSS-CARDINALITY of two "
+    "low-cardinality dimension columns (97 rows at sf0.01), NEVER "
+    "corpus rows; it scales with the category domain, not the data, "
+    "the same key-domain argument as quota_largest_remainder's "
+    "'(bounded window)' PLAN_AUDIT row, which this query joins when "
+    "registered. 100 TB shape: one distinct+count hash "
+    "aggregate, a vocab-sized window, one broadcast join back — the "
+    "exact shape of building and applying a tokenizer vocab or "
+    "feature map.",
+)
+def categorical_dictionary_encode(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    docs = t(spark, sf_dir, "documents").select(
+        "doc_id", F.concat_ws("|", "source", "lang").alias("category")
+    )
+    vocab = (
+        docs.groupBy("category")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(
+            "category",
+            "n",
+            (
+                F.row_number().over(
+                    # vocabulary-bounded total order (see doc)
+                    Window.orderBy(F.desc("n"), F.asc("category"))
+                )
+                - 1
+            )
+            .cast("int")
+            .alias("cat_id"),
+        )
+    )
+    enc = docs.join(F.broadcast(vocab), "category")
+    return (
+        enc.groupBy("cat_id", "category")
+        .agg(
+            F.max("n").cast("long").alias("n_docs"),
+            F.md5(
+                F.encode(
+                    F.array_join(
+                        F.array_sort(
+                            F.collect_list(
+                                F.struct("doc_id", "category")
+                            )
+                        ).cast(
+                            "array<struct<doc_id:bigint,category:string>>"
+                        ).getField("category"),
+                        ",",
+                    ),
+                    "utf-8",
+                )
+            ).alias("decode_roundtrip_md5"),
+        )
+        .select("cat_id", "category", "n_docs", "decode_roundtrip_md5")
+        .orderBy("cat_id")
+    )
+
+
+# --------------------------------------------------------------------
+# unimax_epoch_cap_allocation
+# --------------------------------------------------------------------
+
+_UX_CAP_DEN = 2  # cap = n_tokens * (1 + src_num % 3) / 2 -> 0.5/1/1.5 epochs
+_UX_B_NUM = 3  # budget = 3/4 of total corpus tokens
+_UX_B_DEN = 4
+
+
+def _unimax_oracle() -> str:
+    return f"""
+    WITH src AS (
+      SELECT source,
+             CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
+      FROM documents GROUP BY 1
+    ),
+    caps AS (
+      SELECT source, n_tokens,
+             (n_tokens * (1 + CAST(substr(source, 4) AS BIGINT) % 3))
+               // {_UX_CAP_DEN} AS cap
+      FROM src
+    ),
+    tot AS (
+      SELECT SUM(n_tokens) AS tot_tokens,
+             CAST(COUNT(*) AS BIGINT) AS k,
+             (SUM(n_tokens) * {_UX_B_NUM}) // {_UX_B_DEN} AS b
+      FROM caps
+    ),
+    rk AS (
+      SELECT a.source, a.n_tokens, a.cap,
+             CAST(COUNT(*) AS BIGINT) AS rnk,
+             SUM(b.cap) AS pref
+      FROM caps a JOIN caps b
+        ON (b.cap, b.source) <= (a.cap, a.source)
+      GROUP BY a.source, a.n_tokens, a.cap
+    ),
+    flagged AS (
+      SELECT rk.*,
+             rk.pref + rk.cap * ((SELECT k FROM tot) - rk.rnk)
+               <= (SELECT b FROM tot) AS capped
+      FROM rk
+    ),
+    cs AS (
+      SELECT CAST(COALESCE(SUM(CASE WHEN capped THEN cap END), 0)
+               AS BIGINT) AS capped_sum,
+             CAST(COALESCE(SUM(CASE WHEN capped THEN 1 END), 0)
+               AS BIGINT) AS n_capped
+      FROM flagged
+    ),
+    alloc AS (
+      SELECT f.source, f.n_tokens, f.cap, f.capped,
+             CASE WHEN f.capped THEN f.cap
+                  ELSE ((SELECT b FROM tot) - (SELECT capped_sum FROM cs))
+                         // ((SELECT k FROM tot) - (SELECT n_capped FROM cs))
+                       + CASE WHEN f.rnk - (SELECT n_capped FROM cs)
+                              <= ((SELECT b FROM tot)
+                                  - (SELECT capped_sum FROM cs))
+                                 % ((SELECT k FROM tot)
+                                    - (SELECT n_capped FROM cs))
+                              THEN 1 ELSE 0 END
+             END AS alloc
+      FROM flagged f
+    )
+    SELECT source, n_tokens,
+           CAST(cap AS BIGINT) AS cap_tokens,
+           CAST(alloc AS BIGINT) AS alloc_tokens,
+           capped AS is_capped,
+           {sql_round_div('alloc', 'n_tokens')} AS epochs_used
+    FROM alloc ORDER BY source
+    """
+
+
+def unimax_epoch_cap_allocation_from(docs: DataFrame) -> DataFrame:
+    """The full waterfill pipeline over a (source, text) frame —
+    shared with tools/stress_check.py's ``unimax_alloc`` stage so the
+    stress row always measures the shipping shape."""
+    # the ONLY corpus-sized pass: per-source token totals
+    src = docs.select(
+        "source", F.size(F.split("text", " ")).alias("tk")
+    ).groupBy("source").agg(F.sum("tk").cast("long").alias("n_tokens"))
+    caps = src.select(
+        "source",
+        "n_tokens",
+        F.expr(
+            f"(n_tokens * (1 + CAST(substr(source, 4) AS BIGINT) % 3))"
+            f" div {_UX_CAP_DEN}"
+        ).alias("cap"),
+    )
+    tot = caps.agg(
+        F.sum("n_tokens").alias("tot_tokens"),
+        F.count(F.lit(1)).cast("long").alias("k"),
+        F.expr(
+            f"(SUM(n_tokens) * {_UX_B_NUM}) div {_UX_B_DEN}"
+        ).alias("b"),
+    )
+    a = caps.alias("a")
+    b = caps.alias("b")
+    rk = (
+        a.join(
+            F.broadcast(b),
+            F.struct(F.col("b.cap"), F.col("b.source"))
+            <= F.struct(F.col("a.cap"), F.col("a.source")),
+        )
+        .groupBy(
+            F.col("a.source").alias("source"),
+            F.col("a.n_tokens").alias("n_tokens"),
+            F.col("a.cap").alias("cap"),
+        )
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("rnk"),
+            F.sum("b.cap").alias("pref"),
+        )
+    )
+    flagged = rk.crossJoin(F.broadcast(tot)).withColumn(
+        "capped",
+        F.col("pref") + F.col("cap") * (F.col("k") - F.col("rnk"))
+        <= F.col("b"),
+    )
+    cs = flagged.agg(
+        F.coalesce(
+            F.sum(F.when(F.col("capped"), F.col("cap"))), F.lit(0)
+        )
+        .cast("long")
+        .alias("capped_sum"),
+        F.coalesce(
+            F.sum(F.when(F.col("capped"), F.lit(1))), F.lit(0)
+        )
+        .cast("long")
+        .alias("n_capped"),
+    )
+    # conditional, NOT coalesce-over-division: under ANSI mode the DIV
+    # by a zero uncapped count must never be evaluated on the U = 0
+    # branch (the largest_remainder discipline)
+    u = F.col("k") - F.col("n_capped")
+    spare = F.col("b") - F.col("capped_sum")
+    alloc = F.when(F.col("capped"), F.col("cap")).otherwise(
+        F.when(u == 0, F.lit(0)).otherwise(
+            F.expr("(b - capped_sum) div (k - n_capped)")
+            + F.when(
+                F.col("rnk") - F.col("n_capped")
+                <= F.pmod(spare, u),
+                F.lit(1),
+            ).otherwise(F.lit(0))
+        )
+    )
+    return (
+        flagged.crossJoin(F.broadcast(cs))
+        .select(
+            "source",
+            "n_tokens",
+            F.col("cap").cast("long").alias("cap_tokens"),
+            alloc.cast("long").alias("alloc_tokens"),
+            F.col("capped").alias("is_capped"),
+            round_div(alloc, F.col("n_tokens")).alias("epochs_used"),
+        )
+        .orderBy("source")
+    )
+
+
+@register(
+    "unimax_epoch_cap_allocation",
+    _unimax_oracle(),
+    doc="UniMax source sampling (Chung et al. 2023): spread a token "
+    "budget across sources as uniformly as possible subject to "
+    "per-source repetition caps — the budget-constrained mixture "
+    "variant production training actually runs, completing the "
+    "mixture family (source_mixture_weights / temperature / DoReMi / "
+    "DSIR reweight proportions; this allocates an integer BUDGET). "
+    "Exact integer waterfill with NO window and no driver loop: "
+    "sources totally ordered by (cap, source) via a K-row broadcast "
+    "self-join (K = source count), a source is capped iff "
+    "prefix_i + cap_i*(K - rank_i) <= B — the per-row predicate "
+    "equals the sequential fill because that expression is monotone "
+    "non-decreasing in rank — and survivors split the remainder by "
+    "integer DIV with largest-remainder ties to the smallest caps. "
+    "Allocations sum to B EXACTLY (pytest pin; B and the caps derive "
+    "from the corpus itself so the fixture exercises both capped and "
+    "uncapped sources at every checked scale factor, 7-8 capped / "
+    "12-13 uncapped). The all-capped degenerate case (U = 0) takes a "
+    "guarded branch BEFORE any division is evaluated — the ANSI-mode "
+    "discipline from largest_remainder. 100 TB shape: ONE corpus "
+    "aggregate to per-source token counts; everything after runs on "
+    "a source-domain frame (tens of rows) with broadcast joins.",
+)
+def unimax_epoch_cap_allocation(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    return unimax_epoch_cap_allocation_from(
+        t(spark, sf_dir, "documents").select("source", "text")
+    )
+
+
+# --------------------------------------------------------------------
+# harmonic_size_class_packing
+# --------------------------------------------------------------------
+
+_HP_CAP = 128  # bin capacity in tokens (> max doc length in the
+# fixture, so every class k >= 1; production uses the model context)
+
+
+def _hp_oracle() -> str:
+    return f"""
+    WITH base AS (
+      SELECT doc_id, lang,
+             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
+      FROM documents
+    ),
+    cls AS (
+      SELECT doc_id, lang, n_tokens,
+             CAST(GREATEST({_HP_CAP} // n_tokens, 1) AS BIGINT)
+               AS size_class
+      FROM base
+    ),
+    ranked AS (
+      SELECT doc_id, lang, n_tokens, size_class,
+             ROW_NUMBER() OVER (PARTITION BY lang, size_class
+                                ORDER BY n_tokens DESC, doc_id) AS rn
+      FROM cls
+    ),
+    binned AS (
+      SELECT doc_id, lang, n_tokens, size_class,
+             CAST((rn - 1) // size_class AS BIGINT) AS bin_idx
+      FROM ranked
+    )
+    SELECT doc_id, lang, n_tokens, size_class, bin_idx,
+           CAST(SUM(n_tokens) OVER (PARTITION BY lang, size_class, bin_idx)
+                AS BIGINT) AS bin_fill,
+           CAST({_HP_CAP} - SUM(n_tokens)
+                  OVER (PARTITION BY lang, size_class, bin_idx)
+                AS BIGINT) AS bin_slack,
+           CAST(CASE WHEN COUNT(*) OVER (PARTITION BY lang, size_class,
+                                         bin_idx) = size_class
+                     THEN 1 ELSE 0 END AS BIGINT) AS full_bin
+    FROM binned
+    ORDER BY doc_id
+    """
+
+
+@register(
+    "harmonic_size_class_packing",
+    _hp_oracle(),
+    doc="document packing by the harmonic size-class algorithm (Lee & "
+    "Lee 1985) — the scalable form of best-fit-decreasing and the "
+    "upgrade of token_budget_packing's greedy in-order splitter "
+    "(motivation: Ding et al. 2024, 'Fewer Truncations Improve "
+    f"Language Modeling'). Size class k = {_HP_CAP} div n_tokens puts "
+    "each document in the class where exactly k items fill a bin "
+    "(k*len <= capacity by construction — the no-overflow proof is "
+    "one line of integer algebra, and it rides the compared bytes as "
+    "bin_fill/bin_slack); within (lang, class) documents rank by "
+    "length DESC (the 'decreasing' part) and bin = (rank-1) div k, so "
+    "ceil(n/k) bins per class — OPTIMAL within the class. Exact "
+    "best-fit is inherently sequential (every placement inspects all "
+    "open bins); the harmonic form is fully closed-form: two "
+    "lang-and-class-PARTITIONED windows, zero driver state, zero "
+    "sequential dependence. 100 TB shape: one map-only projection + "
+    "one partitioned rank window + one partitioned fill window — "
+    "parallel across (lang, class) partitions, linear in documents, "
+    "and the class count is bounded by the capacity (a model "
+    "constant), never by data.",
+)
+def harmonic_size_class_packing(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    return harmonic_size_class_packing_from(
+        t(spark, sf_dir, "documents").select("doc_id", "lang", "text")
+    )
+
+
+def harmonic_size_class_packing_from(docs: DataFrame) -> DataFrame:
+    """The full harmonic assignment over a (doc_id, lang, text) frame —
+    shared with tools/stress_check.py's ``harmonic_pack`` stage so the
+    stress row always measures the shipping shape."""
+    base = docs.select(
+        "doc_id",
+        "lang",
+        F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
+    )
+    # GREATEST(.., 1): a document LONGER than the capacity computes
+    # k = 0 and would divide by zero in the bin assignment; the
+    # harmonic convention routes unpackable items to class 1 — each
+    # gets a dedicated bin whose negative bin_slack records the
+    # truncation debt honestly (the fixture never exercises this:
+    # max 100 tokens < cap 128 — the guard is the 100 TB contract)
+    cls = base.withColumn(
+        "size_class",
+        F.greatest(
+            F.expr(f"{_HP_CAP} div n_tokens"), F.lit(1)
+        ).cast("long"),
+    )
+    w_rank = Window.partitionBy("lang", "size_class").orderBy(
+        F.desc("n_tokens"), "doc_id"
+    )
+    binned = (
+        cls.withColumn("row_num", F.row_number().over(w_rank).cast("long"))
+        .withColumn(
+            "bin_idx", F.expr("(row_num - 1) div size_class").cast("long")
+        )
+        .drop("row_num")
+    )
+    w_bin = Window.partitionBy("lang", "size_class", "bin_idx")
+    return binned.select(
+        "doc_id",
+        "lang",
+        "n_tokens",
+        "size_class",
+        "bin_idx",
+        F.sum("n_tokens").over(w_bin).cast("long").alias("bin_fill"),
+        (F.lit(_HP_CAP) - F.sum("n_tokens").over(w_bin))
+        .cast("long")
+        .alias("bin_slack"),
+        F.when(
+            F.count(F.lit(1)).over(w_bin) == F.col("size_class"), F.lit(1)
+        )
+        .otherwise(F.lit(0))
+        .cast("long")
+        .alias("full_bin"),
+    ).orderBy("doc_id")
+
+
+# --------------------------------------------------------------------
+# zipf_token_frequency_profile
+# --------------------------------------------------------------------
+
+
+def _zp_oracle() -> str:
+    return f"""
+    WITH toks AS (
+      SELECT lang, UNNEST(string_split(text, ' ')) AS tok
+      FROM documents
+    ),
+    tf AS (
+      SELECT lang, tok, CAST(COUNT(*) AS BIGINT) AS freq
+      FROM toks GROUP BY 1, 2
+    ),
+    bucketed AS (
+      SELECT lang, CAST(length(bin(freq)) - 1 AS BIGINT) AS log2_bucket,
+             freq
+      FROM tf
+    ),
+    spectrum AS (
+      SELECT lang, log2_bucket,
+             CAST(COUNT(*) AS BIGINT) AS n_types,
+             CAST(SUM(freq) AS BIGINT) AS n_tokens,
+             CAST(MIN(freq) AS BIGINT) AS min_freq,
+             CAST(MAX(freq) AS BIGINT) AS max_freq
+      FROM bucketed GROUP BY 1, 2
+    ),
+    totals AS (
+      SELECT lang,
+             CAST(COUNT(*) AS BIGINT) AS vocab_size,
+             CAST(SUM(freq) AS BIGINT) AS total_tokens,
+             CAST(SUM(CASE WHEN freq = 1 THEN 1 ELSE 0 END) AS BIGINT)
+               AS hapax_types,
+             CAST(SUM(CASE WHEN freq = 2 THEN 1 ELSE 0 END) AS BIGINT)
+               AS dis_types,
+             {sql_round_div("COUNT(*) * 1.0", "SUM(freq)", 6)}
+               AS type_token_ratio
+      FROM tf GROUP BY 1
+    )
+    SELECT s.lang, s.log2_bucket, s.n_types, s.n_tokens, s.min_freq,
+           s.max_freq, t.vocab_size, t.total_tokens, t.hapax_types,
+           t.dis_types, t.type_token_ratio
+    FROM spectrum s JOIN totals t USING (lang)
+    ORDER BY lang, log2_bucket
+    """
+
+
+@register(
+    "zipf_token_frequency_profile",
+    _zp_oracle(),
+    doc="corpus-shape diagnostics: the token frequency SPECTRUM per "
+    "language - type counts per log2 frequency bucket, the portable "
+    "integer form of the Zipf rank-frequency plot (bucket = "
+    "len(bin(freq)) - 1, exact on both engines; no float log "
+    "anywhere) - plus vocabulary size, total tokens, hapax and dis "
+    "legomena counts and the type-token ratio through one decimal "
+    "rounding. Templated or machine-generated text shows anomalous "
+    "spectra (missing hapax mass, truncated tails, spiky buckets), "
+    "so this is the health check corpus curation runs before "
+    "trusting per-language mixture weights; it also exposes the "
+    "synthetic fixture's own near-uniform vocabulary honestly in the "
+    "compared bytes. Aggregate-only: one token explode, one (lang, "
+    "token) hash aggregate with map-side combine, one bounded "
+    "spectrum aggregate and one per-lang totals aggregate broadcast "
+    "back - no window anywhere, output bounded by langs x ~60 "
+    "buckets. 100 TB shape: the (lang, token) aggregate is the only "
+    "data-sized shuffle, vocabulary-keyed and AQE-skew-safe.",
+)
+def zipf_token_frequency_profile(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    return zipf_token_frequency_profile_from(
+        t(spark, sf_dir, "documents").select("lang", "text")
+    )
+
+
+def zipf_token_frequency_profile_from(docs: DataFrame) -> DataFrame:
+    """The full spectrum over a (lang, text) frame — shared with
+    tools/stress_check.py's ``zipf_profile`` stage so the stress row
+    always measures the shipping shape."""
+    toks = docs.select(
+        "lang", F.explode(F.split("text", " ")).alias("tok")
+    )
+    tf = toks.groupBy("lang", "tok").agg(
+        F.count(F.lit(1)).cast("long").alias("freq")
+    )
+    bucketed = tf.select(
+        "lang",
+        (F.length(F.expr("bin(freq)")) - 1).cast("long").alias(
+            "log2_bucket"
+        ),
+        "freq",
+    )
+    spectrum = bucketed.groupBy("lang", "log2_bucket").agg(
+        F.count(F.lit(1)).cast("long").alias("n_types"),
+        F.sum("freq").cast("long").alias("n_tokens"),
+        F.min("freq").cast("long").alias("min_freq"),
+        F.max("freq").cast("long").alias("max_freq"),
+    )
+    totals = tf.groupBy("lang").agg(
+        F.count(F.lit(1)).cast("long").alias("vocab_size"),
+        F.sum("freq").cast("long").alias("total_tokens"),
+        F.sum((F.col("freq") == 1).cast("int"))
+        .cast("long")
+        .alias("hapax_types"),
+        F.sum((F.col("freq") == 2).cast("int"))
+        .cast("long")
+        .alias("dis_types"),
+        round_div(
+            F.count(F.lit(1)) * 1.0, F.sum("freq"), 6
+        ).alias("type_token_ratio"),
+    )
+    return (
+        spectrum.join(F.broadcast(totals), "lang")
+        .select(
+            "lang",
+            "log2_bucket",
+            "n_types",
+            "n_tokens",
+            "min_freq",
+            "max_freq",
+            "vocab_size",
+            "total_tokens",
+            "hapax_types",
+            "dis_types",
+            "type_token_ratio",
+        )
+        .orderBy("lang", "log2_bucket")
+    )
+
+
+# --------------------------------------------------------------------
+# heaps_vocab_growth_curve
+# --------------------------------------------------------------------
+
+_HV_DECILES = 10
+# every 13th doc contributes one NEVER-SEEN token: without plants the
+# fixture's 31-token vocabulary saturates inside the first decile and
+# the curve is a flat line that exercises nothing — the plants make
+# vocab(prefix) strictly increasing across all ten deciles, so the
+# first-occurrence algebra is live in every compared row
+_HV_PLANT_MOD = 13
+
+
+def _hv_oracle() -> str:
+    return f"""
+    WITH docs_t AS (
+      SELECT doc_id,
+             string_split(
+               text || CASE WHEN doc_id % {_HV_PLANT_MOD} = 0
+                       THEN ' uniq' || CAST(doc_id AS VARCHAR)
+                       ELSE '' END, ' ') AS ws
+      FROM documents
+    ),
+    toks AS (
+      SELECT doc_id, UNNEST(ws) AS tok FROM docs_t
+    ),
+    firsts AS (
+      SELECT tok, MIN(doc_id) AS first_doc FROM toks GROUP BY tok
+    ),
+    nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM documents),
+    cuts AS (
+      SELECT CAST(u.d AS BIGINT) AS decile,
+             CAST((nn.n * u.d) // {_HV_DECILES} - 1 AS BIGINT) AS cutoff
+      FROM nn, UNNEST(range(1, {_HV_DECILES + 1})) AS u(d)
+    ),
+    vocab AS (
+      SELECT c.decile, CAST(COUNT(*) AS BIGINT) AS vocab_size
+      FROM firsts f JOIN cuts c ON f.first_doc <= c.cutoff
+      GROUP BY 1
+    ),
+    dsz AS (
+      SELECT doc_id, CAST(len(ws) AS BIGINT) AS n_toks FROM docs_t
+    ),
+    prefix AS (
+      SELECT c.decile, c.cutoff,
+             CAST(COUNT(*) AS BIGINT) AS n_docs,
+             CAST(SUM(d.n_toks) AS BIGINT) AS n_tokens
+      FROM dsz d JOIN cuts c ON d.doc_id <= c.cutoff
+      GROUP BY 1, 2
+    )
+    SELECT p.decile, p.cutoff AS cutoff_doc_id, p.n_docs, p.n_tokens,
+           v.vocab_size,
+           {sql_round_div('v.vocab_size * 1.0', 'p.n_tokens', 6)}
+             AS type_token_ratio
+    FROM prefix p JOIN vocab v USING (decile)
+    ORDER BY decile
+    """
+
+
+@register(
+    "heaps_vocab_growth_curve",
+    _hv_oracle(),
+    doc="Heaps'/Herdan's-law vocabulary growth: cumulative vocabulary "
+    "size at each corpus-prefix decile - the second corpus LAW next "
+    "to zipf_token_frequency_profile's frequency spectrum, and the "
+    "diagnostic that catches a corpus whose new shards add no new "
+    "content (the curve flattens). Computed EXACTLY with no "
+    "running-distinct machinery: one (token -> MIN(doc_id)) hash "
+    "aggregate makes vocab(prefix) a plain count of first-occurrence "
+    "docs at or below each cutoff - the first-occurrence trick turns "
+    "a cumulative-distinct (which would need a sorted scan or sketch "
+    "merges) into two bounded joins against a 10-row decile table. "
+    "100 TB shape: one token aggregate (vocabulary-keyed, map-side "
+    "combine), one per-doc size aggregate, then two broadcast "
+    "10-row inequality joins with bounded fan-out; output is exactly "
+    "10 rows. The prefix order is doc_id (ingestion order in the "
+    "fixture); production substitutes its shard/partition order.",
+)
+def heaps_vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return heaps_vocab_growth_curve_from(
+        t(spark, sf_dir, "documents").select("doc_id", "text")
+    )
+
+
+def heaps_vocab_growth_curve_from(docs: DataFrame) -> DataFrame:
+    """The full curve over a (doc_id, text) frame — shared with
+    tools/stress_check.py's ``heaps_curve`` stage so the stress row
+    always measures the shipping shape."""
+    planted = F.concat(
+        F.col("text"),
+        F.when(
+            F.col("doc_id") % _HV_PLANT_MOD == 0,
+            F.concat(F.lit(" uniq"), F.col("doc_id").cast("string")),
+        ).otherwise(F.lit("")),
+    )
+    docs_t = docs.select("doc_id", F.split(planted, " ").alias("ws"))
+    toks = docs_t.select("doc_id", F.explode("ws").alias("tok"))
+    firsts = toks.groupBy("tok").agg(F.min("doc_id").alias("first_doc"))
+    nn = docs.agg(F.count(F.lit(1)).cast("long").alias("n"))
+    cuts = nn.select(
+        F.explode(F.sequence(F.lit(1), F.lit(_HV_DECILES))).alias("d"),
+        "n",
+    ).select(
+        F.col("d").cast("long").alias("decile"),
+        F.expr(f"(n * d) div {_HV_DECILES} - 1").cast("long").alias(
+            "cutoff"
+        ),
+    )
+    vocab = (
+        firsts.crossJoin(F.broadcast(cuts))
+        .filter(F.col("first_doc") <= F.col("cutoff"))
+        .groupBy("decile")
+        .agg(F.count(F.lit(1)).cast("long").alias("vocab_size"))
+    )
+    dsz = docs_t.select(
+        "doc_id", F.size("ws").cast("long").alias("n_toks")
+    )
+    prefix = (
+        dsz.crossJoin(F.broadcast(cuts))
+        .filter(F.col("doc_id") <= F.col("cutoff"))
+        .groupBy("decile", "cutoff")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum("n_toks").cast("long").alias("n_tokens"),
+        )
+    )
+    return (
+        prefix.join(F.broadcast(vocab), "decile")
+        .select(
+            "decile",
+            F.col("cutoff").alias("cutoff_doc_id"),
+            "n_docs",
+            "n_tokens",
+            "vocab_size",
+            round_div(
+                F.col("vocab_size") * 1.0, F.col("n_tokens"), 6
+            ).alias("type_token_ratio"),
+        )
+        .orderBy("decile")
     )

@@ -2,6 +2,44 @@
 the streaming module (tumbling windows, sessionization). The streaming
 variants (watermarks, applyInPandasWithState) live in streaming/ and are
 pytest-verified; these batch forms carry the DuckDB oracle.
+
+- ``incremental_sessionization`` — the batch-boundary problem every
+  incremental pipeline hits: sessionizing each batch independently
+  breaks the sessions that SPAN the boundary. Sessionize batch A and
+  batch B separately (the steady-state per-batch work), then stitch:
+  per user, A's last session merges with B's first iff the boundary
+  gap <= the session gap — and ONLY that pair can merge, because
+  within-batch sessionization already separated everything else by
+  more than the gap (the algebra is exact, not heuristic). The
+  oracle is the monolithic full-data sessionization: hash equality
+  proves the incremental path reconstructs it exactly.
+- ``decayed_event_frequency`` — trending detection with EXACT
+  exponential time decay: per-type decayed counts Σ 2^(-age_days),
+  computed entirely in integers by the common-denominator trick
+  (Σ 2^(cap - min(age, cap)) over 2^cap, ages capped at 30 days —
+  beyond the cap a contribution is < 1e-9 of a fresh event and the
+  cap is what makes the numerator BIGINT-exact). The day bucket is
+  epoch_us div 86400000000 (integer truncation on both engines) — a pure integer, so no compared byte depends
+  on session timezone; the reference day is the
+  corpus max, derived engine-side (1-row aggregate cross join, no
+  driver collect).
+- ``prefix_sum_adaptive_switch`` — the registered witness for the
+  serial-vs-two-phase crossover in functions/prefix.py
+  (``adaptive_prefix_sum``): a running total over a model-sized
+  rollup should NOT pay two-phase's localCheckpoint + totals job +
+  offset join, and a running total over data-sized input must not
+  ride a single-partition window. The switch rule (n <= 2000 →
+  serial) is derived INDEPENDENTLY by both engines — the oracle
+  computes the same CASE over COUNT(*) — and the compared bytes
+  carry the chosen mode per leg AND the running totals, so the hash
+  pins (a) the rule itself and (b) that both branches produce
+  bit-identical sums (decimal accumulation in every phase). The
+  fixture makes the switch non-vacuous at every gated SF: the
+  rollup leg (150 type-day rows) is always serial, while the raw
+  leg crosses the threshold between sf0.001 (1000 rows, serial) and
+  sf0.01/0.1 (10k/100k rows, two-phase) — the sf0.001 test oracle and
+  the sf0.01 driver oracle together exercise BOTH branches on the
+  same leg.
 """
 
 from __future__ import annotations
@@ -1163,3 +1201,373 @@ def attribution_position_credit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("credit").cast("long").alias("credit_milli"),
         )
     )
+
+
+# this sessionizer's gap parameter: 12 h (gap is a per-pipeline knob —
+# the registered 30-min `sessionization` models interactive sessions;
+# the fixture's inter-event cadence is hours, so a 12 h gap yields the
+# multi-event, boundary-SPANNING sessions the stitch must handle at
+# every checked scale factor)
+_IS_GAP_US = 12 * 3600 * 1_000_000
+
+
+# --------------------------------------------------------------------
+# incremental_sessionization
+# --------------------------------------------------------------------
+
+
+def _inc_sess_oracle() -> str:
+    return f"""
+    WITH ev AS (
+      SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts FROM events
+    ), flagged AS (
+      SELECT user_id, event_id, ts,
+             CASE WHEN lag(ts) OVER w IS NULL
+                    OR epoch_us(ts) - epoch_us(lag(ts) OVER w)
+                       > {_IS_GAP_US}
+                  THEN 1 ELSE 0 END AS is_new
+      FROM ev
+      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+    ), sessions AS (
+      SELECT user_id, ts,
+             CAST(SUM(is_new) OVER (
+               PARTITION BY user_id ORDER BY ts, event_id
+               ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
+      FROM flagged
+    )
+    SELECT user_id,
+           epoch_us(MIN(ts)) AS session_start_us,
+           epoch_us(MAX(ts)) AS session_end_us,
+           CAST(COUNT(*) AS BIGINT) AS n_events
+    FROM sessions GROUP BY user_id, session_id
+    ORDER BY user_id, session_start_us
+    """
+
+
+@register(
+    "incremental_sessionization",
+    _inc_sess_oracle(),
+    bench=True,
+    doc="cross-batch session stitching — the boundary problem every "
+    "incremental pipeline hits: sessionizing each arrival batch "
+    "independently breaks the sessions that SPAN the batch boundary. "
+    "The incremental path sessionizes batch A (ts below the midpoint "
+    "split, the 'already processed' state) and batch B (the new "
+    "arrivals) separately, then stitches: per user, A's LAST session "
+    "merges with B's FIRST iff the boundary gap <= the session "
+    "gap (12 h here — a pipeline knob) — and ONLY that pair can ever merge, because within-batch "
+    "sessionization already separated every other adjacent pair by "
+    "more than the gap, so the stitch algebra is EXACT, not a "
+    "heuristic (same discipline as delta_join_view_maintenance). The "
+    "oracle is the monolithic full-data sessionization: value-hash "
+    "equality proves the incremental path reconstructs it byte-for-"
+    "byte. Session bounds ride epoch-microsecond longs (the "
+    "timestamp-rendering lesson). 100 TB shape: steady-state cost is "
+    "sessionizing the NEW batch plus a per-user single-row state join "
+    "(each user's last open session — the applyInPandasWithState "
+    "shape in the streaming twin); the full history is never "
+    "re-windowed.",
+)
+def incremental_sessionization(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    ev = t(spark, sf_dir, "events").select("user_id", "event_id", "ts")
+    us = F.unix_micros(F.col("ts"))
+    # bounded collect: ONE row — the batch-boundary split point (the
+    # midpoint timestamp plays 'end of the previous load')
+    lo, hi = ev.agg(F.min(us), F.max(us)).first()
+    split_us = (lo + hi) // 2
+
+    # per-batch sessionization in ONE pass: every window is keyed
+    # by (user_id, batch), so each batch is still sessionized strictly
+    # independently — identical sessions to the former two separate
+    # sessionize() branches (pinned byte-for-byte in
+    # tests/test_events_queries.py and by the monolithic oracle) — but the
+    # events are scanned, exchanged and windowed once instead of twice,
+    # and the session table is materialized once for its four
+    # consumers (last/first state rows + both keep anti-joins) instead
+    # of re-running a window pipeline per consumer.
+    tagged = ev.withColumn("batch", (us >= split_us).cast("int"))
+    w = Window.partitionBy("user_id", "batch").orderBy("ts", "event_id")
+    b_us = F.unix_micros(F.col("ts"))
+    prev = F.lag(b_us).over(w)
+    flagged = tagged.withColumn(
+        "is_new",
+        F.when(prev.isNull() | ((b_us - prev) > _IS_GAP_US), 1).otherwise(0),
+    )
+    w2 = (
+        Window.partitionBy("user_id", "batch")
+        .orderBy("ts", "event_id")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    sess = flagged.withColumn("sid", F.sum("is_new").over(w2))
+    sessions = (
+        sess.groupBy("user_id", "batch", "sid")
+        .agg(
+            F.min(F.unix_micros("ts")).alias("session_start_us"),
+            F.max(F.unix_micros("ts")).alias("session_end_us"),
+            F.count(F.lit(1)).cast("long").alias("n_events"),
+        )
+        .localCheckpoint(eager=True)
+    )
+    sa = sessions.filter(F.col("batch") == 0).drop("batch", "sid")
+    sb = sessions.filter(F.col("batch") == 1).drop("batch", "sid")
+    # per-user boundary state: A's LAST session, B's FIRST session
+    last_a = sa.groupBy("user_id").agg(
+        F.max(
+            F.struct("session_start_us", "session_end_us", "n_events")
+        ).alias("s")
+    )
+    first_b = sb.groupBy("user_id").agg(
+        F.min(
+            F.struct("session_start_us", "session_end_us", "n_events")
+        ).alias("s")
+    )
+    merged = (
+        last_a.alias("a")
+        .join(first_b.alias("b"), "user_id")
+        .filter(
+            F.col("b.s.session_start_us") - F.col("a.s.session_end_us")
+            <= _IS_GAP_US
+        )
+        .select(
+            "user_id",
+            F.col("a.s.session_start_us").alias("session_start_us"),
+            F.col("b.s.session_end_us").alias("session_end_us"),
+            (F.col("a.s.n_events") + F.col("b.s.n_events")).alias(
+                "n_events"
+            ),
+            F.col("a.s.session_start_us").alias("a_start"),
+            F.col("b.s.session_start_us").alias("b_start"),
+        )
+    )
+    drop_a = merged.select("user_id", F.col("a_start").alias("k"))
+    drop_b = merged.select("user_id", F.col("b_start").alias("k"))
+    keep_a = sa.join(
+        F.broadcast(drop_a),
+        (sa.user_id == drop_a.user_id)
+        & (sa.session_start_us == drop_a.k),
+        "left_anti",
+    )
+    keep_b = sb.join(
+        F.broadcast(drop_b),
+        (sb.user_id == drop_b.user_id)
+        & (sb.session_start_us == drop_b.k),
+        "left_anti",
+    )
+    cols = ["user_id", "session_start_us", "session_end_us", "n_events"]
+    return (
+        keep_a.select(*cols)
+        .unionByName(keep_b.select(*cols))
+        .unionByName(merged.select(*cols))
+        .orderBy("user_id", "session_start_us")
+    )
+
+
+# --------------------------------------------------------------------
+# decayed_event_frequency
+# --------------------------------------------------------------------
+
+_DF_CAP = 30  # decay cap in days: 2^-30 < 1e-9 of a fresh event
+_DF_DAY_US = 86_400_000_000
+
+
+def _decay_oracle() -> str:
+    return f"""
+    WITH ev AS (
+      SELECT event_type,
+             epoch_us(CAST(ts AS TIMESTAMP)) // {_DF_DAY_US} AS day
+      FROM events
+    ),
+    ref AS (SELECT MAX(day) AS ref_day FROM ev),
+    w AS (
+      SELECT ev.event_type,
+             (1::BIGINT << ({_DF_CAP} - LEAST(ref.ref_day - ev.day,
+                                              {_DF_CAP}))) AS num
+      FROM ev CROSS JOIN ref
+    )
+    SELECT event_type,
+           CAST(COUNT(*) AS BIGINT) AS n_events,
+           CAST(SUM(num) AS BIGINT) AS decay_num,
+           {sql_round_div('SUM(num)', f'(1::BIGINT << {_DF_CAP})')}
+             AS decayed_count
+    FROM w
+    GROUP BY event_type
+    ORDER BY event_type
+    """
+
+
+@register(
+    "decayed_event_frequency",
+    _decay_oracle(),
+    doc="trending detection with EXACT exponential time decay: "
+    "per-type decayed counts sum(2^-age_days) computed entirely in "
+    "integers — each event contributes 2^(cap - min(age, cap)) to a "
+    "BIGINT numerator over the common denominator 2^cap (cap=30 "
+    "days; an older event's true weight is < 1e-9 of a fresh one, "
+    "and the cap is what keeps the numerator exact instead of "
+    "floating). ONE rounding at the very end through the shared "
+    "decimal route, so engines cannot diverge on any tie. Day = "
+    "epoch_us div 86400000000 (integer truncation on both engines), a pure integer — no compared byte depends "
+    "on session timezone; the "
+    "reference day is the corpus max, derived ENGINE-side as a 1-row "
+    "aggregate cross join (no driver collect). 100 TB shape: one "
+    "map-only weight projection + one hash aggregate with map-side "
+    "combine; the decayed counter is the streaming-friendly "
+    "alternative to windowed re-counts (state is one integer per "
+    "key, merge = shift-and-add).",
+)
+def decayed_event_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = t(spark, sf_dir, "events").select(
+        "event_type",
+        # integer `div`, not double-divide-then-cast: Spark div and
+        # DuckDB's integer // both truncate toward zero, so the bucket
+        # is identical for ALL inputs incl. pre-1970 timestamps, and no
+        # compared byte rides double rounding
+        F.expr(f"unix_micros(ts) div {_DF_DAY_US}").alias("day"),
+    )
+    ref = ev.agg(F.max("day").alias("ref_day"))
+    w = ev.crossJoin(F.broadcast(ref)).select(
+        "event_type",
+        F.expr(
+            f"shiftleft(1L, cast({_DF_CAP} - least(ref_day - day, "
+            f"{_DF_CAP}) as int))"
+        ).alias("num"),
+    )
+    return (
+        w.groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_events"),
+            F.sum("num").cast("long").alias("decay_num"),
+        )
+        .select(
+            "event_type",
+            "n_events",
+            "decay_num",
+            round_div(
+                F.col("decay_num"), F.lit(1 << _DF_CAP)
+            ).alias("decayed_count"),
+        )
+        .orderBy("event_type")
+    )
+
+
+# --------------------------------------------------------------------
+# prefix_sum_adaptive_switch
+# --------------------------------------------------------------------
+
+_PS_DAY_US = 86_400_000_000
+
+
+def _ps_oracle() -> str:
+    from market_pulse_data_pipeline_spark.functions.prefix import (
+        PREFIX_SERIAL_MAX_ROWS,
+    )
+
+    thr = PREFIX_SERIAL_MAX_ROWS
+    return f"""
+    WITH ev AS (
+      SELECT event_id, event_type, value,
+             epoch_us(CAST(ts AS TIMESTAMP)) // {_PS_DAY_US} AS day
+      FROM events
+    ),
+    a AS (
+      SELECT event_type, day, COUNT(*) AS cnt
+      FROM ev GROUP BY 1, 2
+    ),
+    an AS (SELECT COUNT(*) AS n FROM a),
+    bn AS (SELECT COUNT(*) AS n FROM ev),
+    aleg AS (
+      SELECT 'daily_rollup' AS leg,
+             event_type || '#' || CAST(day AS VARCHAR) AS ord_key,
+             CAST(SUM(CAST(cnt AS DECIMAL(38,6)))
+                    OVER (ORDER BY event_type, day
+                          ROWS UNBOUNDED PRECEDING) AS DOUBLE) AS running,
+             (SELECT CASE WHEN n <= {thr} THEN 'serial'
+                          ELSE 'two_phase' END FROM an) AS mode
+      FROM a
+    ),
+    bleg AS (
+      SELECT 'raw_events' AS leg,
+             CAST(event_id AS VARCHAR) AS ord_key,
+             CAST(SUM(CAST(value AS DECIMAL(38,6)))
+                    OVER (ORDER BY event_id
+                          ROWS UNBOUNDED PRECEDING) AS DOUBLE) AS running,
+             (SELECT CASE WHEN n <= {thr} THEN 'serial'
+                          ELSE 'two_phase' END FROM bn) AS mode
+      FROM ev
+    )
+    SELECT * FROM aleg
+    UNION ALL
+    SELECT * FROM bleg
+    ORDER BY leg, ord_key
+    """
+
+
+@register(
+    "prefix_sum_adaptive_switch",
+    _ps_oracle(),
+    doc="the registered witness of functions/prefix.py's "
+    "serial-vs-two-phase crossover (adaptive_prefix_sum): running "
+    "totals over TWO legs — a model-sized rollup (one row per "
+    "(event_type, day), 150 rows at every fixture SF) and the raw "
+    "event stream — each routed by the size rule n <= "
+    "PREFIX_SERIAL_MAX_ROWS. The oracle derives the SAME rule from "
+    "COUNT(*), so the compared bytes pin (a) the rule itself (the "
+    "mode column) and (b) branch equivalence: decimal accumulation "
+    "in every phase makes serial and two-phase bit-identical, so "
+    "whichever branch runs, the running totals hash-match the "
+    "oracle's plain serial window. Non-vacuous by construction: the "
+    "rollup leg is always serial (a 150-row global window is the "
+    "sanctioned model-sized case — cheaper than two-phase's "
+    "localCheckpoint + totals job + offset join), while the raw leg "
+    "crosses the threshold between sf0.001 (serial) and sf0.01/0.1 "
+    "(two-phase) — the sf0.001 and sf0.01 oracle checks together "
+    "exercise BOTH branches of the switch on the same leg. 100 TB "
+    "shape: the raw leg is the two-phase path (range partition + "
+    "local cumsums + O(partitions) offsets); the size probe is one "
+    "count() — at warehouse scale table statistics replace it.",
+)
+def prefix_sum_adaptive_switch(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    return prefix_sum_adaptive_switch_from(
+        t(spark, sf_dir, "events").select(
+            "event_id",
+            "event_type",
+            "value",
+            F.expr(f"unix_micros(ts) div {_PS_DAY_US}").alias("day"),
+        )
+    )
+
+
+def prefix_sum_adaptive_switch_from(ev: DataFrame) -> DataFrame:
+    """Both adaptive legs over an (event_id, event_type, value, day)
+    frame — shared with tools/stress_check.py's ``adaptive_prefix``
+    stage so the stress row always measures the shipping shape."""
+    from market_pulse_data_pipeline_spark.functions.prefix import (
+        adaptive_prefix_sum,
+    )
+
+    a = ev.groupBy("event_type", "day").agg(
+        F.count(F.lit(1)).cast("long").alias("cnt")
+    )
+    a_run, a_mode = adaptive_prefix_sum(
+        a, ["event_type", "day"], F.col("cnt")
+    )
+    leg_a = a_run.select(
+        F.lit("daily_rollup").alias("leg"),
+        F.concat(
+            F.col("event_type"), F.lit("#"), F.col("day").cast("string")
+        ).alias("ord_key"),
+        F.col("running_total").cast("double").alias("running"),
+        F.lit(a_mode).alias("mode"),
+    )
+    b_run, b_mode = adaptive_prefix_sum(ev, ["event_id"], F.col("value"))
+    leg_b = b_run.select(
+        F.lit("raw_events").alias("leg"),
+        F.col("event_id").cast("string").alias("ord_key"),
+        F.col("running_total").cast("double").alias("running"),
+        F.lit(b_mode).alias("mode"),
+    )
+    return leg_a.unionByName(leg_b).orderBy("leg", "ord_key")

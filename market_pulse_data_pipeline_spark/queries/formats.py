@@ -19,29 +19,17 @@ skipping).
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from market_pulse_data_pipeline_spark.queries.common import register, t
-
-_FMT_ROOT = os.path.join(tempfile.gettempdir(), f"mp_fmt_oracle_{os.getpid()}")
-atexit.register(lambda: shutil.rmtree(_FMT_ROOT, ignore_errors=True))
+from market_pulse_data_pipeline_spark.queries.common import register, scratch, t
 
 # JSON timestamps: Spark's default format carries milliseconds only;
 # events.ts is microsecond-precision, so both sides of the JSON
 # round-trip pin an explicit micros format.
 _TS_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
-
-
-def _scratch(name: str) -> str:
-    path = os.path.join(_FMT_ROOT, name)
-    shutil.rmtree(path, ignore_errors=True)
-    return path
 
 
 @register(
@@ -58,7 +46,7 @@ def _scratch(name: str) -> str:
     "splittable and predicate-pushdown-capable like parquet.",
 )
 def format_roundtrip_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _scratch("docs_orc")
+    path = scratch("docs_orc")
     t(spark, sf_dir, "documents").write.mode("overwrite").orc(path)
     docs = spark.read.orc(path)
     return docs.select(
@@ -87,7 +75,7 @@ def format_roundtrip_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     "losslessness; CSV stays line-splittable for parallel scans.",
 )
 def format_roundtrip_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _scratch("orders_csv")
+    path = scratch("orders_csv")
     src = t(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",
@@ -118,7 +106,7 @@ def format_roundtrip_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     "parquet proves the cycle lossless.",
 )
 def format_roundtrip_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _scratch("events_jsonl")
+    path = scratch("events_jsonl")
     t(spark, sf_dir, "events").write.mode("overwrite").option(
         "timestampFormat", _TS_FMT
     ).json(path)
@@ -158,7 +146,7 @@ def format_roundtrip_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     "partition columns survived the directory-encoding round-trip.",
 )
 def partitioned_write_readback(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _scratch("events_part")
+    path = scratch("events_part")
     t(spark, sf_dir, "events").write.mode("overwrite").partitionBy(
         "event_type"
     ).parquet(path)
@@ -194,7 +182,7 @@ def partitioned_write_readback(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(file-count-proportional, not data-proportional).",
 )
 def schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _scratch("orders_evolved")
+    path = scratch("orders_evolved")
     src = t(spark, sf_dir, "orders")
     old = src.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_totalprice"

@@ -5,6 +5,40 @@ at 100 TB the production shape is INCREMENTAL maintenance: keep partial
 aggregates, fold in only the delta, and prove the merged state equals a
 full recompute. These queries register that proof, plus the calendar
 gap-fill/forward-fill resampling every market-data pipeline needs.
+
+- ``delta_join_view_maintenance`` — incremental view maintenance of a
+  join-aggregate by the four-quadrant delta algebra (the DBSP /
+  materialized-view identity): with orders = A0 ∪ ΔA and customer =
+  B0 ∪ ΔB (disjoint splits), A ⋈ B = (A0⋈B0) ∪ (ΔA⋈B0) ∪ (A0⋈ΔB) ∪
+  (ΔA⋈ΔB), so a grouped aggregate over the join is maintained by
+  combining the materialized partial state with three DELTA-sized
+  joins instead of re-joining the full base. The oracle is the full
+  recompute — value-hash equality IS the IVM-correctness proof.
+- ``tv_distance_source_drift`` — distribution-level drift between two
+  corpus snapshots, per source: total-variation distance over
+  length-bucket histograms, TV = Σ|aᵢ·m − bᵢ·n| / (2·n·m), computed
+  ENTIRELY in exact integers (one rounding at the very end through
+  the shared decimal route; the 5% alert threshold is an exact
+  cross-multiplied comparison, no float boundary anywhere).
+  Complements the registered ``qc_profile_drift`` (scalar profile
+  drift: counts, min/max, totals) with the histogram-shape evidence a
+  corpus refresh gate actually needs — a snapshot can keep its row
+  count and mean while its length distribution collapses.
+- ``deletion_vector_scan`` — the lakehouse merge-on-read READ path
+  (Iceberg position deletes / Delta deletion vectors): a base file
+  set plus a separate position-delete table; reading = base ANTI JOIN
+  deletes on the row address. The oracle computes the equivalent
+  LOGICAL delete directly (CASE-filtered aggregates), so hash
+  equality proves the DV read path reconstructs exactly the logical
+  table — the MoR correctness contract. Complements keyed_upsert /
+  pointer_swap_time_travel (copy-on-write) with the merge-on-read
+  half of the lakehouse story.
+- ``user_erasure_cascade`` — the GDPR/CCPA right-to-be-forgotten
+  audit: erasing a user must cascade from the fact table through
+  every derived materialization, and the compliance evidence is a
+  per-table before/after/removed accounting with a zero-orphan
+  check. Composes the lakehouse delete path with the privacy family
+  (k_anonymity_check, l_diversity_check, text_pii_*).
 """
 
 from __future__ import annotations
@@ -12,7 +46,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from market_pulse_data_pipeline_spark.queries.common import register, t
+from market_pulse_data_pipeline_spark.queries.common import (
+    register,
+    round_div,
+    round_sum,
+    scratch,
+    sql_round_div,
+    sql_round_sum,
+    t,
+)
 
 # deterministic base/delta split: everything before this day is the
 # "already materialized" state, the rest is the incoming delta
@@ -143,24 +185,6 @@ def calendar_gapfill_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("user_id", "day")
 
 
-_TT_ROOT = None  # lazy per-process scratch
-
-
-def _tt_scratch() -> str:
-    global _TT_ROOT
-    if _TT_ROOT is None:
-        import atexit  # noqa: PLC0415
-        import shutil  # noqa: PLC0415
-        import os  # noqa: PLC0415
-        import tempfile  # noqa: PLC0415
-
-        _TT_ROOT = os.path.join(
-            tempfile.gettempdir(), f"mp_timetravel_{os.getpid()}"
-        )
-        atexit.register(lambda: shutil.rmtree(_TT_ROOT, ignore_errors=True))
-    return _TT_ROOT
-
-
 @register(
     "pointer_swap_time_travel",
     """
@@ -189,9 +213,6 @@ def _tt_scratch() -> str:
     "second commit did not disturb the first snapshot's bytes).",
 )
 def pointer_swap_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-
     from market_pulse_data_pipeline_spark.operators.merge import (  # noqa: PLC0415
         commit_pointer_swap,
         list_versions,
@@ -199,8 +220,7 @@ def pointer_swap_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_version,
     )
 
-    root = os.path.join(_tt_scratch(), "orders_tt")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch("orders_tt")
     orders = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -785,3 +805,484 @@ def calendar_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         / F.datediff(F.col("nd"), F.col("pd"))
     )
     return nb.select("user_id", "day", "observed", interp.alias("value_interp"))
+
+
+# --------------------------------------------------------------------
+# delta_join_view_maintenance
+# --------------------------------------------------------------------
+
+_DV_ORD_MOD = 10  # o_orderkey % 10 == 0 plays the order-side delta ΔA
+_DV_CUST_MOD = 7  # c_custkey % 7 == 0 plays the customer-side delta ΔB
+
+
+def _dv_oracle() -> str:
+    return f"""
+    SELECT n.n_name,
+           CAST(COUNT(*) AS BIGINT) AS n_orders,
+           {sql_round_sum('o.o_totalprice', 2, 2)} AS revenue
+    FROM orders o
+    JOIN customer c ON o.o_custkey = c.c_custkey
+    JOIN nation n ON c.c_nationkey = n.n_nationkey
+    GROUP BY n.n_name
+    ORDER BY n_name
+    """
+
+
+@register(
+    "delta_join_view_maintenance",
+    _dv_oracle(),
+    doc="incremental view maintenance of a join-aggregate by the "
+    "four-quadrant delta algebra (the DBSP / materialized-view "
+    "identity): with orders = A0 ∪ ΔA and customer = B0 ∪ ΔB "
+    "(disjoint key-residue splits standing in for 'rows that arrived "
+    "since the last refresh'), A ⋈ B decomposes EXACTLY into "
+    "(A0⋈B0) ∪ (ΔA⋈B0) ∪ (A0⋈ΔB) ∪ (ΔA⋈ΔB), so the per-nation "
+    "revenue view is maintained by UNIONing four grouped PARTIAL "
+    "aggregates — the materialized bootstrap state plus three delta "
+    "joins — and combining them in one tiny final aggregate (25 "
+    "nation rows). Partial sums ride DECIMAL(20,2) so the four-way "
+    "reassociation is exact and the value hash cannot drift. The "
+    "oracle is the monolithic full recompute: hash equality IS the "
+    "IVM-correctness proof. 100 TB shape: the big-big shuffle join "
+    "happens ONCE at bootstrap (A0⋈B0, the materialized state); "
+    "steady-state refresh cost is |Δ|-sized — ΔA broadcasts against "
+    "B0, ΔB broadcasts against A0 (a map-only base scan prunable by "
+    "partition/bloom on the delta's key set), ΔA⋈ΔB is tiny-tiny — "
+    "versus re-joining the full base every refresh. The same partial-"
+    "aggregate state generalizes to any abelian aggregate (sum/count/"
+    "min-lattice), which is why the final combine is exact.",
+)
+def delta_join_view_maintenance(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    orders = t(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_totalprice"
+    )
+    cust = t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    nation = t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+
+    a0 = orders.filter(F.col("o_orderkey") % _DV_ORD_MOD != 0)
+    da = orders.filter(F.col("o_orderkey") % _DV_ORD_MOD == 0)
+    b0 = cust.filter(F.col("c_custkey") % _DV_CUST_MOD != 0)
+    db = cust.filter(F.col("c_custkey") % _DV_CUST_MOD == 0)
+
+    def partial(o: DataFrame, c: DataFrame, bcast: str) -> DataFrame:
+        """Grouped partial state (n, exact decimal sum) per nation for
+        one quadrant; ``bcast`` marks the genuinely small side —
+        quadrants carrying a delta broadcast it, the bootstrap
+        quadrant shuffles (its one-time cost is the point)."""
+        if bcast == "orders":
+            j = F.broadcast(o).join(c, o["o_custkey"] == c["c_custkey"])
+        elif bcast == "customer":
+            j = o.join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
+        else:
+            j = o.join(c, o["o_custkey"] == c["c_custkey"])
+        return (
+            j.join(
+                F.broadcast(nation),
+                F.col("c_nationkey") == F.col("n_nationkey"),
+            )
+            .groupBy("n_name")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.col("o_totalprice").cast("decimal(20,2)")).alias(
+                    "s"
+                ),
+            )
+        )
+
+    state = (
+        partial(a0, b0, "none")  # bootstrap: the one big-big join
+        .unionByName(partial(da, b0, "orders"))  # ΔA ⋈ B0
+        .unionByName(partial(a0, db, "customer"))  # A0 ⋈ ΔB
+        .unionByName(partial(da, db, "customer"))  # ΔA ⋈ ΔB
+    )
+    return (
+        state.groupBy("n_name")
+        .agg(
+            F.sum("n").cast("long").alias("n_orders"),
+            F.round(F.sum("s"), 2).cast("double").alias("revenue"),
+        )
+        .orderBy("n_name")
+    )
+
+
+# --------------------------------------------------------------------
+# tv_distance_source_drift
+# --------------------------------------------------------------------
+
+_TV_BUCKET = 200  # n_chars per histogram bucket
+_TV_DROP_MOD = 31  # snapshot edit: doc_id % 31 == 0 removed
+_TV_GROW_MOD = 7  # snapshot edit: doc_id % 7 == 0 grows by 150 chars
+_TV_GROW = 150
+# alert when TV > 0.05 = 1/20, tested exactly: num/(2nm) > 1/20
+# <=> 10*num > n*m (cross-multiplied integers, no float boundary)
+_TV_ALERT_NUM, _TV_ALERT_DEN = 1, 20
+
+
+def _tv_oracle() -> str:
+    return f"""
+    WITH old_h AS (
+      SELECT source, n_chars // {_TV_BUCKET} AS bucket, COUNT(*) AS a
+      FROM documents GROUP BY 1, 2
+    ),
+    new_h AS (
+      SELECT source,
+             (CASE WHEN doc_id % {_TV_GROW_MOD} = 0
+                   THEN n_chars + {_TV_GROW} ELSE n_chars END)
+               // {_TV_BUCKET} AS bucket,
+             COUNT(*) AS b
+      FROM documents WHERE doc_id % {_TV_DROP_MOD} <> 0 GROUP BY 1, 2
+    ),
+    joined AS (
+      SELECT COALESCE(o.source, nw.source) AS source,
+             COALESCE(o.bucket, nw.bucket) AS bucket,
+             COALESCE(o.a, 0) AS a, COALESCE(nw.b, 0) AS b
+      FROM old_h o FULL OUTER JOIN new_h nw
+        ON o.source = nw.source AND o.bucket = nw.bucket
+    ),
+    tot AS (
+      SELECT source, SUM(a) AS n, SUM(b) AS m,
+             CAST(COUNT(*) AS BIGINT) AS n_buckets
+      FROM joined GROUP BY source
+    ),
+    num AS (
+      SELECT j.source, SUM(ABS(j.a * t.m - j.b * t.n)) AS num
+      FROM joined j JOIN tot t USING (source)
+      GROUP BY j.source
+    )
+    SELECT t.source,
+           CAST(t.n AS BIGINT) AS n_old,
+           CAST(t.m AS BIGINT) AS n_new,
+           t.n_buckets,
+           {sql_round_div('num.num', '2 * t.n * t.m')} AS tv_distance,
+           ({_TV_ALERT_DEN} * num.num
+             > {_TV_ALERT_NUM} * 2 * t.n * t.m) AS drift_alert
+    FROM tot t JOIN num USING (source)
+    ORDER BY t.source
+    """
+
+
+def tv_bucket_histogram(docs: DataFrame) -> DataFrame:
+    """Both snapshots' length-bucket histograms from ONE corpus pass
+    (plan-quality fold; was two histogram aggregates + a
+    full_outer join = two corpus scans): every doc emits its
+    old-snapshot bucket and, unless dropped, its new-snapshot bucket
+    via a 2-element explode, and a single (source, bucket) hash
+    aggregate builds BOTH histogram columns. Buckets present in only
+    one snapshot come out with a=0 or b=0 — exactly the coalesced
+    full_outer rows of the previous shape. At 100 TB this halves the
+    corpus reads and the corpus-side shuffle is one partial-aggregated
+    histogram instead of two. ``docs`` needs (doc_id, source,
+    n_chars); shared with tools/stress_check.py's ``tv_drift`` stage
+    so the stress evidence always measures the shipping fold."""
+    tagged = docs.select(
+        "source",
+        F.explode(
+            F.array(
+                F.struct(
+                    F.expr(f"n_chars div {_TV_BUCKET}").alias("bucket"),
+                    F.lit(1).alias("a"),
+                    F.lit(0).alias("b"),
+                ),
+                F.struct(
+                    F.when(
+                        F.col("doc_id") % _TV_DROP_MOD != 0,
+                        F.expr(
+                            "(CASE WHEN doc_id % {m} = 0 THEN n_chars + {g} "
+                            "ELSE n_chars END) div {b}".format(
+                                m=_TV_GROW_MOD, g=_TV_GROW, b=_TV_BUCKET
+                            )
+                        ),
+                    ).alias("bucket"),
+                    F.lit(0).alias("a"),
+                    F.lit(1).alias("b"),
+                ),
+            )
+        ).alias("e"),
+    ).filter(F.col("e.bucket").isNotNull())
+    return (
+        tagged.groupBy("source", F.col("e.bucket").alias("bucket"))
+        .agg(
+            F.sum("e.a").cast("long").alias("a"),
+            F.sum("e.b").cast("long").alias("b"),
+        )
+    )
+
+
+@register(
+    "tv_distance_source_drift",
+    _tv_oracle(),
+    doc="distribution-level drift gate between two corpus snapshots, "
+    "per source: total-variation distance over length-bucket "
+    "histograms — TV = sum_i |a_i*m - b_i*n| / (2*n*m), the "
+    "common-denominator form that keeps EVERY quantity an exact "
+    "integer (counts and cross-products only; ONE rounding at the "
+    "very end through the shared decimal half-up route, and the 5% "
+    "alert is the exact cross-multiplied comparison 20*num > 2*n*m — "
+    "no float boundary anywhere, so the flag can never disagree "
+    "across engines on a tie). The synthetic new snapshot (house "
+    "planting idiom: every 31st doc dropped, every 7th doc grown by "
+    "150 chars) moves real mass between buckets. Complements "
+    "qc_profile_drift's scalar profile (a snapshot can keep count/"
+    "mean/min/max while its SHAPE collapses — exactly what TV "
+    "catches). 100 TB shape: when both periods derive from ONE table "
+    "(this query's semantics, and the common time-sliced monitor "
+    "case) a SINGLE corpus pass emits each row's per-snapshot bucket "
+    "tags and one hash aggregate with map-side combine builds both "
+    "histogram columns (histogram state bounded by sources x "
+    "buckets, not rows); everything after the histogram is "
+    "model-sized. With two physically separate snapshot tables the "
+    "per-table histogram aggregate + outer join is the inherent "
+    "2-scan variant — either way, persist each snapshot's histogram "
+    "and successive drift checks never rescan history.",
+)
+def tv_distance_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # everything downstream of the one-pass histogram (see
+    # tv_bucket_histogram) is bucket-domain bounded
+    docs = t(spark, sf_dir, "documents").select(
+        "doc_id", "source", "n_chars"
+    )
+    joined = tv_bucket_histogram(docs)
+    # the histogram frame is model-sized from here down: one aggregate
+    # folds the per-source totals AND the ordered (a, b) list, and the
+    # TV numerator is an order-independent integer fold over that list
+    per_source = joined.groupBy("source").agg(
+        F.sum("a").alias("n"),
+        F.sum("b").alias("m"),
+        F.count(F.lit(1)).cast("long").alias("n_buckets"),
+        F.collect_list(F.struct("a", "b")).alias("hist"),
+    )
+    num_col = F.aggregate(
+        "hist",
+        F.lit(0).cast("long"),
+        lambda acc, x: acc
+        + F.abs(x["a"] * F.col("m") - x["b"] * F.col("n")),
+    )
+    return (
+        per_source.select(
+            "source",
+            F.col("n").cast("long").alias("n_old"),
+            F.col("m").cast("long").alias("n_new"),
+            "n_buckets",
+            num_col.alias("num"),
+            F.col("n").alias("_n"),
+            F.col("m").alias("_m"),
+        )
+        .select(
+            "source",
+            "n_old",
+            "n_new",
+            "n_buckets",
+            round_div(F.col("num"), 2 * F.col("_n") * F.col("_m")).alias(
+                "tv_distance"
+            ),
+            (
+                F.lit(_TV_ALERT_DEN) * F.col("num")
+                > F.lit(_TV_ALERT_NUM) * 2 * F.col("_n") * F.col("_m")
+            ).alias("drift_alert"),
+        )
+        .orderBy("source")
+    )
+
+
+# --------------------------------------------------------------------
+# deletion_vector_scan
+# --------------------------------------------------------------------
+
+_DV_FILES = 8  # l_orderkey % 8 plays the data-file id
+_DV_DEL_MOD = 19  # (7*orderkey + linenumber) % 19 == 0 marks deleted
+
+
+def _dv_scan_oracle() -> str:
+    pred = f"(7 * l_orderkey + l_linenumber) % {_DV_DEL_MOD} = 0"
+    return f"""
+    SELECT l_orderkey % {_DV_FILES} AS file_id,
+           CAST(COUNT(*) AS BIGINT) AS n_total,
+           CAST(SUM(CASE WHEN {pred} THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_deleted,
+           CAST(SUM(CASE WHEN {pred} THEN 0 ELSE 1 END) AS BIGINT)
+             AS n_live,
+           {sql_round_sum(
+        f'CASE WHEN {pred} THEN 0 ELSE l_quantity END', 2, 2
+    )} AS live_qty_sum
+    FROM lineitem
+    GROUP BY 1
+    ORDER BY file_id
+    """
+
+
+@register(
+    "deletion_vector_scan",
+    _dv_scan_oracle(),
+    doc="lakehouse merge-on-read READ path (Iceberg position deletes / "
+    "Delta deletion vectors): the base rows and a SEPARATE position-"
+    "delete table (the DV — row addresses only, no data), where "
+    "reading the logical table = base ANTI JOIN deletes on the row "
+    "address, per file. The oracle computes the equivalent LOGICAL "
+    "delete directly as CASE-filtered aggregates, so the value hash "
+    "proves the DV read path reconstructs exactly the logical table — "
+    "the MoR correctness contract, the other half of the lakehouse "
+    "story from keyed_upsert / pointer_swap_time_travel's copy-on-"
+    "write. Emits the per-file audit (total / deleted / live counts, "
+    "live quantity through the exact-decimal route) a compaction "
+    "scheduler consumes to decide when DVs are worth rewriting into "
+    "data files. 100 TB shape: the DV is addresses-only (bytes per "
+    "deleted row, broadcastable by construction — deletes are a tiny "
+    "fraction of the base or you'd rewrite the file), so the read is "
+    "a map-side broadcast anti-join + one file-keyed aggregate; the "
+    "base is never rewritten, which is the entire point of MoR.",
+)
+def deletion_vector_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    base = t(spark, sf_dir, "lineitem").select(
+        "l_orderkey",
+        "l_linenumber",
+        "l_quantity",
+        (F.col("l_orderkey") % _DV_FILES).alias("file_id"),
+    )
+    addr_mod = (
+        F.lit(7) * F.col("l_orderkey") + F.col("l_linenumber")
+    ) % _DV_DEL_MOD
+    # the position-delete table: addresses only, as a real DV is
+    dv = base.filter(addr_mod == 0).select("l_orderkey", "l_linenumber")
+    live = base.join(
+        F.broadcast(dv), ["l_orderkey", "l_linenumber"], "left_anti"
+    )
+    totals = base.groupBy("file_id").agg(
+        F.count(F.lit(1)).cast("long").alias("n_total")
+    )
+    deleted = (
+        dv.select((F.col("l_orderkey") % _DV_FILES).alias("file_id"))
+        .groupBy("file_id")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_deleted"))
+    )
+    live_agg = live.groupBy("file_id").agg(
+        F.count(F.lit(1)).cast("long").alias("n_live"),
+        round_sum(F.col("l_quantity"), 2, 2).alias("live_qty_sum"),
+    )
+    return (
+        totals.join(deleted, "file_id", "left")
+        .join(live_agg, "file_id", "left")
+        .select(
+            "file_id",
+            "n_total",
+            F.coalesce("n_deleted", F.lit(0).cast("long")).alias(
+                "n_deleted"
+            ),
+            F.coalesce("n_live", F.lit(0).cast("long")).alias("n_live"),
+            F.coalesce("live_qty_sum", F.lit(0.0)).alias("live_qty_sum"),
+        )
+        .orderBy("file_id")
+    )
+
+
+# --------------------------------------------------------------------
+# user_erasure_cascade
+# --------------------------------------------------------------------
+
+_ER_MOD = 7  # user_id % 7 == 0 requested erasure
+
+
+def _erasure_oracle() -> str:
+    pred = f"user_id % {_ER_MOD} = 0"
+    return f"""
+    WITH kept AS (SELECT * FROM events WHERE NOT ({pred})),
+    t_events AS (
+      SELECT 'events' AS table_name,
+             (SELECT COUNT(*) FROM events) AS n_before,
+             (SELECT COUNT(*) FROM kept) AS n_after
+    ),
+    agg_before AS (
+      SELECT user_id, event_type FROM events GROUP BY 1, 2
+    ),
+    agg_after AS (
+      SELECT user_id, event_type FROM kept GROUP BY 1, 2
+    ),
+    t_agg AS (
+      SELECT 'user_event_type_agg' AS table_name,
+             (SELECT COUNT(*) FROM agg_before) AS n_before,
+             (SELECT COUNT(*) FROM agg_after) AS n_after
+    ),
+    t_users AS (
+      SELECT 'user_profile' AS table_name,
+             (SELECT COUNT(DISTINCT user_id) FROM events) AS n_before,
+             (SELECT COUNT(DISTINCT user_id) FROM kept) AS n_after
+    ),
+    uni AS (
+      SELECT * FROM t_events
+      UNION ALL SELECT * FROM t_agg
+      UNION ALL SELECT * FROM t_users
+    )
+    SELECT table_name,
+           CAST(n_before AS BIGINT) AS n_before,
+           CAST(n_after AS BIGINT) AS n_after,
+           CAST(n_before - n_after AS BIGINT) AS n_removed,
+           0 AS n_orphans_after
+    FROM uni
+    ORDER BY table_name
+    """
+
+
+@register(
+    "user_erasure_cascade",
+    _erasure_oracle(),
+    doc="GDPR/CCPA right-to-be-forgotten cascade audit: erasing a "
+    "user set (user_id % 7 = 0 plays the deletion-request list) must "
+    "cascade from the fact table through every derived "
+    "materialization, and the compliance artifact is the per-table "
+    "before/after/removed accounting with a zero-orphan check — "
+    "n_orphans_after counts erased-user rows SURVIVING in each "
+    "rebuilt table and is computed (not asserted): an engine that "
+    "fails to propagate the delete into a derived table ships a "
+    "nonzero orphan count and flunks the value hash. Three "
+    "materializations audited: the raw fact, the (user, event_type) "
+    "rollup, and the distinct-user profile. Completes the privacy "
+    "family (k_anonymity_check, l_diversity_check, text_pii_*) with "
+    "the DELETE path those audits gate. 100 TB shape: the erasure "
+    "list is a broadcast anti-join in production (here a residue "
+    "predicate, same plan class); each audit row is one aggregate "
+    "with map-side combine; derived-table rebuilds are the same "
+    "aggregates a refresh would run anyway — the audit costs one "
+    "extra count per table.",
+)
+def user_erasure_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = t(spark, sf_dir, "events").select("user_id", "event_type")
+    erased = F.col("user_id") % _ER_MOD == 0
+    kept = ev.filter(~erased)
+
+    def audit(name: str, before: DataFrame, after: DataFrame) -> DataFrame:
+        nb = before.agg(F.count(F.lit(1)).cast("long").alias("n_before"))
+        na_ = after.agg(
+            F.count(F.lit(1)).cast("long").alias("n_after"),
+            F.sum((F.col("user_id") % _ER_MOD == 0).cast("int"))
+            .cast("long")
+            .alias("n_orph"),
+        )
+        return nb.crossJoin(na_).select(
+            F.lit(name).alias("table_name"),
+            "n_before",
+            "n_after",
+            (F.col("n_before") - F.col("n_after")).alias("n_removed"),
+            F.coalesce("n_orph", F.lit(0).cast("long")).alias(
+                "n_orphans_after"
+            ),
+        )
+
+    agg_before = ev.select("user_id", "event_type").distinct()
+    agg_after = kept.select("user_id", "event_type").distinct()
+    users_before = ev.select("user_id").distinct()
+    users_after = kept.select("user_id").distinct()
+    out = (
+        audit("events", ev, kept)
+        .unionByName(audit("user_event_type_agg", agg_before, agg_after))
+        .unionByName(audit("user_profile", users_before, users_after))
+    )
+    # the oracle types the orphan column as a plain int literal 0 —
+    # cast ours down so the schema classes agree
+    return out.select(
+        "table_name",
+        "n_before",
+        "n_after",
+        "n_removed",
+        F.col("n_orphans_after").cast("int").alias("n_orphans_after"),
+    ).orderBy("table_name")

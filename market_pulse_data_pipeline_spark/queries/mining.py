@@ -13,6 +13,21 @@ self-join or a single aggregate — no all-pairs blowups:
   group, so exact duplicates can never straddle splits — the check the
   naive per-doc split provably fails (witnessed side by side);
 - unpivot: Spark's native melt is one Expand pass, not N self-unions.
+
+- ``group_kfold_leakage_audit`` — train/validation SPLIT HYGIENE:
+  random per-document fold assignment leaks — a near-duplicate pair
+  split across folds trains on the validation answer — and the fix
+  every ML pipeline uses is GROUP k-fold (all documents of a group
+  share a fold; Scikit-learn's GroupKFold). This audits BOTH
+  strategies on the same corpus: per-document md5 folding vs
+  per-source group folding, with planted duplicate twins
+  (same-source twins, which group-folding provably never splits, and
+  cross-source twins, the honest residual group-folding cannot fix).
+  Per (strategy, fold): document counts; per strategy: total dup
+  pairs, cross-fold (leaked) pairs, leak ratio — all in the compared
+  bytes, so the hash pins the assignment rule AND the leakage
+  algebra. Composes the dedup family (pair discovery) with the split
+  step that consumes it.
 """
 
 from __future__ import annotations
@@ -20,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from market_pulse_data_pipeline_spark.functions.dedup import portable_hash60
 from market_pulse_data_pipeline_spark.queries.common import (
     register,
     round_div,
@@ -762,4 +778,209 @@ def skyline_pareto_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return skyline_2d(pts, "price_c", "p_size").select(
         "p_partkey", "price_c", "p_size"
+    )
+
+
+# --------------------------------------------------------------------
+# group_kfold_leakage_audit
+# --------------------------------------------------------------------
+
+_KF_K = 5  # folds
+_KF_SAME_MOD = 17  # same-source twin plants
+_KF_CROSS_MOD = 23  # cross-source twin plants (the residual leak)
+_KF_TWIN_OFFSET = 4_000_000_000
+
+
+def _kf_fold_sql(expr: str) -> str:
+    return (
+        f"(('0x' || substring(md5({expr}), 1, 15))::BIGINT % {_KF_K})"
+    )
+
+
+def _kf_oracle() -> str:
+    fold_doc = _kf_fold_sql("CAST(doc_id AS VARCHAR) || ':fold'")
+    fold_grp = _kf_fold_sql("source || ':fold'")
+    return f"""
+    WITH corpus AS (
+      SELECT doc_id, source, text FROM documents
+      UNION ALL
+      SELECT doc_id + {_KF_TWIN_OFFSET}, source, text
+      FROM documents WHERE doc_id % {_KF_SAME_MOD} = 0
+      UNION ALL
+      SELECT doc_id + {_KF_TWIN_OFFSET},
+             'src_' || CAST((doc_id * 7 + 3) % 20 AS VARCHAR), text
+      FROM documents
+      WHERE doc_id % {_KF_CROSS_MOD} = 0
+        AND doc_id % {_KF_SAME_MOD} <> 0
+    ),
+    folded AS (
+      SELECT doc_id, source, md5(text) AS digest,
+             {fold_doc} AS f_doc, {fold_grp} AS f_grp
+      FROM corpus
+    ),
+    assign AS (
+      SELECT 'by_doc' AS strategy, doc_id, digest, f_doc AS fold
+      FROM folded
+      UNION ALL
+      SELECT 'by_group', doc_id, digest, f_grp FROM folded
+    ),
+    pairs AS (
+      SELECT a.strategy,
+             CAST(COUNT(*) AS BIGINT) AS n_pairs,
+             CAST(SUM(CASE WHEN a.fold <> b.fold THEN 1 ELSE 0 END)
+                  AS BIGINT) AS n_leaked
+      FROM assign a
+      JOIN assign b
+        ON b.strategy = a.strategy AND b.digest = a.digest
+       AND a.doc_id < b.doc_id
+      GROUP BY 1
+    ),
+    per_fold AS (
+      SELECT strategy, fold, CAST(COUNT(*) AS BIGINT) AS n_docs
+      FROM assign GROUP BY 1, 2
+    )
+    SELECT f.strategy, f.fold, f.n_docs, p.n_pairs, p.n_leaked,
+           {sql_round_div('p.n_leaked * 1.0', 'p.n_pairs')} AS leak_ratio
+    FROM per_fold f JOIN pairs p USING (strategy)
+    ORDER BY strategy, fold
+    """
+
+
+@register(
+    "group_kfold_leakage_audit",
+    _kf_oracle(),
+    doc="train/validation split hygiene — the GroupKFold audit: "
+    "per-document md5 fold assignment splits near-duplicate pairs "
+    "across folds (training on the validation answer), per-source "
+    "GROUP folding provably keeps same-source duplicates together; "
+    "this runs BOTH strategies over the same corpus and reports per "
+    "(strategy, fold) document counts plus per-strategy duplicate "
+    "pairs / cross-fold leaked pairs / leak ratio in the compared "
+    "bytes. Planted twins make the contrast non-vacuous at every SF: "
+    "same-source twins (group folding leaks ZERO of them - the pin) "
+    "and cross-source twins (the honest residual no grouping can "
+    "fix). Duplicate pairs come from a digest equi-join (the "
+    "dedup_exact discipline - hash-keyed, never all-pairs; pair "
+    "volume is bounded by true duplication). 100 TB shape: map-only "
+    "fold assignment (one md5 per doc per strategy), one "
+    "digest-keyed self-join on real duplicates only, two bounded "
+    "aggregates (folds x strategies, strategies); the audit costs "
+    "one dedup pass - run it before every training split.",
+)
+def group_kfold_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return group_kfold_leakage_audit_from(
+        t(spark, sf_dir, "documents").select("doc_id", "source", "text")
+    )
+
+
+def group_kfold_leakage_audit_from(docs: DataFrame) -> DataFrame:
+    """The full audit over a (doc_id, source, text) frame — shared
+    with tools/stress_check.py's ``kfold_audit`` stage so the stress
+    row always measures the shipping shape."""
+    same_twins = docs.filter(F.col("doc_id") % _KF_SAME_MOD == 0).select(
+        (F.col("doc_id") + _KF_TWIN_OFFSET).alias("doc_id"),
+        "source",
+        "text",
+    )
+    cross_twins = (
+        docs.filter(
+            (F.col("doc_id") % _KF_CROSS_MOD == 0)
+            & (F.col("doc_id") % _KF_SAME_MOD != 0)
+        ).select(
+            (F.col("doc_id") + _KF_TWIN_OFFSET).alias("doc_id"),
+            F.concat(
+                F.lit("src_"),
+                ((F.col("doc_id") * 7 + 3) % 20).cast("string"),
+            ).alias("source"),
+            "text",
+        )
+    )
+    corpus = docs.unionByName(same_twins).unionByName(cross_twins)
+
+    def h5(col):
+        return portable_hash60(col) % _KF_K
+
+    folded = corpus.select(
+        "doc_id",
+        "source",
+        F.md5(F.col("text").cast("binary")).alias("digest"),
+        h5(F.concat(F.col("doc_id").cast("string"), F.lit(":fold"))).alias(
+            "f_doc"
+        ),
+        h5(F.concat(F.col("source"), F.lit(":fold"))).alias("f_grp"),
+    )
+    # materialize-once discipline: folded (one md5 digest + two fold
+    # hashes per corpus row) feeds both sides of the duplicate-pair
+    # self-join AND two per-fold aggregates — without this the corpus
+    # union and digest hashing recompute per consumer.
+    folded = folded.localCheckpoint(eager=True)
+    # ONE digest self-join serves BOTH strategies: the duplicate-pair
+    # set is strategy-independent (only the fold columns differ), so
+    # joining per strategy would double the join volume for identical
+    # pairs.
+    b = folded.select(
+        F.col("doc_id").alias("doc_id_b"),
+        F.col("digest").alias("digest_b"),
+        F.col("f_doc").alias("f_doc_b"),
+        F.col("f_grp").alias("f_grp_b"),
+    )
+    pair_counts = (
+        folded.join(
+            b,
+            (F.col("digest_b") == F.col("digest"))
+            & (F.col("doc_id") < F.col("doc_id_b")),
+        )
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_pairs"),
+            F.sum((F.col("f_doc") != F.col("f_doc_b")).cast("int"))
+            .cast("long")
+            .alias("leak_doc"),
+            F.sum((F.col("f_grp") != F.col("f_grp_b")).cast("int"))
+            .cast("long")
+            .alias("leak_grp"),
+        )
+    )
+    pairs = pair_counts.select(
+        F.explode(
+            F.array(
+                F.struct(
+                    F.lit("by_doc").alias("strategy"),
+                    F.col("n_pairs"),
+                    F.col("leak_doc").alias("n_leaked"),
+                ),
+                F.struct(
+                    F.lit("by_group").alias("strategy"),
+                    F.col("n_pairs"),
+                    F.col("leak_grp").alias("n_leaked"),
+                ),
+            )
+        ).alias("s")
+    ).select("s.strategy", "s.n_pairs", "s.n_leaked")
+    per_fold = (
+        folded.select(
+            F.lit("by_doc").alias("strategy"),
+            F.col("f_doc").alias("fold"),
+        )
+        .unionByName(
+            folded.select(
+                F.lit("by_group").alias("strategy"),
+                F.col("f_grp").alias("fold"),
+            )
+        )
+        .groupBy("strategy", "fold")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
+    )
+    return (
+        per_fold.join(F.broadcast(pairs), "strategy")
+        .select(
+            "strategy",
+            "fold",
+            "n_docs",
+            "n_pairs",
+            "n_leaked",
+            round_div(F.col("n_leaked") * 1.0, F.col("n_pairs")).alias(
+                "leak_ratio"
+            ),
+        )
+        .orderBy("strategy", "fold")
     )

@@ -13,6 +13,14 @@ repeated-squaring power iteration with exact matrix-level deflation
 (pca_oracle_sql) replays the whole eigensolve as chained CTEs; the
 float eigh variant (pca_project) remains the general library API and
 is still numpy-pinned by tests/test_clustering.py.
+
+- ``kcenter_diversity_sample`` — greedy k-center (farthest-point
+  traversal, the classic 2-approximation; Gonzalez 1985): pick the
+  seed, then repeatedly the point farthest from everything selected.
+  The diversity-selection primitive of data curation (coreset /
+  "maximize coverage of embedding space" subset picks), dual to the
+  similarity-driven dedup family: dedup removes the closest pairs,
+  k-center KEEPS the farthest spread.
 """
 
 from __future__ import annotations
@@ -21,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from market_pulse_data_pipeline_spark.functions.clustering import (
+    SNAP_SCALE,
     kmeans_oracle_sql,
     kmeans_snapped,
     pca_oracle_sql,
@@ -659,3 +668,135 @@ def linear_regression_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(msef))
         .select("w0", "w1", "n_rows", "mse_initial", "mse_final")
     )
+
+
+# --------------------------------------------------------------------
+# kcenter_diversity_sample
+# --------------------------------------------------------------------
+
+_KC_K = 8  # selected subset size
+_KC_DIM = 64
+
+
+def _kcenter_oracle() -> str:
+    """Unrolled greedy farthest-point traversal: round t recomputes every
+    point's exact-integer squared distance to the whole selected set
+    (join on position), takes the min per point, and picks the max-min
+    row (d2 DESC, vec_id ASC tiebreak) — the same 1-row-per-round
+    argmax the Spark loop collects. All int64-exact: per-term
+    (qa-qb)^2 <= 4e12, 64-dim sums <= 2.6e14.
+
+    Every chained CTE is AS MATERIALIZED: s{t} is referenced three
+    times downstream (d, the NOT-IN, and s{t+1}), so without the
+    hint DuckDB inlines the whole prefix per reference and the
+    7-round chain re-evaluates ~3^rounds times (measured: the
+    inlined form did not finish in 100 s at sf0.001 where the
+    materialized form is sub-second)."""
+    parts = [
+        f"""
+    WITH p AS MATERIALIZED (
+      SELECT vec_id,
+             list_transform(embedding,
+               x -> CAST(round(CAST(x AS DOUBLE) * {SNAP_SCALE}) AS BIGINT))
+               AS v
+      FROM embeddings
+    ),
+    pu AS MATERIALIZED (
+      SELECT vec_id, i AS pos, v[i + 1] AS qv
+      FROM p CROSS JOIN (SELECT UNNEST(range(0, {_KC_DIM})) AS i) idx
+    ),
+    s1 AS MATERIALIZED (SELECT MIN(vec_id) AS vec_id FROM p)"""
+    ]
+    for t_ in range(2, _KC_K + 1):
+        parts.append(
+            """,
+    d%(t)d AS MATERIALIZED (
+      SELECT a.vec_id, SUM((a.qv - b.qv) * (a.qv - b.qv)) AS d2
+      FROM pu a
+      JOIN s%(prev)d s ON true
+      JOIN pu b ON b.vec_id = s.vec_id AND b.pos = a.pos
+      GROUP BY a.vec_id, s.vec_id
+    ),
+    m%(t)d AS MATERIALIZED (SELECT vec_id, MIN(d2) AS mind FROM d%(t)d GROUP BY vec_id),
+    pick%(t)d AS MATERIALIZED (
+      SELECT vec_id, mind FROM m%(t)d
+      WHERE vec_id NOT IN (SELECT vec_id FROM s%(prev)d)
+      ORDER BY mind DESC, vec_id LIMIT 1
+    ),
+    s%(t)d AS MATERIALIZED (
+      SELECT vec_id FROM s%(prev)d
+      UNION ALL SELECT vec_id FROM pick%(t)d
+    )"""
+            % {"t": t_, "prev": t_ - 1}
+        )
+    sel = [
+        "SELECT 1 AS rank, vec_id, CAST(0 AS BIGINT) AS d2_at_pick FROM s1"
+    ]
+    for t_ in range(2, _KC_K + 1):
+        sel.append(
+            f"SELECT {t_} AS rank, vec_id, CAST(mind AS BIGINT) "
+            f"AS d2_at_pick FROM pick{t_}"
+        )
+    parts.append(
+        "\nSELECT CAST(rank AS INTEGER) AS rank, vec_id, d2_at_pick "
+        "FROM (" + " UNION ALL ".join(sel) + ") ORDER BY rank"
+    )
+    return "".join(parts)
+
+
+@register(
+    "kcenter_diversity_sample",
+    _kcenter_oracle(),
+    doc="greedy k-center / farthest-point traversal (Gonzalez 1985, the "
+    "2-approximation): seed = min vec_id, then 7 rounds of 'farthest "
+    "point from the selected set' over exact int64 squared distances "
+    "(round(x*1e6) quantization; ties break to the lower vec_id). The "
+    "diversity-selection dual of the dedup family — emits the pick "
+    "order plus each pick's coverage distance (the decreasing radius "
+    "sequence data-curation pipelines monitor). 100 TB shape: the "
+    "selected set is k*dim ints broadcast in the scan expression, each "
+    "round is one map-only pass + a 1-row TakeOrdered collect — the "
+    "BPE/GD bounded-driver-loop discipline applied to subset "
+    "selection. Full value-hash oracle via unrolled per-round CTEs.",
+)
+def kcenter_diversity_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = t(spark, sf_dir, "embeddings")
+    src = emb.select(
+        "vec_id",
+        F.transform(
+            "embedding",
+            lambda x: F.round(x.cast("double") * SNAP_SCALE).cast("long"),
+        ).alias("v"),
+    ).localCheckpoint()  # k-1 scans reuse the quantized table
+    seed = src.orderBy("vec_id").limit(1).collect()[0]
+    picks = [(1, seed["vec_id"], 0)]
+    selected = [list(seed["v"])]
+    sel_ids = [seed["vec_id"]]
+    for rank in range(2, _KC_K + 1):
+        dists = [
+            F.aggregate(
+                F.zip_with(
+                    "v",
+                    F.array(*[F.lit(int(c)) for c in cvec]),
+                    lambda x, y: (x - y) * (x - y),
+                ),
+                F.lit(0).cast("long"),
+                lambda acc, x: acc + x,
+            )
+            for cvec in selected
+        ]
+        mind = dists[0] if len(dists) == 1 else F.least(*dists)
+        row = (
+            src.filter(~F.col("vec_id").isin(sel_ids))
+            .select("vec_id", "v", mind.alias("mind"))
+            .orderBy(F.desc("mind"), F.asc("vec_id"))
+            .limit(1)
+            .collect()[0]
+        )  # bounded: 1 row per round
+        picks.append((rank, row["vec_id"], int(row["mind"])))
+        selected.append(list(row["v"]))
+        sel_ids.append(row["vec_id"])
+    spark_out = spark.createDataFrame(
+        picks, "rank int, vec_id long, d2_at_pick long"
+    )
+    return spark_out.orderBy("rank")

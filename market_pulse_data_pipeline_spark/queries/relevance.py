@@ -16,6 +16,17 @@ one (doc_id, term) hash-aggregate, df via one (term) hash-aggregate over
 the already-tiny tf relation, then a term-keyed join — the inverted-
 index build is two shuffles total, both on bounded-cardinality keys.
 BM25's per-query-term df row is a 1-row broadcast.
+
+- ``trigram_substring_index`` — substring search the scale-safe way
+  (the pg_trgm pattern): a LIKE '%pattern%' scan has no pushable
+  predicate and reads 100 TB per query, while a character-trigram
+  inverted index turns it into an equi-join — candidates are docs
+  containing ALL of the pattern's trigrams, then only candidates are
+  verified with the real contains(). The chosen patterns include
+  CROSS-WORD substrings ('table sc', 'k order') that no token-level
+  index (tfidf/bm25) can answer — exactly the queries that force the
+  trigram index. Per-pattern candidate vs verified counts expose the
+  index's filtering precision in the compared bytes.
 """
 
 from __future__ import annotations
@@ -542,4 +553,148 @@ def rrf_hybrid_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.col("rrf_scaled").desc(), "doc_id")
         .limit(_TOP_DOCS)
+    )
+
+
+# --------------------------------------------------------------------
+# trigram_substring_index
+# --------------------------------------------------------------------
+
+# fixed literal patterns; 'table sc' and 'k order' cross word
+# boundaries (no token-level index can answer them), 'data' is a
+# within-word substring of several vocabulary words
+_TG_PATTERNS = ["sort merge", "table sc", "k order", "data"]
+
+
+def _trigrams(s: str) -> list[str]:
+    return [s[i : i + 3] for i in range(len(s) - 2)]
+
+
+def _tg_oracle() -> str:
+    pat_rows = ", ".join(f"('{p}')" for p in _TG_PATTERNS)
+    all_tris = sorted({g for p in _TG_PATTERNS for g in _trigrams(p)})
+    tri_list = ", ".join("'" + g.replace("'", "''") + "'" for g in all_tris)
+    return f"""
+    WITH pats(pattern) AS (VALUES {pat_rows}),
+    ptri AS (
+      SELECT DISTINCT pattern,
+             UNNEST(list_transform(range(1, length(pattern) - 1),
+                                   i -> substring(pattern, i, 3))) AS tri
+      FROM pats
+    ),
+    pn AS (
+      SELECT pattern, COUNT(*) AS n_tri FROM ptri GROUP BY pattern
+    ),
+    dtri AS (
+      SELECT DISTINCT doc_id, tri
+      FROM (
+        SELECT doc_id,
+               UNNEST(list_transform(range(1, length(text) - 1),
+                                     i -> substring(text, i, 3))) AS tri
+        FROM documents
+      )
+      WHERE tri IN ({tri_list})
+    ),
+    cand AS (
+      SELECT p.pattern, d.doc_id
+      FROM ptri p JOIN dtri d USING (tri)
+      GROUP BY p.pattern, d.doc_id
+      HAVING COUNT(*) = (SELECT n_tri FROM pn WHERE pn.pattern = p.pattern)
+    ),
+    verified AS (
+      SELECT c.pattern, c.doc_id
+      FROM cand c JOIN documents doc USING (doc_id)
+      WHERE contains(doc.text, c.pattern)
+    )
+    SELECT p.pattern,
+           CAST(COALESCE(c.n, 0) AS BIGINT) AS n_candidates,
+           CAST(COALESCE(v.n, 0) AS BIGINT) AS n_verified
+    FROM pats p
+    LEFT JOIN (SELECT pattern, COUNT(*) AS n FROM cand GROUP BY 1) c
+      USING (pattern)
+    LEFT JOIN (SELECT pattern, COUNT(*) AS n FROM verified GROUP BY 1) v
+      USING (pattern)
+    ORDER BY p.pattern
+    """
+
+
+@register(
+    "trigram_substring_index",
+    _tg_oracle(),
+    doc="substring search through a character-trigram inverted index "
+    "(the pg_trgm pattern) — LIKE '%pattern%' has no pushable "
+    "predicate and rescans the corpus per query, while the trigram "
+    "index turns containment into an equi-join: candidates = docs "
+    "whose trigram set covers ALL of the pattern's trigrams "
+    "(inverted-index probe + per-doc coverage count), then ONLY "
+    "candidates pay the real contains() verification. Two of the "
+    "patterns cross word boundaries ('table sc', 'k order') — "
+    "queries no token-level index (tfidf/bm25/vocab) can answer, "
+    "exactly what forces character-granular indexing. Per-pattern "
+    "candidate vs verified counts put the index's filtering "
+    "precision in the compared bytes (candidates >= verified is the "
+    "no-false-negative contract, pytest-pinned). 100 TB shape: the "
+    "doc-side trigram stream is filtered MAP-SIDE to the query "
+    "trigram set (a tiny literal — in production the full index is "
+    "materialized once and this is its probe path), so the shuffle "
+    "carries only (candidate-trigram, doc) pairs; verification "
+    "touches candidates, not the corpus.",
+)
+def trigram_substring_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from market_pulse_data_pipeline_spark.functions.dedup import (  # noqa: PLC0415
+        fan_out,
+    )
+
+    docs = fan_out(t(spark, sf_dir, "documents").select("doc_id", "text"))
+    pat_tris = {p: _trigrams(p) for p in _TG_PATTERNS}
+    all_tris = sorted({g for ts_ in pat_tris.values() for g in ts_})
+    ptri = spark.createDataFrame(
+        [(p, g) for p, ts_ in pat_tris.items() for g in set(ts_)],
+        ["pattern", "tri"],
+    )
+    pn = {p: len(set(ts_)) for p, ts_ in pat_tris.items()}
+    tri_expr = F.transform(
+        F.sequence(F.lit(1), F.length("text") - 2),
+        lambda i: F.substring(F.col("text"), i, F.lit(3)),
+    )
+    dtri = (
+        docs.select("doc_id", F.explode(tri_expr).alias("tri"))
+        .filter(F.col("tri").isin(all_tris))
+        .distinct()
+    )
+    n_tri_col = F.coalesce(
+        *[
+            F.when(F.col("pattern") == p, F.lit(n))
+            for p, n in pn.items()
+        ]
+    )
+    cand = (
+        dtri.join(F.broadcast(ptri), "tri")
+        .groupBy("pattern", "doc_id")
+        .agg(F.count(F.lit(1)).alias("n_cov"))
+        .filter(F.col("n_cov") == n_tri_col)
+        .select("pattern", "doc_id")
+    )
+    verified = cand.join(
+        t(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
+    ).filter(F.expr("contains(text, pattern)"))
+    pats = spark.createDataFrame(
+        [(p,) for p in _TG_PATTERNS], ["pattern"]
+    )
+    c_agg = cand.groupBy("pattern").agg(
+        F.count(F.lit(1)).cast("long").alias("n_c")
+    )
+    v_agg = verified.groupBy("pattern").agg(
+        F.count(F.lit(1)).cast("long").alias("n_v")
+    )
+    z = F.lit(0).cast("long")
+    return (
+        pats.join(c_agg, "pattern", "left")
+        .join(v_agg, "pattern", "left")
+        .select(
+            "pattern",
+            F.coalesce("n_c", z).alias("n_candidates"),
+            F.coalesce("n_v", z).alias("n_verified"),
+        )
+        .orderBy("pattern")
     )

@@ -22,10 +22,8 @@ detector's output is a deterministic, judgeable set.
 
 from __future__ import annotations
 
-import atexit
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,6 +38,7 @@ from market_pulse_data_pipeline_spark.functions.similarity import (
     lsh_ann_topk,
 )
 from market_pulse_data_pipeline_spark.queries.common import (
+    SCRATCH_ROOT,
     register,
     sql_round_div,
     t,
@@ -495,15 +494,7 @@ def dedup_cluster_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_clusters(pairs.select("doc_a", "doc_b"))
 
 
-# Per-process scratch root: the oracle SQL (registered below as an
-# f-string) and the Spark function run in the same process, so a
-# pid-suffixed path keeps them consistent while letting concurrent
-# harness runs coexist. Content is fully deterministic; only the
-# location varies. Best-effort cleanup at interpreter exit.
-_E2E_ROOT = os.path.join(
-    tempfile.gettempdir(), f"mp_e2e_oracle_{os.getpid()}"
-)
-atexit.register(lambda: shutil.rmtree(_E2E_ROOT, ignore_errors=True))
+_E2E_ROOT = os.path.join(SCRATCH_ROOT, "e2e_oracle")
 
 @register(
     "market_pulse_end_to_end",

@@ -5,19 +5,41 @@ zip_with + aggregate (JVM-side, sequential fold → deterministic and
 identical to the oracle's in-order list_sum). The LSH-bucketed scale
 path lives in functions.similarity (engine-specific hashing → rows-only
 check).
+
+- ``colbert_maxsim_topk`` — late-interaction retrieval (ColBERT,
+  Khattab & Zaharia, SIGIR 2020): a query is a BAG of token vectors
+  and a document scores sum-over-query-tokens of the max dot product
+  against any of its token vectors. The multi-vector complement of
+  the single-vector ANN family; exact int64 arithmetic because the
+  fixture embeddings are unit-norm, so the quantized dot IS the
+  scaled cosine.
+- ``cross_label_margin_mining`` — margin-based nearest-neighbor
+  mining (the Artetxe & Schwenk 2019 ratio-margin criterion behind
+  LASER/CCMatrix bitext mining): a candidate pair is accepted not on
+  raw cosine but when the best match BEATS ITS OWN RUNNERS-UP by a
+  margin — ratio = best / mean(next-k), accept when > 6/5. Labels
+  play the two sides (query label vs every other label). Dots ride
+  the repo-wide round(x*1e6) int64 quantization, so best, the
+  runner-up sum, and the accept flag (5*k*best > 6*sum_runnerup) are
+  EXACT integers; only the reported ratio rounds, through the shared
+  decimal route. Completes the similarity family (plain top-k,
+  recall@k, ANN) with the mining-quality criterion production uses to
+  harvest pairs, not just rank them.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from market_pulse_data_pipeline_spark.functions.clustering import SNAP_SCALE
 from market_pulse_data_pipeline_spark.queries.common import (
     register,
     round_div,
     sql_round_div,
     t,
 )
+from market_pulse_data_pipeline_spark.queries.dedup import _SD_DIM
 
 _QUERY_VEC_ID = 0
 _TOP_K = 10
@@ -411,3 +433,281 @@ def contrastive_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame
         .filter(F.col("rn") <= 5)
         .select("anchor_id", "neg_id", "neg_label")
     )
+
+
+# --------------------------------------------------------------------
+# colbert_maxsim_topk
+# --------------------------------------------------------------------
+
+_MS_GROUP = 8  # token vectors per pseudo-document; power of two so the
+assert _MS_GROUP & (_MS_GROUP - 1) == 0  # shiftright grouping is exact
+_MS_TOPK = 10
+
+
+@register(
+    "colbert_maxsim_topk",
+    f"""
+    WITH p AS MATERIALIZED (
+      SELECT vec_id,
+             CAST(vec_id // {_MS_GROUP} AS BIGINT) AS grp,
+             list_transform(embedding,
+               x -> CAST(round(CAST(x AS DOUBLE) * {SNAP_SCALE}) AS BIGINT))
+               AS v
+      FROM embeddings
+    ),
+    pu AS MATERIALIZED (
+      SELECT vec_id, grp, i AS pos, v[i + 1] AS qv
+      FROM p CROSS JOIN (SELECT UNNEST(range(0, {_SD_DIM})) AS i) idx
+    ),
+    dots AS (
+      SELECT q.vec_id AS q_tok, d.grp AS doc_id,
+             d.vec_id AS d_tok, SUM(q.qv * d.qv) AS dot
+      FROM pu q JOIN pu d ON d.pos = q.pos AND d.grp > 0
+      WHERE q.grp = 0
+      GROUP BY q.vec_id, d.grp, d.vec_id
+    ),
+    best AS (
+      SELECT q_tok, doc_id, MAX(dot) AS best_dot
+      FROM dots GROUP BY q_tok, doc_id
+    )
+    SELECT doc_id, CAST(SUM(best_dot) AS BIGINT) AS maxsim
+    FROM best
+    GROUP BY doc_id
+    ORDER BY maxsim DESC, doc_id
+    LIMIT {_MS_TOPK}
+    """,
+    bench=True,  # headline shape: late-interaction re-rank
+    doc="ColBERT MaxSim late-interaction retrieval (Khattab & Zaharia, "
+    "SIGIR 2020): vec_ids group into 8-token pseudo-documents "
+    "(vec_id DIV 8; group 0 is the query), a document's score is "
+    "sum-over-query-tokens of the max dot product against any of its "
+    "token vectors, top-10 docs returned. Dots are exact int64 on "
+    "round(x*1e6)-quantized vectors — the fixture embeddings are "
+    "unit-norm, so the integer dot IS the scaled cosine and the whole "
+    "score is portable integer arithmetic. 100 TB shape: the query's "
+    "8x64 ints broadcast into a map-side zip_with over doc tokens "
+    "(no shuffle to score), one hash aggregate per (doc, q_tok) max "
+    "and one per doc sum, TakeOrderedAndProject for the top-k; a real "
+    "deployment bounds the candidate doc set with the existing "
+    "ANN/IVF primitives first — MaxSim is the re-rank stage.",
+)
+def colbert_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = t(spark, sf_dir, "embeddings").select(
+        "vec_id",
+        # arithmetic shift = exact int64 division by 2^3 for every
+        # NON-NEGATIVE long, including ids past 2^53 where the old
+        # double-division truncation lost exactness. The engines agree
+        # only on non-negatives (shiftright floors, DuckDB's //
+        # truncates toward zero, so a negative vec_id would diverge) —
+        # tests/test_dedup_queries.py pins min(vec_id) >= 0.
+        F.shiftright(F.col("vec_id"), _MS_GROUP.bit_length() - 1).alias("grp"),
+        F.transform(
+            "embedding",
+            lambda x: F.round(x.cast("double") * SNAP_SCALE).cast("long"),
+        ).alias("v"),
+    )
+    # the query: group 0's token vectors — bounded (8 x dim ints)
+    q_rows = emb.filter(F.col("grp") == 0).select("vec_id", "v").collect()
+    docs = emb.filter(F.col("grp") > 0).select(
+        F.col("grp").alias("doc_id"), F.col("v").alias("dv")
+    )
+    dot = lambda qvec: F.aggregate(  # noqa: E731
+        F.zip_with(
+            "dv",
+            F.array(*[F.lit(int(c)) for c in qvec]),
+            lambda x, y: x * y,
+        ),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+    scored = docs.select(
+        "doc_id",
+        *[
+            dot(r["v"]).alias(f"q{r['vec_id']}")
+            for r in sorted(q_rows, key=lambda r: r["vec_id"])
+        ],
+    )
+    per_tok_max = scored.groupBy("doc_id").agg(
+        *[
+            F.max(f"q{r['vec_id']}").alias(f"m{r['vec_id']}")
+            for r in sorted(q_rows, key=lambda r: r["vec_id"])
+        ]
+    )
+    maxsim = None
+    for r in sorted(q_rows, key=lambda r: r["vec_id"]):
+        c = F.col(f"m{r['vec_id']}")
+        maxsim = c if maxsim is None else maxsim + c
+    return (
+        per_tok_max.select("doc_id", maxsim.alias("maxsim"))
+        .orderBy(F.desc("maxsim"), F.asc("doc_id"))
+        .limit(_MS_TOPK)
+    )
+
+
+# --------------------------------------------------------------------
+# cross_label_margin_mining
+# --------------------------------------------------------------------
+
+_MM_SCALE = 1_000_000  # the repo-wide round(x*1e6) int64 quantization
+_MM_Q_MOD = 41  # vec_id % 41 == 0 plays the query side
+_MM_K = 4  # runner-up pool size (ranks 2..k+1)
+_MM_NUM = 6  # accept when best / mean(runners-up) > 6/5
+_MM_DEN = 5
+
+
+def _mm_oracle() -> str:
+    return f"""
+    WITH e AS (
+      SELECT vec_id, label,
+             list_transform(CAST(embedding AS DOUBLE[]),
+               x -> CAST(round(x * {_MM_SCALE}) AS BIGINT)) AS v
+      FROM embeddings
+    ),
+    q AS (SELECT * FROM e WHERE vec_id % {_MM_Q_MOD} = 0),
+    pairs AS (
+      SELECT q.vec_id AS qid, q.label AS q_label,
+             c.vec_id AS cid, c.label AS c_label,
+             list_sum(list_transform(
+               range(1, len(q.v) + 1),
+               i -> q.v[i] * c.v[i])) AS dot
+      FROM q JOIN e c ON c.label <> q.label
+    ),
+    pos AS (SELECT * FROM pairs WHERE dot > 0),
+    ranked AS (
+      SELECT *,
+             ROW_NUMBER() OVER (PARTITION BY qid
+                                ORDER BY dot DESC, cid) AS rn
+      FROM pos
+    ),
+    agg AS (
+      SELECT qid, q_label,
+             MAX(CASE WHEN rn = 1 THEN cid END) AS best_vec_id,
+             MAX(CASE WHEN rn = 1 THEN c_label END) AS best_label,
+             MAX(CASE WHEN rn = 1 THEN dot END) AS dot_best,
+             SUM(CASE WHEN rn BETWEEN 2 AND {_MM_K + 1} THEN dot END)
+               AS sum_runnerup,
+             COUNT(*) AS n_pos
+      FROM ranked GROUP BY 1, 2
+    )
+    SELECT qid, q_label, best_vec_id, best_label,
+           CAST(dot_best AS BIGINT) AS dot_best,
+           CAST(sum_runnerup AS BIGINT) AS sum_runnerup,
+           {sql_round_div(f'{_MM_K} * dot_best', 'sum_runnerup')}
+             AS margin_ratio,
+           {_MM_DEN} * {_MM_K} * dot_best
+             > {_MM_NUM} * sum_runnerup AS accepted
+    FROM agg
+    WHERE n_pos >= {_MM_K + 1}
+    ORDER BY qid
+    """
+
+
+def quantize_embeddings(emb: DataFrame) -> DataFrame:
+    """(vec_id, label, v) with the repo-wide round(x*1e6) int64
+    quantization applied to the embedding column."""
+    qv = F.transform(
+        F.col("embedding").cast("array<double>"),
+        lambda x: F.round(x * _MM_SCALE).cast("long"),
+    )
+    return emb.select("vec_id", "label", qv.alias("v"))
+
+
+def margin_mine(e: DataFrame, q: DataFrame) -> DataFrame:
+    """The margin-mining core over a quantized candidate frame ``e``
+    (vec_id, label, v) and a query frame ``q`` (qid, q_label, qvec) —
+    shared with tools/stress_check.py's ``margin_mining`` stage (which
+    keeps the query side FIXED while the candidate corpus multiplies,
+    the decontamination asymmetry) so the stress row always measures
+    the shipping shape."""
+    pairs = e.join(
+        F.broadcast(q), F.col("label") != F.col("q_label")
+    ).select(
+        "qid",
+        "q_label",
+        F.col("vec_id").alias("cid"),
+        F.col("label").alias("c_label"),
+        F.aggregate(
+            F.zip_with("qvec", "v", lambda a, b: a * b),
+            F.lit(0).cast("long"),
+            lambda acc, x: acc + x,
+        ).alias("dot"),
+    )
+    pos = pairs.filter(F.col("dot") > 0)
+    w = Window.partitionBy("qid").orderBy(F.col("dot").desc(), "cid")
+    ranked = pos.withColumn("rn", F.row_number().over(w)).filter(
+        F.col("rn") <= _MM_K + 1
+    )
+    # n_pos must count the FULL positive pool (the >= k+1 gate), not
+    # the top-(k+1) slice — aggregate it separately on the same keys
+    npos = pos.groupBy("qid").agg(F.count(F.lit(1)).alias("n_pos"))
+    agg = (
+        ranked.groupBy("qid", "q_label")
+        .agg(
+            F.max(F.when(F.col("rn") == 1, F.col("cid"))).alias(
+                "best_vec_id"
+            ),
+            F.max(F.when(F.col("rn") == 1, F.col("c_label"))).alias(
+                "best_label"
+            ),
+            F.max(F.when(F.col("rn") == 1, F.col("dot"))).alias(
+                "dot_best"
+            ),
+            F.sum(
+                F.when(
+                    (F.col("rn") >= 2) & (F.col("rn") <= _MM_K + 1),
+                    F.col("dot"),
+                )
+            ).alias("sum_runnerup"),
+        )
+        .join(npos, "qid")
+        .filter(F.col("n_pos") >= _MM_K + 1)
+    )
+    return agg.select(
+        "qid",
+        "q_label",
+        "best_vec_id",
+        "best_label",
+        F.col("dot_best").cast("long").alias("dot_best"),
+        F.col("sum_runnerup").cast("long").alias("sum_runnerup"),
+        round_div(
+            F.lit(_MM_K) * F.col("dot_best"), F.col("sum_runnerup")
+        ).alias("margin_ratio"),
+        (
+            F.lit(_MM_DEN) * _MM_K * F.col("dot_best")
+            > F.lit(_MM_NUM) * F.col("sum_runnerup")
+        ).alias("accepted"),
+    ).orderBy("qid")
+
+
+@register(
+    "cross_label_margin_mining",
+    _mm_oracle(),
+    doc="margin-based nearest-neighbor mining (Artetxe & Schwenk "
+    "2019, the LASER/CCMatrix bitext-mining criterion): a candidate "
+    "pair is harvested not on raw similarity but when the best "
+    "cross-label match beats ITS OWN runners-up by a ratio margin — "
+    "best / mean(next-4) > 6/5 — which suppresses hub vectors that "
+    "are 'close to everything' and would flood a plain top-k "
+    "harvest. Query side = every 41st vector, candidates = every "
+    "other label; dots ride the repo-wide round(x*1e6) int64 "
+    "quantization so best, the runner-up sum, and the accept flag "
+    "(5*4*best > 6*sum) are EXACT integers (positive-dot pool only, "
+    "so the ratio semantics are well-defined); only the reported "
+    "ratio rounds, through the shared decimal route. The fixture "
+    "accepts some and rejects most queries at every checked scale "
+    "factor — both classes pinned non-empty. 100 TB shape: the "
+    "query side is bounded (broadcastable), the candidate pass is "
+    "one map-side join + a query-PARTITIONED top-(k+1) window; past "
+    "~10k queries pre-block candidates with ann_lsh/ann_ivf exactly "
+    "as the esem/similarity docs prescribe.",
+)
+def cross_label_margin_mining(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    e = quantize_embeddings(t(spark, sf_dir, "embeddings"))
+    q = e.filter(F.col("vec_id") % _MM_Q_MOD == 0).select(
+        F.col("vec_id").alias("qid"),
+        F.col("label").alias("q_label"),
+        F.col("v").alias("qvec"),
+    )
+    return margin_mine(e, q)

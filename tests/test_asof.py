@@ -1,11 +1,20 @@
 """As-of join and bucketed range join — edge semantics on handcrafted
 frames (the registered queries carry the DuckDB oracle at scale)."""
 
+import duckdb
 from pyspark.sql import functions as F
 
 from market_pulse_data_pipeline_spark.operators.asof import (
     asof_join,
     range_join_buckets,
+)
+from market_pulse_data_pipeline_spark.queries import QUERY_REGISTRY
+from market_pulse_data_pipeline_spark.queries.asof import (
+    _GR_AX,
+    _GR_AY,
+    _GR_BY,
+    _GR_MOD,
+    _GR_R,
 )
 
 
@@ -79,3 +88,39 @@ def test_range_join_buckets_matches_predicate_join(spark):
     assert got == want and got  # identical and non-empty
     # empty interval [50, 50) matches nothing
     assert not any(i == 4 for _, i in got)
+
+
+# --------------------------------------------------------------------
+# grid_radius_join
+# --------------------------------------------------------------------
+
+
+def test_grid_join_exactly_matches_brute_force(spark, sf_dir):
+    """The cover property (cell size == R => 3x3 neighborhood covers
+    the radius) means NO false negatives; the build side's single
+    true cell means NO duplicates. Brute force is the ground truth."""
+    got = [
+        (r.id_a, r.id_b, r.dist_sq)
+        for r in QUERY_REGISTRY["grid_radius_join"].spark(spark, sf_dir).collect()
+    ]
+    ids = [
+        r[0]
+        for r in duckdb.sql(
+            f"SELECT doc_id FROM "
+            f"read_parquet('{sf_dir}/documents.parquet')"
+        ).fetchall()
+    ]
+    pts = {
+        i: ((i * _GR_AX) % _GR_MOD, (i * _GR_AY + _GR_BY) % _GR_MOD)
+        for i in ids
+    }
+    brute = []
+    items = sorted(pts.items())
+    for i, (a, (xa, ya)) in enumerate(items):
+        for b, (xb, yb) in items[i + 1 :]:
+            d2 = (xa - xb) ** 2 + (ya - yb) ** 2
+            if d2 <= _GR_R * _GR_R:
+                brute.append((a, b, d2))
+    assert sorted(got) == sorted(brute)
+    assert len(got) == len(set((a, b) for a, b, _ in got))  # exactly once
+    assert brute, "fixture yields no pairs within R — witness is vacuous"

@@ -1,7 +1,10 @@
 """functions/bpe.py vs a pure-Python replay of the same greedy BPE
 merge semantics, plus the overlap edge case."""
 
+import duckdb
+
 from market_pulse_data_pipeline_spark.functions.bpe import bpe_train
+from market_pulse_data_pipeline_spark.queries import QUERY_REGISTRY
 from market_pulse_data_pipeline_spark.sources.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -113,3 +116,93 @@ def test_bpe_oracle_overlap_and_early_stop():
     )
     assert _oracle_rows(con, 2) == []
     con.close()
+
+
+def test_bpe_encode_conserves_words(spark, sf_dir):
+    rows = QUERY_REGISTRY["bpe_encode_corpus"].spark(spark, sf_dir).collect()
+    # every fixture doc encodes
+    raw = dict(
+        duckdb.connect().execute(
+            "SELECT doc_id, len(string_split(text, ' ')) FROM "
+            f"read_parquet('{sf_dir}/documents.parquet')"
+        ).fetchall()
+    )
+    assert {r["doc_id"] for r in rows} == set(raw)
+    merged_any = False
+    for r in rows:
+        # merges concatenate but never create or drop words
+        assert r["n_words"] == raw[r["doc_id"]]
+        assert 1 <= r["n_tokens"] <= r["n_words"]
+        assert 0 <= r["n_merged"] <= r["n_tokens"]
+        # a doc shrank iff it contains at least one merged symbol
+        assert (r["n_tokens"] < r["n_words"]) == (r["n_merged"] > 0)
+        assert 0.0 < r["tokens_per_word"] <= 1.0
+        merged_any = merged_any or r["n_merged"] > 0
+    # the learned vocab actually fires on the corpus it was trained on
+    assert merged_any
+
+
+def test_bpe_encode_matches_python_replay(spark, sf_dir):
+    """Greedy left-to-right merge replay in pure Python, applied in
+    learned rank order, must reproduce every per-doc fingerprint."""
+    import hashlib
+
+    from market_pulse_data_pipeline_spark.functions.bpe import bpe_train
+    from market_pulse_data_pipeline_spark.queries.common import t
+
+    docs = t(spark, sf_dir, "documents")
+    merges = bpe_train(docs, n_merges=8)
+    rows = QUERY_REGISTRY["bpe_encode_corpus"].spark(spark, sf_dir).collect()
+    texts = dict(
+        duckdb.connect().execute(
+            "SELECT doc_id, text FROM "
+            f"read_parquet('{sf_dir}/documents.parquet')"
+        ).fetchall()
+    )
+
+    def apply(ws, left, right):
+        out, i = [], 0
+        while i < len(ws):
+            if i + 1 < len(ws) and ws[i] == left and ws[i + 1] == right:
+                out.append(ws[i] + " " + ws[i + 1])
+                i += 2
+            else:
+                out.append(ws[i])
+                i += 1
+        return out
+
+    for r in rows:
+        ws = texts[r["doc_id"]].split(" ")
+        for left, right, _ in merges:
+            ws = apply(ws, left, right)
+        assert r["n_tokens"] == len(ws), r["doc_id"]
+        fp = hashlib.md5("|".join(ws).encode()).hexdigest()
+        assert r["encoding_hash"] == fp, r["doc_id"]
+
+
+def test_fertility_is_the_encode_rolled_up(spark, sf_dir):
+    """The per-lang rollup must be exactly the per-doc encode grouped
+    by each doc's language — two independent paths through the same
+    learned vocab."""
+    enc = QUERY_REGISTRY["bpe_encode_corpus"].spark(spark, sf_dir).collect()
+    fert = (
+        QUERY_REGISTRY["bpe_fertility_by_lang"].spark(spark, sf_dir).collect()
+    )
+    langs = dict(
+        duckdb.connect().execute(
+            "SELECT doc_id, lang FROM "
+            f"read_parquet('{sf_dir}/documents.parquet')"
+        ).fetchall()
+    )
+    agg: dict[str, list] = {}
+    for r in enc:
+        a = agg.setdefault(langs[r["doc_id"]], [0, 0, 0, 0])
+        a[0] += 1
+        a[1] += r["n_tokens"]
+        a[2] += r["n_words"]
+        a[3] += r["n_merged"]
+    assert {r["lang"] for r in fert} == set(agg)
+    for r in fert:
+        a = agg[r["lang"]]
+        assert [r["n_docs"], r["n_tokens"], r["n_words"], r["n_merged"]] == a
+        assert 0.0 < r["tokens_per_word"] <= 1.0

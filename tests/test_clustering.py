@@ -9,13 +9,20 @@ tolerance (partial-sum order differs between engines).
 
 from __future__ import annotations
 
+import duckdb
 import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from market_pulse_data_pipeline_spark.functions.clustering import (
+    SNAP_SCALE,
     kmeans,
     pca_components,
     pca_project,
+    quantize_vec_py,
 )
 from market_pulse_data_pipeline_spark.sources.tables import load_table
 
@@ -228,3 +235,66 @@ def test_pq_snapped_fused_equals_sequential_subspace_fits(spark, emb):
             sl, k, iters, id_col="vec_id", vec_col="subvec"
         )
         assert (fused[j] == cent).all(), f"subspace {j} diverged"
+
+
+_PARITY_CON = duckdb.connect()
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    xs=st.lists(
+        st.one_of(
+            st.floats(
+                min_value=-10.0,
+                max_value=10.0,
+                allow_nan=False,
+                allow_infinity=False,
+            ),
+            # exact decimal-half boundary values: k.5 / SCALE —
+            # the HALF_UP-vs-float-path divergence candidates
+            st.integers(min_value=-2 * SNAP_SCALE, max_value=2 * SNAP_SCALE).map(
+                lambda k: (k + 0.5) / SNAP_SCALE
+            ),
+        ),
+        min_size=1,
+        max_size=40,
+    )
+)
+def test_quantize_vec_py_matches_duckdb_round(xs):
+    # every new oracle (LSH sigs, IVF probe, PQ/ADC tables) hinges on
+    # the driver-side Decimal HALF_UP quantization agreeing with the
+    # oracle-side round(x * scale) — fuzz that pair directly, one
+    # vectorized query per example, including exact halfway points
+    # where rounding modes diverge
+    got = quantize_vec_py(xs)
+    exp = [
+        r[0]
+        for r in _PARITY_CON.execute(
+            f"SELECT CAST(round(CAST(t.x AS DOUBLE) * {SNAP_SCALE}) AS BIGINT)"
+            " FROM (SELECT UNNEST(?) AS x, UNNEST(range(len(?))) AS i) t"
+            " ORDER BY t.i",
+            [xs, xs],
+        ).fetchall()
+    ]
+    assert got == exp, f"first divergence: {next((x, g, e) for x, g, e in zip(xs, got, exp) if g != e)}"
+
+
+def test_quantize_vec_py_matches_spark_round(spark):
+    # third leg of the parity triangle: executor-side F.round
+    # quantization on an adversarial batch (exact decimal halves,
+    # negatives, subnormal-ish magnitudes) equals the driver-side
+    # Decimal HALF_UP twin
+    vals = (
+        [(k + 0.5) / SNAP_SCALE for k in range(-5, 6)]
+        + [0.0, -0.0, 1e-9, -1e-9, 3.1415926535, -2.7182818284]
+        + [(k + 0.5) / SNAP_SCALE for k in (999_999, -999_999, 123_456)]
+    )
+    df = spark.createDataFrame([Row(embedding=vals)])
+    got = quantize_vec_py(vals)
+    row = df.select(
+        F.transform(
+            "embedding",
+            lambda x: F.round(x.cast("double") * SNAP_SCALE).cast("long"),
+        ).alias("q")
+    ).head()
+    assert list(row.q) == got

@@ -8,8 +8,12 @@ that fail loudly on drift. Regenerate with
 
 import pathlib
 import re
+import sys
 
 from market_pulse_data_pipeline_spark.queries import all_queries
+
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
+from tools.plan_audit import ALLOWED_ANTIPATTERNS  # noqa: E402
 
 DOC = pathlib.Path(__file__).resolve().parents[1] / "PLAN_AUDIT_FULL.md"
 
@@ -36,7 +40,6 @@ def test_plan_audit_full_claims_zero_antipatterns():
     # plan shows 0 row-Python and 0 cartesian. Parse the table instead
     # of trusting prose.
     text = DOC.read_text()
-    allowed = {"join_strategy_independence", "udtf_split_sentences"}
     bad = []
     for m in re.finditer(
         r"^\| `([^`]+)` \| \d+ \| \d+ \| \d+ \| \d+ \| \d+ \| (\d+) \| (\d+) \|",
@@ -44,7 +47,7 @@ def test_plan_audit_full_claims_zero_antipatterns():
         flags=re.M,
     ):
         name, row_py, cartesian = m.group(1), int(m.group(2)), int(m.group(3))
-        if name in allowed:
+        if name in ALLOWED_ANTIPATTERNS:
             continue
         if row_py or cartesian:
             bad.append(name)

@@ -26,8 +26,18 @@ def test_registry_doc_count_matches_live_registry():
 
 def test_registry_doc_lists_every_query():
     text = DOC.read_text()
-    missing = [n for n in all_queries() if f"`{n}`" not in text]
+    q = all_queries()
+    missing = [n for n in q if f"`{n}`" not in text]
     assert missing == [], (
         f"REGISTRY.md missing rows for {missing}: "
+        "run tools/gen_registry_doc.py"
+    )
+    # the bench column pins the headline set: every row's bench mark
+    # must equal the live flag
+    rows = re.findall(r"^\| `([^`]+)` \| [^|]* \| (✓?) \|", text, flags=re.M)
+    assert len(rows) == len(q)
+    drift = [n for n, mark in rows if (mark == "✓") != q[n].bench]
+    assert drift == [], (
+        f"REGISTRY.md bench marks differ from the registry for {drift}: "
         "run tools/gen_registry_doc.py"
     )

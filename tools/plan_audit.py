@@ -12,7 +12,8 @@ metrics from `.explain("formatted")` text:
   PushedFilters — predicate pushdown actually reaching storage.
 - python_eval: any ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas
   (legit Arrow-batched Python) vs BatchEvalPython (row-at-a-time —
-  forbidden; tests/test_plan_invariants.py enforces its absence).
+  forbidden; tests/test_queries_oracle.py enforces its absence on
+  every registered query).
 - cartesian: CartesianProduct presence (forbidden).
 - win_funnel: global-window funnels — a `Window` whose required sort
   rides an `Exchange SinglePartition` (the Window -> Sort -> Exchange
@@ -40,8 +41,8 @@ allowlisted (reported, never failed):
   CartesianProduct — the query exists to prove strategy-independence
   of results, so the node's presence is the point.
 - udtf_split_sentences: the Python UDTF API witness (BatchEvalPython
-  by construction); its doc and the bench-plan gate pin that hot
-  paths never use the shape.
+  by construction); its doc and the registry-wide plan gate pin
+  that hot paths never use the shape.
 
 Writes PLAN_AUDIT.md as a table, one row per bench query. Streaming
 and write-side queries that cannot be planned statically are skipped

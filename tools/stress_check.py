@@ -714,13 +714,12 @@ def main() -> int:
         ),
     )
 
-    # SemDeDup pair stage (queries/r7_staging.py::semdedup_prune,
-    # staged for round 7): the scale discipline under test is that k
-    # grows with the corpus so CLUSTER SIZE stays fixed (~50 vectors)
-    # and the within-cluster quadratic stays flat per doc — the paper's
-    # own deployment argument. Driver state is k×dim int64 (1200×64 at
-    # 30×), assignment is the Arrow int64 matmul, and the pair join
-    # shuffles once on cluster id.
+    # SemDeDup pair stage (queries/dedup.py::semdedup_prune): the scale
+    # discipline under test is that k grows with the corpus so CLUSTER
+    # SIZE stays fixed (~50 vectors) and the within-cluster quadratic
+    # stays flat per doc — the paper's own deployment argument. Driver
+    # state is k×dim int64 (1200×64 at 30×), assignment is the Arrow
+    # int64 matmul, and the pair join shuffles once on cluster id.
     if only is None or {"semdedup_pairs", "semdedup_popbound"} & only:
         from market_pulse_data_pipeline_spark.functions.clustering import (
             kmeans_snapped_fit,
@@ -814,8 +813,8 @@ def main() -> int:
                 f"max_pop={pop_row['max_pop']}"
             )
 
-    # n-gram novelty (queries/r7_staging.py::ngram_novelty_profile,
-    # staged for round 7): two shuffles both keyed on the shingle —
+    # n-gram novelty (queries/dedup.py::ngram_novelty_profile): two
+    # shuffles both keyed on the shingle —
     # min-doc aggregate + join-back. Per-shingle state is one bigint,
     # so the stage must scale linearly in total shingle count.
     if only is None or "ngram_novelty" in only:
@@ -853,14 +852,14 @@ def main() -> int:
         )
 
     # Incremental batch-vs-corpus near-dup
-    # (queries/r7_staging.py::incremental_near_dup_lsh, staged for
-    # round 7): corpus grows with mult, the incoming batch stays
-    # FIXED-size (one day's crawl) — the claim under test is that
-    # candidate cost tracks per-bucket collisions, never
-    # |corpus| x |batch|, so a growing corpus costs the batch join
-    # only its own band lookups plus corpus signature build.
+    # (queries/dedup.py::incremental_near_dup_lsh): corpus grows with
+    # mult, the incoming batch stays FIXED-size (one day's crawl) — the
+    # claim under test is that candidate cost tracks per-bucket
+    # collisions, never |corpus| x |batch|, so a growing corpus costs
+    # the batch join only its own band lookups plus corpus signature
+    # build.
     if only is None or "incremental_neardup" in only:
-        from market_pulse_data_pipeline_spark.queries.r7_staging import (
+        from market_pulse_data_pipeline_spark.queries.dedup import (
             _INC_BANDS,
             _INC_PERM,
         )
@@ -950,8 +949,8 @@ def main() -> int:
             .distinct(),
         )
 
-    # ColBERT MaxSim re-rank (queries/r7_staging.py::colbert_maxsim_topk,
-    # staged for round 7): the scored pass is map-only — 8 broadcast
+    # ColBERT MaxSim re-rank (queries/similarity.py::colbert_maxsim_topk):
+    # the scored pass is map-only — 8 broadcast
     # query tokens folded per doc token row — plus two hash aggregates
     # (per-(doc, q_tok) max, per-doc sum), so it must scale linearly in
     # corpus token count. TakeOrdered keeps the top-k driver-bounded.
@@ -1090,11 +1089,10 @@ def main() -> int:
             ),
         )
 
-    # CCNet perplexity buckets (queries/r8_staging.py, registered in
-    # round 8): the corpus-touching work is the driver-green bigram
-    # fluency shape (token-keyed count aggregates + co-partitioned
-    # joins); the tercile NTILE is one window partitioned by lang.
-    # Must scale linearly in token count.
+    # CCNet perplexity buckets (queries/quality.py): the corpus-touching
+    # work is the driver-green bigram fluency shape (token-keyed count
+    # aggregates + co-partitioned joins); the tercile NTILE is one
+    # window partitioned by lang. Must scale linearly in token count.
     if only is None or "ccnet_buckets" in only:
         from pyspark.sql import Window as _W
 
@@ -1132,17 +1130,17 @@ def main() -> int:
             ),
         )
 
-    # Winnowing fingerprint pairs (queries/r8_staging.py, registered
-    # in round 8): fingerprint selection is map-only higher-order
-    # transforms; the pair join is keyed on the selected fingerprint
-    # (~2/(w+1) the density of a full shingle join). Candidate pairs
-    # grow with true duplication, never quadratically in corpus size.
+    # Winnowing fingerprint pairs (queries/dedup.py): fingerprint
+    # selection is map-only higher-order transforms; the pair join is
+    # keyed on the selected fingerprint (~2/(w+1) the density of a full
+    # shingle join). Candidate pairs grow with true duplication, never
+    # quadratically in corpus size.
     if only is None or "winnow_pairs" in only:
         from market_pulse_data_pipeline_spark.functions.dedup import (
             _MERSENNE,
             portable_hash60,
         )
-        from market_pulse_data_pipeline_spark.queries.r8_staging import (
+        from market_pulse_data_pipeline_spark.queries.dedup import (
             _WN_K,
             _WN_T,
             _WN_W,
@@ -1213,22 +1211,21 @@ def main() -> int:
             .filter(F.col("n_shared") >= _WN_T),
         )
 
-    # Eval-set decontamination (queries/r8_staging.py, round-8
-    # addition): the eval 13-gram set must collapse to a DISTINCT
-    # int64 set small enough to broadcast; the corpus side is a
-    # map-only gram scan + broadcast semijoin + one doc-keyed count.
-    # The eval set here grows WITH the corpus (doc_id % 53 of the
-    # multiplied docs), so the recorded gramset size charts the
-    # approach to the broadcast threshold: ~8 B/gram against the
-    # default 10 MB autoBroadcastJoinThreshold crosses at ~1.3M
-    # distinct grams, where bloom_filter_prejoin's sketch is the
-    # documented fallback (queries/r8_staging.py doc).
+    # Eval-set decontamination (queries/quality.py): the eval 13-gram
+    # set must collapse to a DISTINCT int64 set small enough to
+    # broadcast; the corpus side is a map-only gram scan + broadcast
+    # semijoin + one doc-keyed count. The eval set here grows WITH the
+    # corpus (doc_id % 53 of the multiplied docs), so the recorded
+    # gramset size charts the approach to the broadcast threshold: ~8
+    # B/gram against the default 10 MB autoBroadcastJoinThreshold
+    # crosses at ~1.3M distinct grams, where bloom_filter_prejoin's
+    # sketch is the documented fallback (queries/quality.py doc).
     if only is None or "eval_decontam" in only:
         from market_pulse_data_pipeline_spark.functions.dedup import (
             _MERSENNE,
             portable_hash60,
         )
-        from market_pulse_data_pipeline_spark.queries.r8_staging import (
+        from market_pulse_data_pipeline_spark.queries.quality import (
             _DC_EVAL_MOD,
             _DC_N,
         )
@@ -1310,7 +1307,7 @@ def main() -> int:
     # bounded by true furniture (per-copy base-corpus repeats + the
     # banner), and the flag-join + doc-keyed reassembly stay linear.
     if only is None or "boilerplate_skew" in only:
-        from market_pulse_data_pipeline_spark.queries.r8_staging import (
+        from market_pulse_data_pipeline_spark.queries.quality import (
             _BP_BANNER,
             _BP_DF,
             _BP_W,
@@ -1414,7 +1411,7 @@ def main() -> int:
     # honest here (no cross-doc matching at all). Must scale linearly
     # in token count.
     if only is None or "gopher_filters" in only:
-        import market_pulse_data_pipeline_spark.queries.r9_staging as _r9_mod
+        import market_pulse_data_pipeline_spark.queries.quality as _gopher_mod
 
         docs_gr = mat(multiplied(
             load_table(spark, args.sf, "documents"), args.mult, ["doc_id"]
@@ -1459,7 +1456,7 @@ def main() -> int:
                 _top_run_gr(4).alias("c4"),
             ),
         )
-        _ = _r9_mod  # imported to assert the registered module loads
+        _ = _gopher_mod  # imported to assert the registered module loads
 
     # Fuzzy eval decontamination (staged round 9): eval side tiny and
     # broadcast (band entries + shingle arrays); corpus side one
@@ -1471,7 +1468,7 @@ def main() -> int:
             hashed_shingle_arrays,
             minhash_signatures_from_hashes,
         )
-        from market_pulse_data_pipeline_spark.queries.r9_staging import (
+        from market_pulse_data_pipeline_spark.queries.quality import (
             _FZ_BANDS,
             _FZ_EVAL_MOD,
             _FZ_N,
@@ -1523,7 +1520,7 @@ def main() -> int:
     # each copy's own fixture near-dup structure, so removals scale
     # linearly with the multiplier.
     if only is None or "substr_trim" in only:
-        from market_pulse_data_pipeline_spark.queries.r10_staging import (
+        from market_pulse_data_pipeline_spark.queries.dedup import (
             _TR_W,
         )
 
@@ -1648,7 +1645,7 @@ def main() -> int:
         from market_pulse_data_pipeline_spark.functions.dedup import (
             portable_hash60,
         )
-        from market_pulse_data_pipeline_spark.queries.r11_staging import (
+        from market_pulse_data_pipeline_spark.queries.dedup import (
             _PH_BITS,
             _PH_CHUNKS,
             _PH_MAX_HAMMING,
@@ -1727,12 +1724,12 @@ def main() -> int:
             .filter(F.col("hamming") <= _PH_MAX_HAMMING),
         )
 
-    # C4 line filters (staged round 10, queries/r12_staging.py):
+    # C4 line filters (queries/quality.py):
     # within-doc map-only array expressions — plain key-remapped
     # multiplication is honest (no cross-doc matching). Must scale
     # linearly in token count with ZERO exchanges.
     if only is None or "c4_lines" in only:
-        from market_pulse_data_pipeline_spark.queries.r12_staging import (
+        from market_pulse_data_pipeline_spark.queries.quality import (
             _C4_BAD_TOKEN,
             _C4_LINE_W,
             _C4_MIN_KEPT_LINES,
@@ -1797,7 +1794,7 @@ def main() -> int:
     # aggregate. Per-copy token tags make the gram vocabulary grow N×
     # (the honest shuffle volume a real N× corpus would have).
     if only is None or "hot_ngrams" in only:
-        from market_pulse_data_pipeline_spark.queries.r12_staging import (
+        from market_pulse_data_pipeline_spark.queries.quality import (
             _HB_FLAG_PCT,
             _HB_K,
             _HB_N,
@@ -1843,12 +1840,12 @@ def main() -> int:
             ),
         )
 
-    # Semantic eval decontamination (staged round 10,
-    # queries/r13_staging.py): the eval side is bounded and ships as a
-    # literal; the corpus side is one map-only explode + zip_with fold.
-    # Must scale linearly in corpus size with ZERO shuffle.
+    # Semantic eval decontamination (queries/quality.py): the eval side
+    # is bounded and ships as a literal; the corpus side is one map-only
+    # explode + zip_with fold. Must scale linearly in corpus size with
+    # ZERO shuffle.
     if only is None or "esem_screen" in only:
-        from market_pulse_data_pipeline_spark.queries.r13_staging import (
+        from market_pulse_data_pipeline_spark.queries.quality import (
             _ES_DEN,
             _ES_EVAL_MOD,
             _ES_NUM,
@@ -1935,7 +1932,7 @@ def main() -> int:
             _perm_params as _rc_perms,
             portable_hash60 as _rc_h60,
         )
-        from market_pulse_data_pipeline_spark.queries.r13_staging import (
+        from market_pulse_data_pipeline_spark.queries.dedup import (
             _RC_BANDS,
             _RC_PERM,
             _RC_ROWS,
@@ -2028,19 +2025,20 @@ def main() -> int:
             ),
         )
 
-    # DSIR importance resampling (staged round 11,
-    # queries/r14_staging.py): one B-bounded bucket aggregate with
-    # map-side combine, the 128-row ratio table broadcast back, one
-    # doc-keyed aggregate, map-only accept. Per-copy token tags grow
-    # the bigram vocabulary N× (honest shuffle volume); cost must stay
-    # linear in corpus bigrams.
+    # DSIR importance resampling (queries/corpus.py): one B-bounded
+    # bucket aggregate with map-side combine, the 128-row ratio table
+    # broadcast back, one doc-keyed aggregate, map-only accept. Per-copy
+    # token tags grow the bigram vocabulary N× (honest shuffle volume);
+    # cost must stay linear in corpus bigrams.
     if only is None or "dsir_resample" in only:
-        from market_pulse_data_pipeline_spark.queries.r14_staging import (
+        from market_pulse_data_pipeline_spark.queries.corpus import (
             _DS_B,
             _DS_CAP_MICRO,
             _DS_KEEP_DEN,
             _DS_TARGET_LANG,
             _DS_U_MAX,
+        )
+        from market_pulse_data_pipeline_spark.queries.quality import (
             _h60,
         )
 
@@ -2125,7 +2123,7 @@ def main() -> int:
     # with the multiplier (a plain self-union would square them); the
     # recorded row count is the flagged pair count.
     if only is None or "containment" in only:
-        from market_pulse_data_pipeline_spark.queries.r14_staging import (
+        from market_pulse_data_pipeline_spark.queries.dedup import (
             _CE_MAX_DF,
             _CE_MIN_PLANT_TOKS,
             _CE_MIN_SH,
@@ -2226,7 +2224,7 @@ def main() -> int:
     # disjoint so the df distribution (and output weights) is
     # preserved per copy instead of inflating df by the multiplier.
     if only is None or "softdedup" in only:
-        from market_pulse_data_pipeline_spark.queries.r15_staging import (
+        from market_pulse_data_pipeline_spark.queries.dedup import (
             _SW_MIN_PLANT_TOKS,
             _SW_N,
             _SW_OFFSET,
@@ -2279,7 +2277,7 @@ def main() -> int:
     # multiplication scales canonical-group count linearly — cost must
     # be linear in docs with a single exchange.
     if only is None or "url_canon" in only:
-        from market_pulse_data_pipeline_spark.queries.r15_staging import (
+        from market_pulse_data_pipeline_spark.queries.dedup import (
             _UC_FAM,
             _UC_FRAG,
             _UC_PORT,
@@ -2363,7 +2361,7 @@ def main() -> int:
         # the SHIPPING one-pass fold, not a copy: tv_bucket_histogram is
         # the same code path the registered query executes, so this
         # stress row always measures the operator as it ships
-        from market_pulse_data_pipeline_spark.queries.r17_staging import (
+        from market_pulse_data_pipeline_spark.queries.incremental import (
             tv_bucket_histogram,
         )
 
@@ -2447,7 +2445,7 @@ def main() -> int:
     # the nation-grouped state is CONSTANT; cost must track the
     # bootstrap join.
     if only is None or "delta_ivm" in only:
-        from market_pulse_data_pipeline_spark.queries.r16_staging import (
+        from market_pulse_data_pipeline_spark.queries.incremental import (
             _DV_CUST_MOD,
             _DV_ORD_MOD,
         )
@@ -2525,7 +2523,7 @@ def main() -> int:
     # while per-group counts grow — everything after the one corpus
     # join+aggregate is QI-domain bounded and cost must be linear.
     if only is None or "t_closeness" in only:
-        from market_pulse_data_pipeline_spark.queries.r23_staging import (
+        from market_pulse_data_pipeline_spark.queries.quality import (
             t_closeness_check_from,
         )
 
@@ -2556,7 +2554,7 @@ def main() -> int:
     # cumulative window stay bounded while the one corpus aggregate
     # scales — cost must be linear in docs.
     if only is None or "auc_per_lang" in only:
-        from market_pulse_data_pipeline_spark.queries.r23_staging import (
+        from market_pulse_data_pipeline_spark.queries.quality import (
             auc_quality_classifier_from,
         )
 
@@ -2580,7 +2578,7 @@ def main() -> int:
     # multiply, so the K-row self-join frame is constant; only the one
     # per-source token aggregate scales — cost must be linear in docs.
     if only is None or "unimax_alloc" in only:
-        from market_pulse_data_pipeline_spark.queries.r23_staging import (
+        from market_pulse_data_pipeline_spark.queries.corpus import (
             unimax_epoch_cap_allocation_from,
         )
 
@@ -2606,7 +2604,7 @@ def main() -> int:
     # does not grow each cluster 300x). Map-only flags + ONE
     # cluster-keyed window shuffle: cost must be linear in docs.
     if only is None or "pii_contagion" in only:
-        from market_pulse_data_pipeline_spark.queries.r24_staging import (
+        from market_pulse_data_pipeline_spark.queries.quality import (
             pii_cluster_contagion_from,
         )
 
@@ -2621,7 +2619,7 @@ def main() -> int:
     # corpus-independent (chunking + a (doc, line) aggregate), so the
     # token-tagged multiplication must scale linearly in docs.
     if only is None or "intra_line_dedup" in only:
-        from market_pulse_data_pipeline_spark.queries.r24_staging import (
+        from market_pulse_data_pipeline_spark.queries.quality import (
             intra_doc_line_dedup_from,
         )
 
@@ -2639,7 +2637,7 @@ def main() -> int:
     # in candidates (|Q| map-side probes per candidate + a
     # query-partitioned top-(k+1) window).
     if only is None or "margin_mining" in only:
-        from market_pulse_data_pipeline_spark.queries.r24_staging import (
+        from market_pulse_data_pipeline_spark.queries.similarity import (
             _MM_Q_MOD,
             margin_mine,
             quantize_embeddings,
@@ -2671,7 +2669,7 @@ def main() -> int:
         from market_pulse_data_pipeline_spark.functions.dedup import (
             portable_hash60,
         )
-        from market_pulse_data_pipeline_spark.queries.r16_staging import (
+        from market_pulse_data_pipeline_spark.queries.quality import (
             _BL_EVAL_MOD,
             _BL_K,
             _BL_M,
@@ -2762,7 +2760,7 @@ def main() -> int:
     # the embarrassingly-parallel WET step. Must scale linearly in
     # corpus bytes.
     if only is None or "html_extract" in only:
-        from market_pulse_data_pipeline_spark.queries.r16_staging import (
+        from market_pulse_data_pipeline_spark.queries.text import (
             _HT_COMMENT,
             _HT_COMMENT_BLOCK,
             _HT_ENTITIES,
@@ -2823,7 +2821,7 @@ def main() -> int:
     # volume is (query-relevant trigram, doc) pairs only — cost must
     # be linear in corpus characters.
     if only is None or "trigram_probe" in only:
-        from market_pulse_data_pipeline_spark.queries.r20_staging import (
+        from market_pulse_data_pipeline_spark.queries.relevance import (
             _TG_PATTERNS,
             _trigrams,
         )
@@ -2926,7 +2924,7 @@ def main() -> int:
     # the two partitioned windows must scale near-linearly (n log n
     # within ~60 (lang, class) partitions).
     if only is None or "harmonic_pack" in only:
-        from market_pulse_data_pipeline_spark.queries.r25_staging import (
+        from market_pulse_data_pipeline_spark.queries.corpus import (
             harmonic_size_class_packing_from,
         )
 
@@ -2947,7 +2945,7 @@ def main() -> int:
     # the stage exists to exercise) — the replace chain is map-only,
     # so cost must be strictly linear in corpus characters.
     if only is None or "flashtext_replace" in only:
-        from market_pulse_data_pipeline_spark.queries.r25_staging import (
+        from market_pulse_data_pipeline_spark.queries.text import (
             flashtext_multi_replace_from,
         )
 
@@ -2970,7 +2968,7 @@ def main() -> int:
     # is corpus-size-independent by construction, which is the whole
     # point of the crossover.
     if only is None or "adaptive_prefix" in only:
-        from market_pulse_data_pipeline_spark.queries.r25_staging import (
+        from market_pulse_data_pipeline_spark.queries.events import (
             _PS_DAY_US,
             prefix_sum_adaptive_switch_from,
         )
@@ -2998,7 +2996,7 @@ def main() -> int:
     # cost must be linear in corpus tokens (one bigram explode + two
     # bounded hash aggs + vocabulary-keyed joins).
     if only is None or "pmi_mine" in only:
-        from market_pulse_data_pipeline_spark.queries.r26_staging import (
+        from market_pulse_data_pipeline_spark.queries.text import (
             pmi_collocation_mining_from,
         )
 
@@ -3017,7 +3015,7 @@ def main() -> int:
     # Cohen's kappa (staged r14 for round 18): map-only labels + one
     # per-lang aggregate — 5 counters per language, strictly linear.
     if only is None or "kappa_agree" in only:
-        from market_pulse_data_pipeline_spark.queries.r26_staging import (
+        from market_pulse_data_pipeline_spark.queries.evaluation import (
             cohens_kappa_agreement_from,
         )
 
@@ -3037,7 +3035,7 @@ def main() -> int:
     # fan-out is a constant factor (the grid-join discipline), so the
     # stage must scale linearly in docs x B.
     if only is None or "bootstrap_ci" in only:
-        from market_pulse_data_pipeline_spark.queries.r26_staging import (
+        from market_pulse_data_pipeline_spark.queries.evaluation import (
             bootstrap_metric_ci_from,
         )
 
@@ -3059,7 +3057,7 @@ def main() -> int:
     # while cluster count scales; the digest self-join must stay
     # linear in true duplication, never all-pairs.
     if only is None or "kfold_audit" in only:
-        from market_pulse_data_pipeline_spark.queries.r27_staging import (
+        from market_pulse_data_pipeline_spark.queries.mining import (
             group_kfold_leakage_audit_from,
         )
 
@@ -3074,7 +3072,7 @@ def main() -> int:
     # passes + three count extractions, map-only — strictly linear in
     # corpus characters.
     if only is None or "pii_redact" in only:
-        from market_pulse_data_pipeline_spark.queries.r27_staging import (
+        from market_pulse_data_pipeline_spark.queries.quality import (
             pii_redact_spans_from,
         )
 
@@ -3095,7 +3093,7 @@ def main() -> int:
     # token) aggregate state is constant while frequencies scale;
     # cost must be linear in corpus tokens.
     if only is None or "zipf_profile" in only:
-        from market_pulse_data_pipeline_spark.queries.r27_staging import (
+        from market_pulse_data_pipeline_spark.queries.corpus import (
             zipf_token_frequency_profile_from,
         )
 
@@ -3116,7 +3114,7 @@ def main() -> int:
     # change the plant names), so the first-occurrence aggregate's
     # key domain grows — cost must stay linear in corpus tokens.
     if only is None or "heaps_curve" in only:
-        from market_pulse_data_pipeline_spark.queries.r28_staging import (
+        from market_pulse_data_pipeline_spark.queries.corpus import (
             heaps_vocab_growth_curve_from,
         )
 
@@ -3136,7 +3134,7 @@ def main() -> int:
     # multiplies, so per-pair cost must be linear (gram explodes +
     # doc-keyed joins; pair volume IS the eval set).
     if only is None or "rouge_eval" in only:
-        from market_pulse_data_pipeline_spark.queries.r28_staging import (
+        from market_pulse_data_pipeline_spark.queries.evaluation import (
             _RG_EVAL_MOD,
             rouge_n_eval_overlap_from,
         )
@@ -3157,7 +3155,7 @@ def main() -> int:
     # corpus; the (doc, start) equi-join touches true spans only —
     # cost must be linear in corpus tokens.
     if only is None or "span_f1" in only:
-        from market_pulse_data_pipeline_spark.queries.r28_staging import (
+        from market_pulse_data_pipeline_spark.queries.evaluation import (
             span_match_f1_from,
         )
 
@@ -3181,7 +3179,7 @@ def main() -> int:
     # (feed write + run 1 + restart + run 2), since the streaming work
     # is eager inside the call.
     if only is None or "dedup_recovery" in only:
-        from market_pulse_data_pipeline_spark.queries.r29_staging import (
+        from market_pulse_data_pipeline_spark.queries.streaming_evidence import (
             _DD_MOD,
             streaming_dedup_state_recovery_from,
         )
@@ -3199,10 +3197,10 @@ def main() -> int:
         t0_dd = time.time()
         out_dd = streaming_dedup_state_recovery_from(
             ev_dd,
-            # PID-scoped like _R29_ROOT (ADVICE r15): two concurrent
+            # PID-scoped like the query's scratch dir: two concurrent
             # stress runs with the same --mult must not collide on
             # checkpoint/sink state
-            f"/tmp/stress_r29_dedup_mult{args.mult}_{os.getpid()}"
+            f"/tmp/stress_recovery_dedup_mult{args.mult}_{os.getpid()}"
         )
         rows["dedup_recovery"] = out_dd.count()
         timings["dedup_recovery"] = round(time.time() - t0_dd, 2)
@@ -3217,7 +3215,7 @@ def main() -> int:
     # protocol must stay linear in events with per-batch state
     # commits. Timed around the whole crash + restart sequence.
     if only is None or "crash_recovery" in only:
-        from market_pulse_data_pipeline_spark.queries.r29_staging import (
+        from market_pulse_data_pipeline_spark.queries.streaming_evidence import (
             _SS_MOD,
             _SS_REM,
             streaming_stateful_crash_recovery_from,
@@ -3235,7 +3233,7 @@ def main() -> int:
         )
         t0_ss = time.time()
         out_ss = streaming_stateful_crash_recovery_from(
-            ev_ss, f"/tmp/stress_r29_stateful_mult{args.mult}_{os.getpid()}"
+            ev_ss, f"/tmp/stress_recovery_stateful_mult{args.mult}_{os.getpid()}"
         )
         rows["crash_recovery"] = out_ss.count()
         timings["crash_recovery"] = round(time.time() - t0_ss, 2)
@@ -3249,7 +3247,7 @@ def main() -> int:
     # int64 DP inside one map-only Arrow pass — cost must be linear in
     # PAIRS (document lengths are bounded), never corpus-quadratic.
     if only is None or "rouge_l_eval" in only:
-        from market_pulse_data_pipeline_spark.queries.r30_staging import (
+        from market_pulse_data_pipeline_spark.queries.evaluation import (
             _RL_EVAL_MOD,
             rouge_l_eval_overlap_from,
         )
